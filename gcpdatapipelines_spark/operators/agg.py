@@ -696,52 +696,44 @@ def bootstrap_mean_ci(
     value_col: str,
     replicates: int = 100,
     alpha: float = 0.05,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """(n, mean, ci_lo, ci_hi): percentile-bootstrap confidence
     interval for the mean via the DISTRIBUTED Poisson bootstrap — the
     uncertainty tool for statistics with no closed-form SE. Instead of
     materializing B resamples (a shuffle per replicate), every row
     contributes a Poisson(1)-distributed weight to each replicate,
-    computed ON THE FLY from xxhash64(id, replicate) through the
-    inverse CDF — deterministic, partitioning-independent, and the
-    whole thing is one narrow explode + one hash aggregate on B keys.
+    computed ON THE FLY from md5("id:replicate") through the inverse
+    CDF — deterministic, partitioning-independent, and the whole thing
+    is one narrow explode + one hash aggregate on B keys.
 
-    The hash-seeded weights make this rows-only territory (xxhash64
-    has no cross-engine twin); statistical sanity (coverage, width
-    scaling) is pinned in tests. Replicate means use decimal sums so
-    each replicate is itself exactly reproducible."""
+    md5 is the hash every SQL engine computes identically, so any
+    engine derives the identical weights, replicate means, and CI —
+    the whole bootstrap is oracle-reproducible; statistical sanity
+    (coverage, width scaling) is pinned in tests. Replicate means use
+    decimal sums so each replicate is itself exactly reproducible."""
     # Poisson(1) inverse CDF breakpoints: P(X<=k) for k = 0..4
     cdf = [0.36787944117144233, 0.7357588823428847, 0.9196986029286058,
            0.9810118431238462, 0.9963401531726563]
-    if hash_fn == "md5":
-        # engine-parity seed: md5("id:replicate") -> 60-bit int -> u in
-        # [0,1) — the md5-mode trick (winnowing/minhash), which makes
-        # the WHOLE bootstrap oracle-reproducible: any SQL engine
-        # derives the identical weights, replicate means, and CI
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            F.col(id_col).cast("string"),
-                            F.col("__b").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
+    # md5("id:replicate") -> 60-bit int -> u in [0,1) — the md5 trick
+    # (winnowing/minhash)
+    u = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat_ws(
+                        ":",
+                        F.col(id_col).cast("string"),
+                        F.col("__b").cast("string"),
+                    )
                 ),
-                16,
-                10,
-            ).cast("bigint")
-            % 1_000_000
-        ) / F.lit(1_000_000.0)
-    else:
-        u = (
-            F.pmod(F.xxhash64(F.col(id_col), F.col("__b")), F.lit(1_000_000))
-            / F.lit(1_000_000.0)
-        )
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % 1_000_000
+    ) / F.lit(1_000_000.0)
     # The inverse-CDF ladder compares the SAME uniform draw against 5
     # breakpoints; inlining ``u`` into every WHEN branch makes Spark
     # evaluate the md5→conv chain up to 5x per exploded row (CASE

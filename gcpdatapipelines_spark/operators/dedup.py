@@ -13,14 +13,19 @@ Python on the hot path — and each is designed for the 100 TB regime:
                 -> per-pair intersection counts. The self-join is
                 shuffle-partitioned by shingle; a document-frequency
                 cap drops stop-shingles that would create join skew.
-- MinHash+LSH:  64-perm signatures via xxhash64 (JVM-side), banded
-                into (band, band_hash) buckets; only bucket collisions
-                are candidate pairs, so the pair space never
-                materializes O(n^2). Candidates are then verified with
-                the exact Jaccard.
-- SimHash:      64-bit signature from token hashes; near-dup pairs via
-                16-bit chunk banding (Hamming<=3 guarantee by pigeonhole
-                over 4 chunks).
+- MinHash+LSH:  64-perm signatures from md5 + a universal-hash
+                permutation family (JVM-side), banded into (band,
+                bucket) keys; only bucket collisions are candidate
+                pairs, so the pair space never materializes O(n^2).
+                Candidates are then verified with the exact Jaccard.
+- SimHash:      64-bit signature from md5 token hashes, carried as two
+                32-bit words; near-dup pairs via 1-bit multi-probe or
+                16-bit chunk banding (Hamming<=3 guarantee by
+                pigeonhole).
+
+Every hash family here is md5-based, the one hash every SQL engine
+computes identically, so each pipeline hash-checks end to end against
+its DuckDB twin.
 """
 
 from __future__ import annotations
@@ -307,14 +312,14 @@ def _verify_pairs_exact_jaccard(
 # ---------------------------------------------------------------------------
 
 
-#: Mersenne prime for the md5-mode universal-hash permutation family —
+#: Mersenne prime for the md5 universal-hash permutation family —
 #: (a*x + b) % P with x, a, b < 2^31 keeps every product inside int64,
 #: so Spark and any SQL engine compute the identical chain.
 _MINHASH_P = 2147483647
 
 
 def minhash_perm_constants(num_perm: int) -> list[tuple[int, int]]:
-    """Deterministic (a_s, b_s) pairs for the md5-mode permutation
+    """Deterministic (a_s, b_s) pairs for the md5 permutation
     family — a fixed formula (Knuth multiplicative constants mod P)
     instead of an RNG so both engines can restate them as literals."""
     out = []
@@ -327,7 +332,7 @@ def minhash_perm_constants(num_perm: int) -> list[tuple[int, int]]:
 
 def minhash_md5_base(col) -> "F.Column":
     """60-bit positive integer from the first 15 hex chars of
-    md5(shingle) — the engine-shared base hash of the md5-mode
+    md5(shingle) — the engine-shared base hash of the md5
     permutation family (DuckDB: ``CAST('0x' || substr(md5(x),1,15) AS
     BIGINT)`` parses the identical value)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
@@ -340,44 +345,28 @@ def minhash_signatures(
     n: int = 5,
     num_perm: int = 64,
     shingles: DataFrame | None = None,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """num_perm-wide MinHash signature per document.
 
-    Each "permutation" is xxhash64(seed s, xxhash64(shingle)) — one
-    string hash per shingle, then num_perm re-hashes of the 8-byte
-    base (the standard derive-many-from-one permutation family; each
-    re-hash reads 16 bytes instead of the full shingle text, ~2x
-    faster at equal quality). The signature element is the min over
-    the document's shingles — num_perm JVM-side min-aggregates,
-    map-side combined, so the shuffle carries one row per document.
-
-    ``hash_fn="md5"``: the engine-parity family — base =
-    :func:`minhash_md5_base`, permutation s = (a_s * (base % P) + b_s)
-    % P (P Mersenne 2^31-1; textbook universal hashing, Broder's
-    original MinHash construction). Exists because MinHash needs a
-    CONSISTENT hash family, not a specific one, and md5 + exact int64
-    arithmetic is the family every engine reproduces bit-for-bit —
-    the winnowing md5-mode trick applied to signatures. Production
-    keeps xxhash64."""
+    Permutation family: base = :func:`minhash_md5_base` of the
+    shingle, permutation s = (a_s * (base % P) + b_s) % P (P Mersenne
+    2^31-1; textbook universal hashing, Broder's original MinHash
+    construction). MinHash needs a CONSISTENT hash family, not a
+    specific one, and md5 + exact int64 arithmetic is the family every
+    engine reproduces bit-for-bit, so the whole signature pipeline is
+    oracle-checkable. The signature element is the min over the
+    document's shingles — num_perm JVM-side min-aggregates, map-side
+    combined, so the shuffle carries one row per document."""
     sh = shingles if shingles is not None else doc_shingles(df, id_col, text_col, n)
-    if hash_fn == "md5":
-        base = (minhash_md5_base(F.col("shingle")) % _MINHASH_P).alias("__base")
-        consts = minhash_perm_constants(num_perm)
-        hashed = sh.select(id_col, base).select(
-            id_col,
-            *[
-                ((F.lit(a) * F.col("__base") + F.lit(b)) % _MINHASH_P).alias(
-                    f"h{s}"
-                )
-                for s, (a, b) in enumerate(consts)
-            ],
-        )
-    else:
-        hashed = sh.select(id_col, F.xxhash64("shingle").alias("__base")).select(
-            id_col,
-            *[F.xxhash64(F.lit(s), "__base").alias(f"h{s}") for s in range(num_perm)],
-        )
+    base = (minhash_md5_base(F.col("shingle")) % _MINHASH_P).alias("__base")
+    consts = minhash_perm_constants(num_perm)
+    hashed = sh.select(id_col, base).select(
+        id_col,
+        *[
+            ((F.lit(a) * F.col("__base") + F.lit(b)) % _MINHASH_P).alias(f"h{s}")
+            for s, (a, b) in enumerate(consts)
+        ],
+    )
     agg = hashed.groupBy(id_col).agg(
         *[F.min(f"h{s}").alias(f"h{s}") for s in range(num_perm)]
     )
@@ -394,34 +383,27 @@ def lsh_band_keys(
     num_perm: int = 64,
     bands: int = 16,
     shingles: DataFrame | None = None,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """(id, band, bucket): each document's LSH band keys — one
-    xxhash64 of every rows-per-band signature slice. Two documents are
-    LSH candidates iff they share some (band, bucket) row; the frame
-    is ~bands rows x 16 bytes per document, which makes it the right
-    STATE representation for incremental near-dup (the standing
-    corpus persists as band keys, never as text or shingles).
-
-    ``hash_fn="md5"`` (engine-parity mode): signatures come from the
-    md5 permutation family and the bucket is the slice's comma-joined
-    STRING (no bucket re-hash — equality is all a bucket key needs,
-    and the string form is what a SQL oracle restates verbatim).
-    Slightly fatter state; production keeps xxhash64."""
+    """(id, band, bucket): each document's LSH band keys — the bucket
+    is the comma-joined STRING of every rows-per-band signature slice
+    (no bucket re-hash: equality is all a bucket key needs, and the
+    string form is what a SQL oracle restates verbatim). Two documents
+    are LSH candidates iff they share some (band, bucket) row; the
+    frame is ~bands rows per document, which makes it the right STATE
+    representation for incremental near-dup (the standing corpus
+    persists as band keys, never as text or shingles)."""
     rows_per_band = num_perm // bands
-    sig = minhash_signatures(
-        df, id_col, text_col, n, num_perm, shingles=shingles, hash_fn=hash_fn
-    )
-    slice_str = lambda b: F.concat_ws(  # noqa: E731
-        ",",
-        F.transform(
-            F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band),
-            lambda x: x.cast("string"),
-        ),
-    )
-    bucket_of = (
-        slice_str if hash_fn == "md5" else (lambda b: F.xxhash64(slice_str(b)))
-    )
+    sig = minhash_signatures(df, id_col, text_col, n, num_perm, shingles=shingles)
+
+    def bucket_of(b: int):
+        return F.concat_ws(
+            ",",
+            F.transform(
+                F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band),
+                lambda x: x.cast("string"),
+            ),
+        )
+
     return sig.select(
         F.col(id_col),
         F.explode(
@@ -446,7 +428,6 @@ def incremental_neardup(
     num_perm: int = 64,
     bands: int = 16,
     shingles: DataFrame | None = None,
-    hash_fn: str = "xxhash64",
     precomputed_keys: DataFrame | None = None,
     materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -469,11 +450,9 @@ def incremental_neardup(
     order-independent (NOT sequential-arrival semantics): if a and b
     collide, min(a, b) is admitted regardless of batch ordering, so
     replaying a batch yields identical output. One shuffle on the
-    bucket key; the state anti-join is bucket-keyed too.
-
-    ``hash_fn="md5"`` switches to the engine-parity signature family
-    (lsh_band_keys), making the whole admission decision
-    oracle-checkable; production keeps xxhash64.
+    bucket key; the state anti-join is bucket-keyed too. Band keys
+    come from the md5 signature family (lsh_band_keys), so the whole
+    admission decision is oracle-checkable.
 
     ``precomputed_keys`` skips the signature pass entirely and admits
     from an existing (id, band, bucket) frame — the backfill shape
@@ -486,8 +465,7 @@ def incremental_neardup(
         precomputed_keys
         if precomputed_keys is not None
         else lsh_band_keys(
-            new_df, id_col, text_col, n, num_perm, bands,
-            shingles=shingles, hash_fn=hash_fn,
+            new_df, id_col, text_col, n, num_perm, bands, shingles=shingles
         )
     )
     if band_state is not None:
@@ -495,10 +473,9 @@ def incremental_neardup(
         keys = keys.join(seen, ["band", "bucket"], "left_anti")
     # shared: consumed FOUR times below (survivor count, survivor
     # restriction, bucket-min election, clash join) — without reuse
-    # the whole signature+banding pipeline re-executes per consumer,
-    # which the md5-mode family made 4x-expensively visible (15.4 s ->
-    # the xxhash64 tier had just been absorbing it). The frame is
-    # increment_docs x bands rows of (id, band, bucket) — tiny.
+    # the whole signature+banding pipeline re-executes per consumer
+    # (measured 15.4 s uncached). The frame is increment_docs x bands
+    # rows of (id, band, bucket) — tiny.
     #
     # materialize=True (the per-micro-batch streaming path) uses an
     # EAGER localCheckpoint instead of cache(): SQL-cache entries live
@@ -554,13 +531,12 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     shingles: DataFrame | None = None,
-    hash_fn: str = "xxhash64",
     banded: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding, verified with exact
-    n-gram Jaccard. ``hash_fn="md5"`` switches the signature family to
-    the engine-parity md5/universal-hash mode (minhash_signatures),
-    making the WHOLE candidates->verify pipeline oracle-checkable.
+    n-gram Jaccard. Signatures come from the md5/universal-hash family
+    (minhash_signatures), so the WHOLE candidates->verify pipeline is
+    oracle-checkable.
 
     bands=16 over 64 perms -> rows-per-band r=4; collision probability
     1-(1-j^4)^16 puts the S-curve midpoint near j~0.5. Only documents
@@ -574,9 +550,7 @@ def minhash_lsh_pairs(
     # ``banded`` key frame) instead
     sh = shingles if shingles is not None else doc_shingles(df, id_col, text_col, n).cache()
     if banded is None:
-        banded = lsh_band_keys(
-            df, id_col, text_col, n, num_perm, bands, shingles=sh, hash_fn=hash_fn
-        )
+        banded = lsh_band_keys(df, id_col, text_col, n, num_perm, bands, shingles=sh)
 
     # cached: the candidate PAIR list is bounded by near-dup density,
     # orders of magnitude smaller than the corpus, safe to materialize.
@@ -595,55 +569,19 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, tokens_df: DataFrame | None = None
-) -> DataFrame:
-    """64-bit SimHash per document from token hashes.
-
-    Classic scheme: each distinct token votes +1/-1 on each bit of its
-    xxhash64; the signature bit is the sign of the vote sum. Expressed
-    as 64 conditional-sum aggregates — JVM-side, map-side combined.
-    ``tokens_df``: reuse a persisted doc_tokens frame."""
-    toks = tokens_df if tokens_df is not None else doc_tokens(df, id_col, text_col)
-    tok = toks.select(id_col, F.explode(F.array_distinct(F.col("__toks"))).alias("tok"))
-    h = tok.withColumn("th", F.xxhash64("tok"))
-    votes = h.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(64)
-        ]
-    )
-    # fold sign bits back into one BIGINT (bit 63 via signed shift)
-    sig = votes.select(
-        id_col,
-        F.aggregate(
-            F.array(
-                *[
-                    F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(
-                        F.lit(0).cast("long")
-                    )
-                    for b in range(64)
-                ]
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: F.shiftleft(acc, 1).bitwiseOR(x),
-        ).alias("simhash"),
-    )
-    return sig
-
-
 def simhash_md5(
     df: DataFrame, id_col: str, text_col: str, tokens_df: DataFrame | None = None
 ) -> DataFrame:
-    """(id, sig_hi, sig_lo): 64-bit SimHash in the engine-parity md5
-    family — token bits come from two 32-bit halves of md5(token)
-    (hex chars 1-8 / 9-16 parsed as integers, the winnowing/minhash
-    md5-mode trick), and the signature is carried as two positive
-    32-bit words so every value stays inside portable BIGINT range.
-    Identical voting semantics to :func:`simhash`; only the hash
-    family differs. Production keeps xxhash64."""
+    """(id, sig_hi, sig_lo): 64-bit SimHash per document.
+
+    Classic scheme: each distinct token votes +1/-1 on each bit of its
+    hash; the signature bit is the sign of the vote sum, expressed as
+    64 conditional-sum aggregates — JVM-side, map-side combined. Token
+    bits come from two 32-bit halves of md5(token) (hex chars 1-8 /
+    9-16 parsed as integers, the winnowing/minhash md5 trick), and the
+    signature is carried as two positive 32-bit words so every value
+    stays inside portable BIGINT range — any SQL engine restates it
+    bit-for-bit. ``tokens_df``: reuse a persisted doc_tokens frame."""
     toks = tokens_df if tokens_df is not None else doc_tokens(df, id_col, text_col)
     tok = toks.select(
         id_col, F.explode(F.array_distinct(F.col("__toks"))).alias("tok")
@@ -912,75 +850,20 @@ def simhash_pairs_md5(
     tokens_df: DataFrame | None = None,
     sig_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Engine-parity twin of :func:`simhash_pairs` over
+    """Near-dup pairs with Hamming(SimHash) <= max_hamming over
     :func:`simhash_md5` two-word signatures — one instantiation of
     :func:`banded_two_word_pairs` (the media pHash detector is the
-    other; the banding contract lives in one place)."""
+    other; the banding contract lives in one place).
+
+    ``sig_df``: reuse precomputed (ideally persisted) signatures — the
+    signature pass is the expensive half (64 conditional aggregates),
+    so consumers sharing a corpus should compute it once."""
     sig = (
         sig_df
         if sig_df is not None
         else simhash_md5(df, id_col, text_col, tokens_df=tokens_df)
     )
     return banded_two_word_pairs(sig, id_col, max_hamming=max_hamming)
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    tokens_df: DataFrame | None = None,
-    sig_df: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming via 16-bit
-    chunk banding: any pair within Hamming 3 of a 64-bit hash must agree
-    on at least one of 4 disjoint 16-bit chunks (pigeonhole), so only
-    chunk-bucket collisions are candidate pairs.
-
-    ``sig_df``: reuse precomputed (ideally persisted) ``simhash``
-    signatures — the signature pass is the expensive half (64
-    conditional aggregates), so consumers sharing a corpus should
-    compute it once."""
-    sig = (
-        sig_df
-        if sig_df is not None
-        else simhash(df, id_col, text_col, tokens_df=tokens_df)
-    )
-    chunks = sig.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("piece"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cp"),
-    ).select(id_col, "simhash", "cp.chunk", "cp.piece")
-
-    left = chunks.select(
-        F.col(id_col).alias("id_1"), F.col("simhash").alias("sh_1"), "chunk", "piece"
-    )
-    right = chunks.select(
-        F.col(id_col).alias("id_2"), F.col("simhash").alias("sh_2"), "chunk", "piece"
-    )
-    cand = (
-        left.join(right, ["chunk", "piece"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2", "sh_1", "sh_2")
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_1").bitwiseXOR(F.col("sh_2"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_1", "id_2", "hamming")
-    )
 
 
 def incremental_dedup(

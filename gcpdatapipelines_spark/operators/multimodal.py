@@ -245,74 +245,6 @@ def text_to_fake_assets(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     )
 
 
-def phash_neardup_pairs(
-    assets: DataFrame,
-    max_hamming: int = 3,
-    hash_col: str | None = None,
-) -> DataFrame:
-    """(asset_a, asset_b, hamming): near-duplicate asset pairs by
-    perceptual-hash Hamming distance — the standard image/video dedup
-    step (pHash/aHash in production; here the hash is a DETERMINISTIC
-    STAND-IN, ``xxhash64(payload)``, because no codec ships in this
-    environment — swap in a real perceptual hash column via
-    ``hash_col`` and nothing else changes; only exact-payload
-    duplicates collide under the stand-in).
-
-    Same pigeonhole banding as SimHash text dedup (dedup.py): a 64-bit
-    hash splits into 4 x 16-bit chunks; Hamming <= 3 implies at least
-    one chunk matches exactly, so candidates come from equi-joins on
-    (chunk_idx, chunk_value) — never a pair scan — and are verified
-    with an exact ``bit_count(a XOR b)``. Candidate volume is bounded
-    by per-bucket collisions; a real deployment caps pathological
-    buckets the way minhash caps stop-shingles.
-    """
-    src = (
-        assets.select(F.col("asset_id"), F.col(hash_col).alias("__ph"))
-        if hash_col
-        else assets.select(
-            F.col("asset_id"), F.xxhash64(F.col("payload")).alias("__ph")
-        )
-    )
-    n_chunks = max_hamming + 1
-    width = 64 // n_chunks
-    mask = (1 << width) - 1
-    chunk = [
-        F.shiftrightunsigned(F.col("__ph"), width * i).bitwiseAND(F.lit(mask))
-        for i in range(n_chunks)
-    ]
-    bands = src.select(
-        "asset_id",
-        "__ph",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band"), chunk[i].alias("key"))
-                    for i in range(n_chunks)
-                ]
-            )
-        ).alias("b"),
-    ).select("asset_id", "__ph", "b.band", "b.key")
-    a = bands.select(
-        F.col("band"), F.col("key"), F.col("asset_id").alias("asset_a"),
-        F.col("__ph").alias("__pa"),
-    )
-    b = bands.select(
-        F.col("band"), F.col("key"), F.col("asset_id").alias("asset_b"),
-        F.col("__ph").alias("__pb"),
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("asset_a") < F.col("asset_b"))
-        .select("asset_a", "asset_b", "__pa", "__pb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("__pa").bitwiseXOR(F.col("__pb")))
-    return (
-        cand.select("asset_a", "asset_b", ham.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def phash_neardup_pairs_md5(
     sig: DataFrame,
     id_col: str = "asset_id",
@@ -326,8 +258,13 @@ def phash_neardup_pairs_md5(
     comparable even when numerically close).
 
     ``sig`` carries a two-word signature (``sig_hi``/``sig_lo``, 32
-    positive bits each — the md5-mode family every oracle-backed
-    sketch in this repo uses) plus ``kind``. Banding is the SHARED
+    positive bits each — the md5 family every oracle-backed sketch in
+    this repo uses) plus ``kind``. No codec ships in this environment,
+    so the catalog feeds a DETERMINISTIC STAND-IN (the content SimHash
+    of the asset's source text); a real pHash/aHash column split into
+    the same two words swaps in and nothing else changes. Hamming <= 3
+    implies a near-exact word match (pigeonhole), so candidates come
+    from equi-joins — never a pair scan. Banding is the SHARED
     pipeline (dedup.banded_two_word_pairs — the text SimHash detector
     is the other instantiation), with kind folded INTO the equi-join
     key: cross-kind rows never even land in the same shuffle bucket —

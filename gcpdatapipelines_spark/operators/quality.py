@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from .portable import trunc_dp
 
@@ -193,7 +194,18 @@ def snapshot_drift(
     for every primitive type (strings identity; integers, decimals,
     doubles and timestamps print shortest-roundtrip/canonically), so
     the distinct counts are identical to count(DISTINCT c); equality
-    with the one-pass formulation is pinned by the oracle twin."""
+    with the one-pass formulation is pinned by the oracle twin. The
+    one value equality that printing would split is signed zero:
+    aggregation counts 0.0 and -0.0 as one value, so float and double
+    columns map -0.0 to 0.0 before the cast."""
+    def _as_string(df: DataFrame, c: str) -> Column:
+        col = F.col(c)
+        dtype = df.schema[c].dataType
+        if isinstance(dtype, (DoubleType, FloatType)):
+            # -0.0 == 0 is true, so this folds signed zero; NaN passes through
+            col = F.when(col == 0, F.lit(0.0).cast(dtype)).otherwise(col)
+        return col.cast("string")
+
     def _agg(df: DataFrame) -> DataFrame:
         aggs = [F.count("*").alias("__n")]
         for c in columns:
@@ -207,7 +219,7 @@ def snapshot_drift(
     def _nd(df: DataFrame) -> DataFrame:
         stacked = df.select(
             F.posexplode(
-                F.array(*[F.col(c).cast("string") for c in columns])
+                F.array(*[_as_string(df, c) for c in columns])
             ).alias("__ci", "__val")
         )
         per_col = (

@@ -15,13 +15,14 @@ Four tiers, all pure DataFrame ops unless noted:
   probe only the nprobe nearest cells, cutting the scanned fraction to
   ~nprobe/nlist. Recall measured against brute force in tests.
 
-- pair scans (near-dup): the default path is
-  embedding_neardup_pairs_pruned — SOUND cell-pair pruning (triangle
-  inequality on the unit sphere, zero false negatives) + the
-  codegen-unrolled scorer; provably equal to the exact O(n^2) scan,
-  which is retained as the oracle twin. neardup_pairs_blas is the same
-  pruning with a per-cell-pair numpy dgemm (applyInPandas, nothing on
-  the driver).
+- pair scans (near-dup): embedding_neardup_pairs_codegen is the exact
+  O(n^2) scan (codegen-unrolled scorer, bit-identical to the lambda
+  form embedding_neardup_pairs, which is retained as the test oracle).
+  The scale paths restrict candidates first and reuse the same
+  scoring: semdedup_pairs_seeded scores within seeded cells (the
+  SemDeDup approximation), neardup_pairs_blas_int8 runs one exact
+  int8 dgemm per cell, and srp_lsh_pairs bands sign-random-projection
+  signatures.
 
 - PQ (product quantization): m-subspace k-means codebooks compress
   each vector to m small ints; queries rank by ADC lookup sums without
@@ -247,9 +248,9 @@ def embedding_neardup_pairs_codegen(
     stay bit-identical to embedding_neardup_pairs and the DuckDB
     oracle.
 
-    This is the O(n^2) ORACLE BASELINE — at scale use
-    embedding_neardup_pairs_pruned (same scoring expressions joined
-    through a sound cell-pair candidate set, provably equal output).
+    This is the exact O(n^2) scan — at scale restrict candidates
+    first (semdedup_pairs_seeded, srp_lsh_pairs) and reuse the same
+    scoring.
 
     Requires spark.sql.constraintPropagation disabled (the session
     factory's default): Catalyst's constraint inference is super-linear
@@ -285,10 +286,10 @@ def _assign_nearest(
     The earlier crossJoin + window-argmax form shuffled corpus x nlist
     rows just to pick a max; both rewrites avoid that.
 
-    Assignment quality only affects PRUNING/probe choice downstream,
-    never pair-scan results (pruned == exact is tested independently),
-    so the fp reassociation difference between BLAS and scalar chains
-    is immaterial. Ties break to the lowest cent_id (np.argmax takes
+    Assignment quality only affects probe choice downstream (IVF
+    cells, k-means iterations), never an exact score, so the fp
+    reassociation difference between BLAS and scalar chains is
+    immaterial. Ties break to the lowest cent_id (np.argmax takes
     the first max over the cent_id-sorted matrix — same contract as
     the old window orderBy). Returns (id, vec, cent_id, __cs)."""
     import numpy as np
@@ -327,157 +328,6 @@ def _assign_nearest(
             yield out
 
     return src.mapInPandas(kernel, schema=out_schema)
-
-
-def _cell_index(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    nlist: int,
-    centroids: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic cell index with exact pruning geometry.
-
-    Returns (assignments, cells): assignments = (id, vec, cent_id,
-    __cs); cells = (cent_id, cent_vec, __cn, __radius) where __radius
-    is the cell's max unit-sphere distance of a member to its centroid
-    direction (||u_a - u_c|| = sqrt(2 - 2*cos)). Default centroids are
-    the nlist lowest-id vectors — the same seeded-sample quantizer as
-    ivf_build; pass a trained (cent_id, cent_vec) frame (e.g. from
-    ivf_build_kmeans) for tighter radii, hence more pruned cell pairs.
-    Correctness never depends on centroid quality — only pruning power
-    does."""
-    if centroids is None:
-        centroids = (
-            vectors.orderBy(id_col)
-            .limit(nlist)
-            .select(
-                F.col(id_col).alias("cent_id"),
-                F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                    "cent_vec"
-                ),
-            )
-        )
-    else:
-        centroids = centroids.select("cent_id", "cent_vec")
-    # persisted: consumed by the radii aggregation AND (in the pair
-    # scans) by both join sides — without it the assignment expression
-    # re-executes and re-compiles once per consumer. MEMORY_AND_DISK
-    # default, (id, vec, cell, cs) rows; at 100 TB this is the
-    # materialize-the-cell-assigned-table step a real pipeline runs
-    # before its pair scan.
-    assigned = _assign_nearest(vectors, centroids, id_col, vec_col).persist()
-    dist = F.sqrt(F.greatest(F.lit(0.0), F.lit(2.0) - F.lit(2.0) * F.col("__cs")))
-    radii = (
-        assigned.select("cent_id", dist.alias("__dist"))
-        .groupBy("cent_id")
-        .agg(F.max("__dist").alias("__radius"), F.count("*").alias("__count"))
-    )
-    cells = centroids.withColumn("__cn", _norm(F.col("cent_vec"))).join(radii, "cent_id")
-    return assigned, cells
-
-
-def _candidate_cell_pairs(cells: DataFrame, threshold: float) -> DataFrame:
-    """Directed (cell_a, cell_b) pairs that can possibly contain a
-    cosine >= threshold pair — SOUND pruning, no false negatives.
-
-    For unit vectors, sim(a,b) >= t  <=>  ||a-b|| <= sqrt(2(1-t));
-    the triangle inequality gives ||a-b|| >= ||c_a - c_b|| - r_a - r_b,
-    so any cell pair with centroid distance > r_a + r_b + sqrt(2(1-t))
-    is provably empty and never scored. Both orders are kept for
-    a != b so one downstream id_1 < id_2 filter yields each unordered
-    pair exactly once.
-
-    ``cells`` is index metadata (nlist rows); the pair geometry is
-    computed on the driver (an nlist^2 double loop over collected
-    rows) and returned as a literal frame — no cartesian join node
-    ever enters the plan."""
-    import math
-
-    d_t = math.sqrt(max(0.0, 2.0 * (1.0 - threshold)))
-    rows = cells.collect()
-    geo = []
-    for r in rows:
-        v = [float(x) for x in r["cent_vec"]]
-        n = float(r["__cn"]) or 1.0
-        geo.append((int(r["cent_id"]), v, n, float(r["__radius"])))
-    pairs = []
-    for ca, va, na, ra in geo:
-        for cb, vb, nb, rb in geo:
-            cos = sum(x * y for x, y in zip(va, vb)) / (na * nb)
-            dist = math.sqrt(max(0.0, 2.0 - 2.0 * cos))
-            if dist <= ra + rb + d_t + 1e-9:
-                pairs.append((ca, cb))
-    spark = cells.sparkSession
-    if not pairs:
-        return spark.createDataFrame([], "cell_a INT, cell_b INT")
-    return spark.createDataFrame(pairs, "cell_a INT, cell_b INT")
-
-
-def embedding_neardup_pairs_pruned(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    nlist: int = 16,
-    dim: int | None = None,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pair scan through a sound candidate cell index — the
-    DEFAULT pair-scan path; output provably equals the exact O(n^2)
-    scan (equality-tested) without ever declaring a cartesian product.
-
-    Vectors are assigned to nlist cells; cell pairs whose centroid
-    distance exceeds r_a + r_b + sqrt(2(1-threshold)) cannot contain a
-    qualifying pair (triangle inequality on the unit sphere) and are
-    skipped. Surviving blocks are joined EQUI on cell id — at 100 TB
-    the pair space shrinks from all-pairs to the near-cell blocks, the
-    shuffle is hash-partitioned by cell, and skipped blocks are never
-    scanned. Scoring reuses the codegen-unrolled chain, so values are
-    bit-identical to embedding_neardup_pairs_codegen and the oracle.
-
-    At the near-dup thresholds this operator exists for (>= ~0.9) the
-    ball radius sqrt(2(1-t)) is tiny (~0.32 at t=0.95), so only
-    near-identical cell blocks survive; at permissive thresholds the
-    bound honestly degrades toward all cell pairs — correctness never
-    depends on the data distribution.
-
-    COST-BASED FALLBACK: the cell stats (nlist rows of counts+radii —
-    bounded index metadata) price the candidate volume on the driver
-    before any pair is scored. When the surviving blocks cover most of
-    the pair space (> ``fallback_frac`` of n²: diffuse data, weak
-    centroids, permissive threshold), the block-join would only add
-    fan-out on top of an effectively-all-pairs scan, so the operator
-    runs the flat codegen scan instead — the same decision AQE makes
-    from runtime stats, here made from index stats. Results are
-    identical either way (both score with the same unrolled chain);
-    which plan ran is visible in .explain (block equi-joins vs one
-    declared cross)."""
-    _check_constraint_propagation(vectors.sparkSession)
-    fallback_frac = 0.5
-    if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
-    assigned, cells = _cell_index(vectors, id_col, vec_col, nlist, centroids=centroids)
-    cell_pairs = _candidate_cell_pairs(cells, threshold)
-    counts = {r["cent_id"]: r["__count"] for r in cells.select("cent_id", "__count").collect()}
-    n_total = sum(counts.values())
-    volume = sum(
-        counts.get(r["cell_a"], 0) * counts.get(r["cell_b"], 0)
-        for r in cell_pairs.collect()
-    )
-    if n_total and volume > fallback_frac * n_total * n_total:
-        assigned.unpersist()
-        return embedding_neardup_pairs_codegen(
-            vectors, id_col, vec_col, threshold, dim=dim
-        )
-    wide = _widened(assigned, id_col, vec_col, dim, extra_cols=["cent_id"])
-    a, b = _wide_sides(wide, id_col, dim, cell_col="cent_id")
-    cand = a.join(F.broadcast(cell_pairs), "cell_a").join(b, "cell_b")
-    return (
-        cand.filter(F.col("id_1") < F.col("id_2"))
-        .selectExpr("id_1", "id_2", _unrolled_pair_sim_sql(dim))
-        .filter(F.col("sim") >= threshold)
-    )
 
 
 def semdedup_assign_seeded(
@@ -530,8 +380,7 @@ def semdedup_assign_seeded(
     ).select(F.col(id_col), (-F.col("__m.__nc")).alias("cent_id"))
     # persisted: the assignment subtree feeds BOTH sides of the
     # within-cell self-join — without it the n x nlist fan-out and its
-    # argmax agg execute twice. Same materialize-the-assigned-table
-    # step _cell_index runs before its pair scan.
+    # argmax agg execute twice.
     return vectors.select(id_col, vec_col).join(assign, id_col).persist()
 
 
@@ -583,130 +432,6 @@ def semdedup_pairs_seeded(
     )
 
 
-def neardup_pairs_blas(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    nlist: int = 16,
-    centroids: DataFrame | None = None,
-    index: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """BLAS pair scan, bucket-scoped: cell pairs surviving the same
-    sound pruning as embedding_neardup_pairs_pruned are scored as ONE
-    numpy dgemm per ANCHOR CELL inside applyInPandas. No vector data
-    ever touches the driver — executors hold one anchor block (the
-    cell's members plus its surviving partner cells' members) at a
-    time, so the operator scales with the largest cell neighborhood,
-    not the corpus.
-
-    Grouping is by cell_a alone, NOT by (cell_a, cell_b): with nlist
-    cells a pair-grained grouping makes O(nlist^2) tiny kernel calls
-    whose Arrow+Python setup dominates the dgemm (measured 2.7 s vs
-    1.1 s at sf0.1 — the round-2 regression); anchor-grained grouping
-    runs nlist kernels over proportionally larger matrices, which is
-    exactly the shape BLAS wants, with identical pair semantics: each
-    unordered cell pair (a <= b) is scored only in anchor group a.
-
-    Same math as embedding_neardup_pairs; results can differ from the
-    JVM version only in the last float bits (BLAS reassociates the
-    dot-product sum), hence rows-only in the oracle catalog;
-    equivalence is unit-tested with tolerance.
-
-    Pass ``index`` (the (assigned, cells) pair from :func:`_cell_index`
-    / a session-scoped cache, same nlist/centroids) to reuse a
-    materialized cell index across calls — the threshold-dependent
-    pruning geometry is recomputed per call from the tiny cells frame,
-    so results are identical for any threshold."""
-    if index is not None:
-        assigned, cells = index
-    else:
-        assigned, cells = _cell_index(
-            vectors, id_col, vec_col, nlist, centroids=centroids
-        )
-    # undirected cell pairs: anchor group a holds every partner b >= a
-    # (including the diagonal), so each unordered pair is scored once
-    cell_pairs = _candidate_cell_pairs(cells, threshold).filter(
-        F.col("cell_a") <= F.col("cell_b")
-    )
-    vecs = assigned.select(
-        "cent_id",
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__vec"),
-    )
-    # side 0: each vector once, in its own anchor group (no fan-out);
-    # side 1: one copy per surviving (anchor, partner) pair, tagged
-    # with its own cell so the kernel can split diagonal vs cross.
-    amem = vecs.select(
-        F.col("cent_id").alias("cell_a"),
-        F.lit(0).alias("__side"),
-        F.col("cent_id").alias("__cell"),
-        "__id",
-        "__vec",
-    )
-    bmem = (
-        vecs.withColumnRenamed("cent_id", "cell_b")
-        .join(F.broadcast(cell_pairs), "cell_b")
-        .select(
-            "cell_a",
-            F.lit(1).alias("__side"),
-            F.col("cell_b").alias("__cell"),
-            "__id",
-            "__vec",
-        )
-    )
-    grp = amem.unionByName(bmem)
-
-    def kernel(pdf):
-        import numpy as np
-        import pandas as pd
-
-        from gcpdatapipelines_spark.blas import pin_blas_threads
-
-        pin_blas_threads()
-        empty = pd.DataFrame(
-            {
-                "id_1": pd.Series(dtype="int64"),
-                "id_2": pd.Series(dtype="int64"),
-                "sim": pd.Series(dtype="float64"),
-            }
-        )
-        asub = pdf[pdf["__side"] == 0]
-        bsub = pdf[pdf["__side"] == 1]
-        if asub.empty or bsub.empty:
-            return empty
-        cell_a = int(asub["__cell"].iat[0])
-        A = np.stack(asub["__vec"].to_numpy()).astype(np.float64)
-        B = np.stack(bsub["__vec"].to_numpy()).astype(np.float64)
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        B /= np.linalg.norm(B, axis=1, keepdims=True)
-        sims = np.round(A @ B.T, 6)
-        ia, jb = np.nonzero(sims >= threshold)
-        if ia.size == 0:
-            return empty
-        ida = asub["__id"].to_numpy()[ia]
-        idb = bsub["__id"].to_numpy()[jb]
-        bcell = bsub["__cell"].to_numpy()[jb]
-        s = sims[ia, jb]
-        diag = bcell == cell_a
-        # diagonal partners: both orders present in A x B — keep one;
-        # cross partners: each unordered pair appears once — order ids
-        keep = np.where(diag, ida < idb, ida != idb)
-        id1 = np.minimum(ida, idb)[keep]
-        id2 = np.maximum(ida, idb)[keep]
-        return pd.DataFrame(
-            {
-                "id_1": id1.astype("int64"),
-                "id_2": id2.astype("int64"),
-                "sim": s[keep],
-            }
-        )
-
-    return grp.groupBy("cell_a").applyInPandas(
-        kernel, schema="id_1 BIGINT, id_2 BIGINT, sim DOUBLE"
-    )
-
-
 def neardup_pairs_blas_int8(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -717,19 +442,16 @@ def neardup_pairs_blas_int8(
 ) -> DataFrame:
     """Engine-parity BLAS pair scan: int8-quantized within-cell dgemm.
 
-    The float BLAS tier (:func:`neardup_pairs_blas`) is rows-only in
-    the oracle catalog because dgemm reassociates float sums. This
-    variant removes that irreducibility instead of working around it:
+    A float dgemm reassociates float sums, so its output could only
+    be rows-only in the oracle catalog. This kernel removes that
+    irreducibility instead of working around it:
     each vector is max-abs-quantized to integral values in [-127, 127]
     (``floor(x * 127.0 / mx)``), so every partial sum of the dot
     product is INTEGRAL (|dot| <= dim * 127^2 << 2^53) and therefore
     exact in float64 IN ANY SUMMATION ORDER — the kernel still runs a
     real numpy dgemm, yet its output is bit-deterministic and the
     whole pipeline (seeded assignment, quantization, scoring) restates
-    in plain SQL. Same catalog playbook as the md5 hash family: the
-    oracle entry runs the engine-parity mode, production keeps the
-    float mode (equivalence under tolerance is pinned in
-    tests/test_similarity_blas.py).
+    in plain SQL — the same playbook as the md5 hash family.
 
     Candidates are the seeded WITHIN-CELL blocks (semdedup_assign --
     the SQL-proven quantizer), one dgemm per cell via applyInPandas:
@@ -1005,6 +727,30 @@ def _sub_vectors(
     )
 
 
+def _pq_grid(rows, where: str):
+    """Validate collected codebook rows (sub_id, cent_id, cent_vec) as
+    the DENSE grid every PQ kernel assumes — sub_ids 0..m-1, cent_ids
+    0..ksub-1 per sub, one dsub for every centroid — and return
+    (by_sub, m, ksub, dsub). Driver-side only: no Spark job. A ragged
+    codebook would otherwise encode against the wrong subspace slices
+    silently, or fail deep in numpy."""
+    by: dict[int, dict[int, list[float]]] = {}
+    for r in rows:
+        by.setdefault(r.sub_id, {})[r.cent_id] = list(r.cent_vec)
+    m = len(by)
+    if not m or sorted(by) != list(range(m)):
+        raise ValueError(f"{where}: sub_ids not dense 0..{m - 1}: {sorted(by)}")
+    ksub = len(by[0])
+    dsub = len(by[0][0]) if ksub else 0
+    for s in range(m):
+        if sorted(by[s]) != list(range(ksub)):
+            raise ValueError(f"{where}: sub {s} cent_ids not dense 0..{ksub - 1}")
+        bad = [c for c in range(ksub) if len(by[s][c]) != dsub]
+        if bad:
+            raise ValueError(f"{where}: sub {s} centroids {bad} have dim != {dsub}")
+    return by, m, ksub, dsub
+
+
 def pq_encode(
     vectors: DataFrame,
     codebooks: DataFrame,
@@ -1035,7 +781,9 @@ def pq_encode(
     ``entries``: pre-collected codebook rows (sub_id, cent_id,
     cent_vec) — callers holding a session-scoped codebook artifact
     (index metadata, the OPQ-training precedent) skip the count() and
-    collect() jobs this function otherwise runs per call (r11)."""
+    collect() jobs this function otherwise runs per call (r11). The
+    literal path raises ValueError unless the rows form a dense
+    m x ksub grid of equal-length sub-vectors."""
     if entries is not None:
         rows = list(entries)
         n_entries = len(rows)
@@ -1044,15 +792,11 @@ def pq_encode(
     if literal_max_entries and n_entries <= literal_max_entries:
         if entries is None:
             rows = codebooks.collect()
-        by_sub: dict[int, dict[int, list[float]]] = {}
-        for r in rows:
-            by_sub.setdefault(r.sub_id, {})[r.cent_id] = list(r.cent_vec)
-        m = len(by_sub)
-        dsub = len(by_sub[0][0])
+        by_sub, m, ksub, dsub = _pq_grid(rows, "pq_encode")
         sub_exprs = []
         for sub in range(m):
             cands = []
-            for cid in range(len(by_sub[sub])):
+            for cid in range(ksub):
                 lits = ", ".join(f"{v!r}D" for v in by_sub[sub][cid])
                 d2 = (
                     f"aggregate(zip_with(slice(__v, {sub * dsub + 1}, {dsub}), "
@@ -1112,7 +856,11 @@ def pq_topk(
     """Approximate top-k by asymmetric distance computation (ADC):
     dist(q, x) ~ sum_m ||q_m - cent[m][code_m(x)]||^2, read from a
     per-query lookup table. ``m``/``dsub``: pass when known to skip
-    the per-call metadata jobs (see :func:`_sub_vectors`).
+    the per-call metadata jobs (see :func:`_sub_vectors`); pass both
+    (a half-known shape still costs a job) as positive ints, else
+    ValueError. Their agreement with ``codebooks`` is the caller's
+    contract: checking it would cost the job they exist to skip, so
+    derive them from the same collected rows that pq_encode validates.
 
     The LUT (q x m x ksub rows) is a broadcast join of the query
     subvectors against the codebooks; the corpus side only explodes
@@ -1122,6 +870,10 @@ def pq_topk(
     quality is recall-tested against brute force)."""
     from pyspark.sql import Window
 
+    if (m, dsub) != (None, None) and not all(
+        isinstance(x, int) and x > 0 for x in (m, dsub)
+    ):
+        raise ValueError(f"pq_topk: m={m}, dsub={dsub} must both be positive ints")
     lut = _sub_vectors(queries, codebooks, q_id_col, q_vec_col, m, dsub).join(
         F.broadcast(codebooks), "sub_id"
     ).select(
@@ -1402,30 +1154,9 @@ def pq_encode_rotated(
     import numpy as np
 
     rows = list(entries) if entries is not None else codebooks.collect()
-    by: dict[int, dict[int, list[float]]] = {}
-    for r in rows:
-        by.setdefault(r.sub_id, {})[r.cent_id] = list(r.cent_vec)
-    # This kernel assumes the DENSE grid opq_train_sample emits —
-    # sub_ids 0..m-1, cent_ids 0..ksub-1 per sub, uniform dsub — and
-    # builds one (m, ksub, dsub) ndarray from it. A ragged codebook
-    # (pq_encode tolerates those via per-sub len()) would otherwise
-    # surface as an object-dtype array or a KeyError deep in numpy, so
-    # reject it loudly up front.
-    m = len(by)
-    if sorted(by) != list(range(m)):
-        raise ValueError(f"pq_encode_rotated: sub_ids not dense 0..{m - 1}: {sorted(by)}")
-    ksub = len(by[0])
-    dsub = len(by[0][0])
-    for s in range(m):
-        if sorted(by[s]) != list(range(ksub)):
-            raise ValueError(
-                f"pq_encode_rotated: sub {s} cent_ids not dense 0..{ksub - 1}"
-            )
-        bad = [c for c in range(ksub) if len(by[s][c]) != dsub]
-        if bad:
-            raise ValueError(
-                f"pq_encode_rotated: sub {s} centroids {bad} have dim != {dsub}"
-            )
+    # This kernel builds one (m, ksub, dsub) ndarray, so it needs the
+    # dense grid; _pq_grid rejects a ragged codebook loudly up front.
+    by, m, ksub, dsub = _pq_grid(rows, "pq_encode_rotated")
     C = np.asarray(
         [[by[s][c] for c in range(ksub)] for s in range(m)], dtype=np.float64
     )
@@ -2014,60 +1745,6 @@ def hard_negatives(
     )
 
 
-def diverse_kcenter(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """(rank, id, max_cos_to_prior): greedy farthest-point traversal —
-    the 2-approximation to k-center — selecting k maximally-diverse
-    vectors: each round adds the corpus point LEAST similar (max
-    cosine) to everything already selected. The diversity-curation
-    primitive behind coreset selection and eval-set de-clustering
-    (near-duplicate prototypes never both get picked).
-
-    Deterministic: the seed is the minimum id; each round breaks ties
-    (equal rounded similarity) toward the smaller id, so the
-    selection is reproducible under any partitioning.
-
-    Scale shape: the selected set is bounded driver metadata (k
-    vectors); every round is ONE corpus scan through the Arrow dgemm
-    assignment kernel (:func:`_assign_nearest` — no shuffle) plus a
-    1-row TakeOrdered. k driver-synchronized rounds is the inherent
-    data dependency of the greedy; at extreme corpus sizes seed the
-    traversal from a deterministic sample, same contract."""
-    first = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.col(id_col))
-        .limit(1)
-        .collect()[0]
-    )
-    spark = vectors.sparkSession
-    sel = [(0, first[id_col], None, [float(x) for x in first[vec_col]])]
-    for rnd in range(1, k):
-        cents = spark.createDataFrame(
-            [(i, v) for i, (_, _, _, v) in enumerate(sel)],
-            "cent_id INT, cent_vec ARRAY<DOUBLE>",
-        )
-        assigned = _assign_nearest(vectors, cents, id_col, vec_col)
-        already = [s[1] for s in sel]
-        nxt = (
-            assigned.filter(~F.col(id_col).isin(already))
-            .select(id_col, vec_col, F.round(F.col("__cs"), 9).alias("__cs"))
-            .orderBy(F.col("__cs").asc(), F.col(id_col))
-            .limit(1)
-            .collect()[0]
-        )
-        sel.append(
-            (rnd, nxt[id_col], float(nxt["__cs"]), [float(x) for x in nxt[vec_col]])
-        )
-    return spark.createDataFrame(
-        [(r, i, c) for r, i, c, _ in sel],
-        f"rank INT, {id_col} BIGINT, max_cos_to_prior DOUBLE",
-    )
-
-
 def _local_kcenter_portable(spark, rows, id_col, vec_col, k, dim) -> DataFrame:
     """Driver-side replay of the portable greedy farthest-point
     traversal. Every float op mirrors the codegen chain EXACTLY —
@@ -2156,18 +1833,27 @@ def diverse_kcenter_portable(
     dim: int = 64,
     local_threshold: int = 100_000,
 ) -> DataFrame:
-    """Engine-portable parity tier of :func:`diverse_kcenter`: the same
-    greedy farthest-point traversal, but each round's corpus scan is a
-    CODEGEN unrolled left-to-right dot chain against LITERAL selected
-    vectors (no Arrow dgemm — BLAS reassociates sums, which is exactly
-    what keeps the production tier rows-only), with the max-cosine
-    floor-truncated to 9 dp before the (cs ASC, id) argmin cut. Every
-    double op is the identical sequential chain DuckDB's
-    list_inner_product computes, so a k-step unrolled-CTE oracle
-    hash-checks the whole traversal end to end.
+    """(rank, id, max_cos_to_prior): greedy farthest-point traversal —
+    the 2-approximation to k-center — selecting k maximally-diverse
+    vectors: each round adds the corpus point LEAST similar (max
+    cosine) to everything already selected. The diversity-curation
+    primitive behind coreset selection and eval-set de-clustering
+    (near-duplicate prototypes never both get picked).
 
-    Scale shape is unchanged: selected set = bounded driver metadata,
-    each round ONE codegen scan + a 1-row TakeOrdered, no shuffle, no
+    Deterministic: the seed is the minimum id; each round breaks ties
+    (equal truncated similarity) toward the smaller id, so the
+    selection is reproducible under any partitioning.
+
+    Each round's corpus scan is a CODEGEN unrolled left-to-right dot
+    chain against LITERAL selected vectors (no Arrow dgemm — BLAS
+    reassociates sums, which would make the result rows-only), with
+    the max-cosine floor-truncated to 9 dp before the (cs ASC, id)
+    argmin cut. Every double op is the identical sequential chain
+    DuckDB's list_inner_product computes, so a k-step unrolled-CTE
+    oracle hash-checks the whole traversal end to end.
+
+    Scale shape: selected set = bounded driver metadata, each round
+    ONE codegen scan + a 1-row TakeOrdered, no shuffle, no
     Python workers. k driver-synchronized rounds is the greedy's
     inherent data dependency.
 
@@ -2282,11 +1968,11 @@ def mmr_rerank(
     Scale shape: the candidate cut is the DISTRIBUTED brute-force
     scorer (one corpus scan, floor-6dp sims, id tiebreak); the greedy
     then runs driver-side over the ``n_cand`` collected candidates —
-    bounded index metadata, the same contract as diverse_kcenter's
-    selected set. Fully deterministic AND engine-portable: pair
-    cosines are plain left-to-right float64 folds (== DuckDB
-    list_inner_product bit-for-bit), floor-truncated to 6 dp, so an
-    unrolled-CTE oracle restates the whole traversal."""
+    bounded index metadata, the same contract as
+    diverse_kcenter_portable's selected set. Fully deterministic AND
+    engine-portable: pair cosines are plain left-to-right float64
+    folds (== DuckDB list_inner_product bit-for-bit), floor-truncated
+    to 6 dp, so an unrolled-CTE oracle restates the whole traversal."""
     one_minus = 0.3 if lam == 0.7 else (1.0 - lam)  # spell literals, not
     # derived constants (NOTES float-literal trap): 1.0-0.7 is a
     # DIFFERENT double from the literal 0.3 the oracle writes

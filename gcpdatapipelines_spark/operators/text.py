@@ -92,7 +92,6 @@ def winnowing_fingerprints(
     text_col: str,
     k: int = 7,
     window: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprints (the rolling-hash scheme of
     Schleimer/Wilkerson/Aiken's MOSS): hash every character k-gram,
@@ -100,14 +99,12 @@ def winnowing_fingerprints(
     dedupe. Near-duplicate documents share most selected fingerprints
     even under edits, and the selected set is position-robust.
 
-    ``hash_fn``: ``"xxhash64"`` (default — fastest, JVM-side 64-bit
-    ints) or ``"md5"`` (hex-string fingerprints, lexicographic window
-    minima). The md5 mode exists because winnowing only needs a
-    CONSISTENT hash order, not a specific hash — and md5 is the one
-    hash both Spark and DuckDB compute identically, which makes the
-    whole select-minima pipeline oracle-checkable end-to-end (the
-    ivf_build seeded-quantizer trick applied to fingerprinting).
-    Production keeps xxhash64; semantics are identical.
+    Fingerprints are the first 16 hex chars of md5(k-gram), window
+    minima taken lexicographically. Winnowing only needs a CONSISTENT
+    hash order, not a specific hash — and md5 is the one hash both
+    Spark and DuckDB compute identically, which makes the whole
+    select-minima pipeline oracle-checkable end-to-end (the ivf_build
+    seeded-quantizer trick applied to fingerprinting).
 
     Shape: explode the POSITION range first (codegen), then hash each
     k-gram as a plain per-row expression — higher-order ``transform``
@@ -148,12 +145,7 @@ def winnowing_fingerprints(
         F.explode(F.sequence(F.lit(1), n_grams)).alias("pos"),
     )
     gram = F.col("__t").substr(F.col("pos"), F.lit(k))
-    h = (
-        F.md5(gram).substr(1, 16)
-        if hash_fn == "md5"
-        else F.xxhash64(gram)
-    )
-    exploded = grams.select(id_col, "pos", "__n", h.alias("h"))
+    exploded = grams.select(id_col, "pos", "__n", F.md5(gram).substr(1, 16).alias("h"))
     w = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
     mins = exploded.select(
         id_col, F.col("pos"), F.col("__n"),
@@ -177,7 +169,6 @@ def fingerprint_overlap_pairs(
     window: int = 4,
     min_shared: int = 10,
     max_df: int | None = 20,
-    hash_fn: str = "xxhash64",
     fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs by shared winnowing fingerprints —
@@ -190,7 +181,7 @@ def fingerprint_overlap_pairs(
     dedup.ngram_jaccard_pairs. Set None to disable.
 
     ``fingerprints``: a precomputed (persisted) winnowing_fingerprints
-    frame for the same (df, k, window, hash_fn) — three consumers
+    frame for the same (df, k, window) — three consumers
     (df-cap counts + both self-join sides) read it, so callers with a
     corpus-scoped cache (queries._winnowing_fp_cached) skip the triple
     recompute. Identical results either way."""
@@ -203,7 +194,7 @@ def fingerprint_overlap_pairs(
     fp = (
         fingerprints
         if fingerprints is not None
-        else winnowing_fingerprints(df, id_col, text_col, k, window, hash_fn)
+        else winnowing_fingerprints(df, id_col, text_col, k, window)
     )
     if max_df is not None:
         keep = (

@@ -129,9 +129,7 @@ def _simhash_md5_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates) of both the text near-dup detector (dedup_simhash)
     and the media phash stand-in (mm_phash_neardup). At 100 TB the
     signature table is materialized once per corpus and every
-    detector reads it. (Production pipelines chasing throughput swap
-    the hash family to xxhash64 via dedup.simhash — same voting
-    semantics, no shared-prep change.)"""
+    detector reads it."""
     from .operators.dedup import simhash_md5
 
     key = (spark.sparkContext.applicationId, sf_dir, "simhash_md5")
@@ -165,7 +163,7 @@ def _doc_shingles_cached(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFr
 
 
 def _md5_band_keys_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-scoped md5-mode LSH band keys of the whole corpus
+    """Session-scoped md5-family LSH band keys of the whole corpus
     (n=5, 64 perms, 16 bands) — the md5 signature pass is the most
     expensive shared prep in the dedup family, and both MinHash
     entries (batch pairs + incremental admission) consume the exact
@@ -181,15 +179,13 @@ def _md5_band_keys_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "text",
             shingles=_doc_shingles_cached(spark, sf_dir, 5),
-            hash_fn="md5",
         ).persist()
         _PREP_CACHE[key] = bk
     return bk
 
 
 def _winnowing_fp_cached(
-    spark: SparkSession, sf_dir: str, k: int = 20, window: int = 8,
-    hash_fn: str = "md5",
+    spark: SparkSession, sf_dir: str, k: int = 20, window: int = 8
 ) -> DataFrame:
     """Session-scoped shared prep: the winnowing fingerprint table of
     the documents corpus — read by THREE consumers inside the overlap
@@ -201,11 +197,11 @@ def _winnowing_fp_cached(
     unpersist, which this keyed registry avoids."""
     from .operators.text import winnowing_fingerprints
 
-    key = (spark.sparkContext.applicationId, sf_dir, "winnow_fp", k, window, hash_fn)
+    key = (spark.sparkContext.applicationId, sf_dir, "winnow_fp", k, window)
     fp = _PREP_CACHE.get(key)
     if fp is None:
         fp = winnowing_fingerprints(
-            _t(spark, sf_dir, "documents"), "doc_id", "text", k, window, hash_fn
+            _t(spark, sf_dir, "documents"), "doc_id", "text", k, window
         ).persist()
         _PREP_CACHE[key] = fp
     return fp
@@ -1462,7 +1458,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_lsh_sql(
     num_perm: int = 64, bands: int = 16, threshold: float = 0.5
 ) -> str:
-    """DuckDB twin of the md5-mode MinHash+LSH pipeline: md5-derived
+    """DuckDB twin of the md5-family MinHash+LSH pipeline: md5-derived
     60-bit base per shingle, (a_s*x+b_s) % P universal-hash
     permutations (identical constants via
     dedup.minhash_perm_constants), per-band comma-joined bucket
@@ -1537,12 +1533,11 @@ def _minhash_lsh_sql(
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64)+LSH(16 bands) candidate pairs verified by exact
     Jaccard >= 0.5. Recall vs dedup_ngram_jaccard is unit-tested.
-    Upgraded from rows-only: the catalog runs the md5-mode signature
-    family ((a_s*x+b_s) % P over an md5-derived base — MinHash needs a
-    consistent hash family, not a specific one, and this is the family
-    every engine restates exactly), so signatures, band buckets,
-    candidates, AND the exact-Jaccard verify all hash-check end-to-end.
-    Production keeps the xxhash64 default."""
+    The signature family is (a_s*x+b_s) % P over an md5-derived base —
+    MinHash needs a consistent hash family, not a specific one, and
+    this is the family every engine restates exactly — so signatures,
+    band buckets, candidates, AND the exact-Jaccard verify all
+    hash-check end-to-end."""
     from .operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
@@ -1552,14 +1547,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=5,
         threshold=0.5,
         shingles=_doc_shingles_cached(spark, sf_dir, 5),
-        hash_fn="md5",
         banded=_md5_band_keys_cached(spark, sf_dir),
     )
 
 
 
 def _simhash_md5_sql(max_hamming: int = 3, kinded: bool = False) -> str:
-    """DuckDB twin of the md5-mode SimHash pipeline: two 32-bit md5
+    """DuckDB twin of the md5-family SimHash pipeline: two 32-bit md5
     halves per token, per-bit +1/-1 votes, sign-bit fold into two
     positive words, 16-bit pigeonhole banding, xor+bit_count verify.
 
@@ -1643,13 +1637,12 @@ def _simhash_md5_sql(max_hamming: int = 3, kinded: bool = False) -> str:
 
 @register("dedup_simhash", _simhash_md5_sql())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash near-dup pairs (Hamming <= 3) via 16-bit chunk
-    banding. Upgraded from rows-only: the catalog runs the md5-mode
-    signature family (two 32-bit md5 halves per token — SimHash needs
-    consistent per-token bits, not a specific hash), so signatures,
-    pigeonhole banding, and the xor+bit_count verify hash-check
-    end-to-end. Production (and the shared mm_phash signature cache)
-    keep the xxhash64 default."""
+    """64-bit SimHash near-dup pairs (Hamming <= 3) via pigeonhole
+    banding. Signatures use the md5 family (two 32-bit md5 halves per
+    token — SimHash needs consistent per-token bits, not a specific
+    hash), so signatures, banding, and the xor+bit_count verify
+    hash-check end-to-end. The signature table is shared with
+    mm_phash_neardup."""
     from .operators.dedup import simhash_pairs_md5
 
     return simhash_pairs_md5(
@@ -1701,17 +1694,16 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (this corpus shares a tiny vocabulary, so short grams collide
     everywhere), pairs sharing >= 10 surviving fingerprints.
 
-    Catalog entry runs the md5 hash mode — winnowing needs only a
-    CONSISTENT hash order, and md5 is the hash both engines compute
-    identically, so the full select-minima/df-cap/pair pipeline is
-    hash-checked end-to-end (was rows-only under xxhash64, which has
-    no DuckDB twin). Production keeps the xxhash64 default."""
+    Fingerprints are md5 hashes — winnowing needs only a CONSISTENT
+    hash order, and md5 is the hash both engines compute identically,
+    so the full select-minima/df-cap/pair pipeline is hash-checked
+    end-to-end."""
     from .operators.text import fingerprint_overlap_pairs
 
     return fingerprint_overlap_pairs(
         _t(spark, sf_dir, "documents"), "doc_id", "text",
-        k=20, window=8, min_shared=10, hash_fn="md5",
-        fingerprints=_winnowing_fp_cached(spark, sf_dir, 20, 8, "md5"),
+        k=20, window=8, min_shared=10,
+        fingerprints=_winnowing_fp_cached(spark, sf_dir, 20, 8),
     )
 
 
@@ -1952,9 +1944,7 @@ def sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented cell approximation, cost sum(c_i^2)/2.
 
     Oracle: the IDENTICAL within-cell recipe (seeded 6-dp argmax
-    assignment reproduced in SQL), hash-checked end-to-end. The
-    pruned-equals-exact contract for the geometric path stays pinned
-    at t>=0.95 on clustered fixtures in test_similarity/test_plans."""
+    assignment reproduced in SQL), hash-checked end-to-end."""
     from .operators.similarity import semdedup_pairs_seeded
 
     return semdedup_pairs_seeded(
@@ -2037,8 +2027,7 @@ def sim_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_neardup_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLAS pair scan, engine-parity mode (upgraded from rows-only,
-    r10): the catalog runs the int8-quantized within-cell dgemm —
+    """BLAS pair scan: the int8-quantized within-cell dgemm —
     quantization makes every BLAS partial sum integral hence EXACT in
     any summation order, so the kernel's real numpy matmul
     hash-checks end to end against the DuckDB twin (same md5-family
@@ -2046,11 +2035,8 @@ def sim_neardup_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-proven quantizer shared with sim_embedding_neardup /
     dedup_semantic_keep (one cached assignment, three consumers).
 
-    Production keeps the FLOAT BLAS tier (neardup_pairs_blas: sound
-    geometric cell-pair pruning + float dgemm) — float-vs-JVM
-    equivalence under tolerance stays pinned in
-    tests/test_similarity_blas.py, and the float tier's exact twin
-    remains sim_embedding_neardup."""
+    The int8 kernel is pinned bit-for-bit against a pure-Python model
+    in tests/test_round15_ops.py."""
     from .operators.similarity import neardup_pairs_blas_int8
 
     return neardup_pairs_blas_int8(
@@ -2784,7 +2770,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_neardup_sql(num_perm: int = 64, bands: int = 16) -> str:
-    """DuckDB twin of the md5-mode incremental admission: the same
+    """DuckDB twin of the md5-family incremental admission: the same
     md5/universal-hash band keys as _minhash_lsh_sql computed once for
     ALL docs, the corpus half reduced to distinct (band, bucket) state,
     the increment half admitted iff every band is clear of the state
@@ -2864,9 +2850,8 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the corpus in NO band, deduped within itself by the
     deterministic bucket-min rule. One signature pass + bucket-keyed
     anti-join per increment; state grows with the admitted corpus
-    only. md5-mode band keys make the whole admission decision
-    oracle-hashable (was rows-only through r5 on xxhash64 keys —
-    production keeps xxhash64, pinned in tests/test_streaming.py)."""
+    only. md5-family band keys make the whole admission decision
+    oracle-hashable."""
     from .operators.dedup import incremental_neardup
 
     d = _t(spark, sf_dir, "documents")
@@ -2878,7 +2863,6 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = keys_all.filter(F.col("doc_id") <= half)
     admitted, _ = incremental_neardup(
         d.filter(F.col("doc_id") > half), state, "doc_id", "text",
-        hash_fn="md5",
         precomputed_keys=keys_all.filter(F.col("doc_id") > half),
     )
     return admitted
@@ -7568,8 +7552,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Upgraded from rows-only (r8): the catalog runs the md5-family
     two-word signature exactly as dedup_simhash does, so signatures,
     kind-scoped banding, and the xor+bit_count verify all hash-check
-    against the DuckDB twin. Production keeps the xxhash64 single-word
-    path (phash_neardup_pairs)."""
+    against the DuckDB twin."""
     from .operators.multimodal import phash_neardup_pairs_md5
 
     # payload == utf8(text) in the fabricated assets table, so the
@@ -8301,10 +8284,8 @@ def sim_diverse_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     coreset/eval-set de-clustering primitive. Catalog tier runs the
     PORTABLE scorer (codegen left-to-right dot vs literal selected
     vectors, floor-9dp max-cosine, id tiebreak) so a k-step
-    unrolled-CTE DuckDB twin hash-checks the whole traversal; the
-    Arrow-dgemm production tier (diverse_kcenter, same greedy + plan
-    shape) stays rows-only-by-nature (BLAS reassociates sums) with
-    determinism + diversity pinned in tests."""
+    unrolled-CTE DuckDB twin hash-checks the whole traversal;
+    determinism + diversity are pinned in tests."""
     from .operators.similarity import diverse_kcenter_portable
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -8701,19 +8682,16 @@ def a30_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed Poisson bootstrap — per-row Poisson(1) weights from a
     hash of (id, replicate), so B=100 resamples cost ONE narrow
     explode + one B-key aggregate instead of B shuffles. The
-    uncertainty tool for statistics with no closed-form SE. Upgraded
-    from rows-only: the catalog seeds the weights from the md5 family
-    (a bootstrap needs a DETERMINISTIC uniform stream, not a specific
-    hash), so weights, replicate means, and the percentile CI are all
-    engine-reproducible and hash-checked; production keeps the
-    xxhash64 default. Coverage/width statistics stay pinned in
+    uncertainty tool for statistics with no closed-form SE. The
+    weights are seeded from the md5 family (a bootstrap needs a
+    DETERMINISTIC uniform stream, not a specific hash), so weights,
+    replicate means, and the percentile CI are all engine-reproducible
+    and hash-checked. Coverage/width statistics stay pinned in
     tests."""
     from .operators.agg import bootstrap_mean_ci
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    return bootstrap_mean_ci(
-        ev, "event_id", "value", replicates=100, hash_fn="md5"
-    )
+    return bootstrap_mean_ci(ev, "event_id", "value", replicates=100)
 
 
 @register(
@@ -12577,7 +12555,7 @@ def prewarm(spark: SparkSession, sf_dir: str) -> None:
         _copurchase_edges_cached(spark, sf_dir),
         # winnowing fingerprint index (r10): three consumers inside
         # the overlap join read it per call
-        _winnowing_fp_cached(spark, sf_dir, 20, 8, "md5"),
+        _winnowing_fp_cached(spark, sf_dir, 20, 8),
         # SRP band-signature table (r10): rebuilt per call otherwise
         # (r11: widened to 64 bits / 4 bands with the declared query)
         _srp_sig_cached(spark, sf_dir, 64, 4, "axes"),

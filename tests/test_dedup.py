@@ -68,19 +68,53 @@ def test_minhash_lsh_recall_on_fixture(spark):
         assert recall >= 0.9, f"LSH recall {recall} below 0.9 ({len(exact)} true pairs)"
 
 
+def test_minhash_lsh_planted_pair(spark):
+    base = "the quick brown fox jumps over the lazy dog again and " * 5
+    df = _docs(spark, [
+        base,
+        base + "with one extra tail clause",
+        "entirely different text about columnar shuffles " * 6,
+    ])
+    got = {
+        (r.id_1, r.id_2)
+        for r in D.minhash_lsh_pairs(df, "doc_id", "text", n=5, threshold=0.5).collect()
+    }
+    assert (0, 1) in got and all(2 not in p for p in got)
+
+
 def test_simhash_identical_docs_zero_hamming(spark):
     df = _docs(spark, ["alpha beta gamma delta", "alpha beta gamma delta", "unrelated thing"])
-    sig = {r["doc_id"]: r["simhash"] for r in D.simhash(df, "doc_id", "text").collect()}
+    sig = {
+        r["doc_id"]: (r["sig_hi"], r["sig_lo"])
+        for r in D.simhash_md5(df, "doc_id", "text").collect()
+    }
     assert sig[0] == sig[1]
-    pairs = D.simhash_pairs(df, "doc_id", "text", max_hamming=0).collect()
+    pairs = D.simhash_pairs_md5(df, "doc_id", "text", max_hamming=0).collect()
     assert {(p["id_1"], p["id_2"]) for p in pairs} == {(0, 1)}
 
 
 def test_simhash_deterministic(spark):
     df = _docs(spark, ["some stable content for hashing"])
-    a = D.simhash(df, "doc_id", "text").collect()[0]["simhash"]
-    b = D.simhash(df, "doc_id", "text").collect()[0]["simhash"]
-    assert a == b
+    a = D.simhash_md5(df, "doc_id", "text").collect()[0]
+    b = D.simhash_md5(df, "doc_id", "text").collect()[0]
+    assert (a["sig_hi"], a["sig_lo"]) == (b["sig_hi"], b["sig_lo"])
+
+
+def test_simhash_pairs_planted_pair(spark):
+    # 40 distinct tokens: one extra token flips only bits whose vote
+    # margin was exactly +-1 — a handful of the 64 (each bit's margin
+    # is a 40-step random walk), comfortably under the pigeonhole cut
+    base = " ".join(f"word{i}" for i in range(40))
+    df = _docs(spark, [
+        base,
+        base + " extra",  # one extra token: tiny Hamming drift
+        "totally unrelated corpus about broadcast joins " * 5,
+    ])
+    got = {
+        (r.id_1, r.id_2): r.hamming
+        for r in D.simhash_pairs_md5(df, "doc_id", "text", max_hamming=8).collect()
+    }
+    assert (0, 1) in got and all(2 not in p for p in got)
 
 
 def test_fuzzy_pairs_blocked_semantics(spark):

@@ -78,45 +78,50 @@ def test_resize_stub_aspect_preserving(spark):
 
 
 # ---------------------------------------------------------------------------
-# phash_neardup_pairs
-# ---------------------------------------------------------------------------
-
-from gcpdatapipelines_spark.operators.multimodal import phash_neardup_pairs  # noqa: E402
-
-
-def test_phash_planted_pairs_by_hamming(spark):
-    # hash_col override plants exact distances: a-b differ in 2 bits,
-    # a-c differ in 20 bits, d == a duplicates.
-    rows = [
-        (1, 0b1111000011110000),
-        (2, 0b1111000011110011),          # hamming 2 from id 1
-        (3, 0b1111000011110000 ^ ((1 << 20) - 1)),  # hamming 20
-        (4, 0b1111000011110000),          # hamming 0 from id 1
-    ]
-    df = spark.createDataFrame(rows, "asset_id BIGINT, ph BIGINT")
-    out = {(r.asset_a, r.asset_b): r.hamming for r in phash_neardup_pairs(df, max_hamming=3, hash_col="ph").collect()}
-    assert out == {(1, 2): 2, (1, 4): 0, (2, 4): 2}
-
-
-def test_phash_xxhash_standin_pairs_only_exact_payloads(spark):
-    rows = [(1, "image", b"samebytes"), (2, "image", b"samebytes"), (3, "image", b"other")]
-    df = spark.createDataFrame(rows, "asset_id BIGINT, kind STRING, payload BINARY")
-    out = phash_neardup_pairs(df, max_hamming=3).collect()
-    assert [(r.asset_a, r.asset_b, r.hamming) for r in out] == [(1, 2, 0)]
-
-
-def test_phash_plan_equijoin_never_cartesian(spark):
-    df = spark.createDataFrame([(1, 7)], "asset_id BIGINT, ph BIGINT")
-    plan = phash_neardup_pairs(df, hash_col="ph")._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-# ---------------------------------------------------------------------------
 # phash_neardup_pairs_md5 (kind-scoped, oracle-parity signature family)
 # ---------------------------------------------------------------------------
 
 from gcpdatapipelines_spark.operators.multimodal import phash_neardup_pairs_md5  # noqa: E402
+
+_SIG_SCHEMA = "asset_id BIGINT, kind STRING, sig_hi BIGINT, sig_lo BIGINT"
+
+
+def test_phash_planted_pairs_by_hamming(spark):
+    # exact distances planted across BOTH 32-bit words: 1-2 differ in
+    # one hi bit + one lo bit (2), 1-3 in 2 hi + 2 lo bits (4, over the
+    # cut), 1-4 in three hi bits (3, on the cut), 1-5 identical (0)
+    hi, lo = 0x0F0F0F0F, 0x00F000F0
+    rows = [
+        (1, "image", hi, lo),
+        (2, "image", hi ^ 0b1, lo ^ 0b1),
+        (3, "image", hi ^ 0b11, lo ^ 0b11),
+        (4, "image", hi ^ 0b111, lo),
+        (5, "image", hi, lo),
+    ]
+    df = spark.createDataFrame(rows, _SIG_SCHEMA)
+    out = {
+        (r.asset_a, r.asset_b): r.hamming
+        for r in phash_neardup_pairs_md5(df, max_hamming=3).collect()
+    }
+    want = {}
+    for a in rows:
+        for b in rows:
+            ham = bin(a[2] ^ b[2]).count("1") + bin(a[3] ^ b[3]).count("1")
+            if a[0] < b[0] and ham <= 3:
+                want[(a[0], b[0])] = ham
+    assert out == want
+    assert out[(1, 2)] == 2 and out[(1, 4)] == 3 and out[(1, 5)] == 0
+    assert (1, 3) not in out
+
+
+def test_phash_plan_equijoin_never_cartesian(spark):
+    # max_hamming > 3 takes the 16-bit chunk banding, not the 1-bit
+    # probes: that candidate step must be an equi-join too
+    df = spark.createDataFrame([(1, "image", 7, 9)], _SIG_SCHEMA)
+    q = phash_neardup_pairs_md5(df, max_hamming=5)._jdf.queryExecution()
+    plan = q.executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def _two_word_sig_rows():
@@ -134,10 +139,7 @@ def _two_word_sig_rows():
 
 
 def test_phash_md5_kind_scoped_pairs(spark):
-    df = spark.createDataFrame(
-        _two_word_sig_rows(),
-        "asset_id BIGINT, kind STRING, sig_hi BIGINT, sig_lo BIGINT",
-    )
+    df = spark.createDataFrame(_two_word_sig_rows(), _SIG_SCHEMA)
     out = {
         (r.asset_a, r.asset_b): (r.kind, r.hamming)
         for r in phash_neardup_pairs_md5(df, max_hamming=3).collect()
@@ -150,10 +152,7 @@ def test_phash_md5_kind_scoped_pairs(spark):
 
 
 def test_phash_md5_plan_kind_in_join_key_never_cartesian(spark):
-    df = spark.createDataFrame(
-        _two_word_sig_rows(),
-        "asset_id BIGINT, kind STRING, sig_hi BIGINT, sig_lo BIGINT",
-    )
+    df = spark.createDataFrame(_two_word_sig_rows(), _SIG_SCHEMA)
     q = phash_neardup_pairs_md5(df)._jdf.queryExecution()
     plan = q.executedPlan().toString()
     assert "CartesianProduct" not in plan

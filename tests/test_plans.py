@@ -137,67 +137,6 @@ def test_q17_correlated_avg_becomes_aggregate_join(spark):
     assert P.join_strategies(df), plan
 
 
-def _clustered_vecs(spark, n_clusters=4, per_cluster=30, dim=8):
-    """Tight unit-vector clusters: pruning provably separates them."""
-    import math
-
-    rows = []
-    for c in range(n_clusters):
-        base = [1.0 if i == c else 0.0 for i in range(dim)]
-        for j in range(per_cluster):
-            eps = 0.001 * (j % 7)
-            v = [x + (eps if i == (c + 1) % dim else 0.0) for i, x in enumerate(base)]
-            nrm = math.sqrt(sum(x * x for x in v))
-            rows.append((c * per_cluster + j, [x / nrm for x in v]))
-    return spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-
-
-def test_pruned_neardup_cost_based_plan_choice(spark):
-    """The pair scan picks its plan from bounded cell stats. On
-    clusterable data the vector sides meet through hash joins on cell
-    id — no cartesian/nested-loop node anywhere, and whole cell-pair
-    blocks are pruned. On diffuse data where the sound bound keeps
-    every block (candidate volume ~ n²), the operator deliberately
-    falls back to the flat codegen scan instead of paying block-join
-    fan-out on top of an all-pairs scan — the AQE-style decision,
-    made from index stats."""
-    from gcpdatapipelines_spark.operators import similarity as S
-
-    # clustered: block path, no cartesian, equals the exact scan
-    # (centroids = the true cluster axes; the default lowest-id seeds
-    # would all fall in cluster 0 and give radii too wide to prune)
-    vecs = _clustered_vecs(spark)
-    cents = spark.createDataFrame(
-        [(c, [1.0 if i == c else 0.0 for i in range(8)]) for c in range(4)],
-        "cent_id INT, cent_vec ARRAY<DOUBLE>",
-    )
-    pruned = S.embedding_neardup_pairs_pruned(
-        vecs, threshold=0.95, nlist=4, centroids=cents
-    )
-    plan = P.formatted_plan(pruned)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    exact = S.embedding_neardup_pairs_codegen(vecs, threshold=0.95)
-    got = {(r.id_1, r.id_2) for r in pruned.collect()}
-    want = {(r.id_1, r.id_2) for r in exact.collect()}
-    assert got == want and len(want) > 0
-
-    # diffuse fixture: stats price the blocks at ~n² -> flat scan plan
-    # (exercised through the operator directly — the CATALOG entry
-    # sim_embedding_neardup no longer routes here; it runs the
-    # within-cell SemDeDup scan, pinned fallback-free in
-    # test_semdedup_catalog_entry_has_no_flat_fallback)
-    from gcpdatapipelines_spark.io import read_table
-
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    fplan = P.formatted_plan(
-        S.embedding_neardup_pairs_pruned(emb, threshold=0.4, nlist=16)
-    )
-    assert (
-        "CartesianProduct" in fplan or "BroadcastNestedLoopJoin" in fplan
-    ), fplan
-
-
 def test_pack_chunks_window_partitions_by_shard(spark):
     """The packing cumsum must be a per-shard window — a global
     (empty-partition-spec) window would single-partition the corpus."""

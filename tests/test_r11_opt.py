@@ -178,6 +178,25 @@ def test_snapshot_drift_matches_countdistinct(spark):
     assert out[("v", "max")] == ("2.5", "9.0")
 
 
+def test_snapshot_drift_signed_zero_matches_countdistinct(spark):
+    """count(DISTINCT) treats 0.0 and -0.0 as one value; their string
+    forms differ, so the unpivoted count must fold signed zero first."""
+    from gcpdatapipelines_spark.operators.quality import snapshot_drift
+
+    a = spark.createDataFrame(
+        [(0.0, 0.0), (-0.0, -0.0), (1.5, 1.5), (None, None)],
+        "d DOUBLE, f FLOAT",
+    )
+    out = {
+        (r["column"], r["metric"]): r["before"]
+        for r in snapshot_drift(a, a, ["d", "f"]).collect()
+    }
+    want = a.agg(F.countDistinct("d"), F.countDistinct("f")).first()
+    assert tuple(want) == (2, 2)
+    assert out[("d", "n_distinct")] == str(want[0])
+    assert out[("f", "n_distinct")] == str(want[1])
+
+
 # ---------------------------------------------------------------------------
 # jaccard prefix: candidate-anchored verify == full formulation
 # ---------------------------------------------------------------------------

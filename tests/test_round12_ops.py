@@ -288,7 +288,7 @@ def test_winnowing_hashes_in_codegen_not_hof(spark):
     from gcpdatapipelines_spark.operators.text import winnowing_fingerprints
 
     d = read_table(spark, SF_SMOKE, "documents")
-    out = winnowing_fingerprints(d, "doc_id", "text", k=20, window=8, hash_fn="md5")
+    out = winnowing_fingerprints(d, "doc_id", "text", k=20, window=8)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "transform(" not in plan  # no interpreted HOF on the hot path
     assert "explode(sequence(" in plan

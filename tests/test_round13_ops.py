@@ -295,7 +295,7 @@ def test_winnowing_exchanges_before_explode_not_after(spark):
     from gcpdatapipelines_spark.operators.text import winnowing_fingerprints
 
     d = read_table(spark, "/root/testdata/sf0.001", "documents")
-    out = winnowing_fingerprints(d, "doc_id", "text", k=20, window=8, hash_fn="md5")
+    out = winnowing_fingerprints(d, "doc_id", "text", k=20, window=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # one explicit repartition on doc_id (pre-explode; AQE renders the
     # later distinct exchange only at runtime), and the window itself

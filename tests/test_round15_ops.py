@@ -6,8 +6,8 @@
   n*(n-1)/2 — the property that makes the 100 TB claim ("candidates
   grow ~linearly") falsifiable at test scale.
 - Shared-prep injection parity: the cached-index paths added in r10
-  (seeded cell assignment, geometric cell index, winnowing fingerprint
-  table, OPQ artifacts) must return results identical to the
+  (seeded cell assignment, winnowing fingerprint table, OPQ
+  artifacts) must return results identical to the
   self-building paths.
 - pq_encode_rotated rejects ragged/non-dense codebooks loudly (r9
   advice) instead of failing deep inside numpy.
@@ -85,7 +85,7 @@ def test_minhash_lsh_candidates_linear_on_planted_dups(spark):
     )
 
     docs, n = _planted_docs(spark)
-    banded = lsh_band_keys(docs, "doc_id", "text", 5, 64, 16, hash_fn="md5")
+    banded = lsh_band_keys(docs, "doc_id", "text", 5, 64, 16)
     n_cand = lsh_candidate_pairs(banded, "doc_id").count()
     n_planted_pairs = 40 * (4 * 3 // 2)  # clusters x C(dup,2)
     all_pairs = n * (n - 1) // 2
@@ -187,23 +187,6 @@ def test_semdedup_assigned_injection_parity(spark):
     assert b == i and len(b) > 0
 
 
-def test_neardup_blas_index_injection_parity(spark):
-    """neardup_pairs_blas(index=precomputed cell index) matches the
-    self-building path row-for-row."""
-    from gcpdatapipelines_spark.operators.similarity import (
-        _cell_index,
-        neardup_pairs_blas,
-    )
-
-    vecs, _ = _planted_vectors(spark, n_clusters=8, dup_per_cluster=3, n_unique=20)
-    base = neardup_pairs_blas(vecs, threshold=0.9, nlist=8)
-    idx = _cell_index(vecs, "vec_id", "embedding", 8)
-    inj = neardup_pairs_blas(vecs, threshold=0.9, nlist=8, index=idx)
-    b = sorted((r["id_1"], r["id_2"], round(r["sim"], 6)) for r in base.collect())
-    i = sorted((r["id_1"], r["id_2"], round(r["sim"], 6)) for r in inj.collect())
-    assert b == i and len(b) > 0
-
-
 def test_fingerprint_overlap_injection_parity(spark):
     """fingerprint_overlap_pairs(fingerprints=precomputed) matches the
     self-building path."""
@@ -213,9 +196,9 @@ def test_fingerprint_overlap_injection_parity(spark):
     )
 
     docs, _ = _planted_docs(spark, n_clusters=10, dup_per_cluster=3, n_unique=20)
-    kw = dict(k=20, window=8, min_shared=5, hash_fn="md5")
+    kw = dict(k=20, window=8, min_shared=5)
     base = fingerprint_overlap_pairs(docs, "doc_id", "text", **kw)
-    fp = winnowing_fingerprints(docs, "doc_id", "text", 20, 8, "md5").persist()
+    fp = winnowing_fingerprints(docs, "doc_id", "text", 20, 8).persist()
     inj = fingerprint_overlap_pairs(docs, "doc_id", "text", **kw, fingerprints=fp)
     b = sorted(map(tuple, base.collect()))
     i = sorted(map(tuple, inj.collect()))

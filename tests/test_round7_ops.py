@@ -88,7 +88,7 @@ def test_winnowing_md5_mode_same_pairs_semantics(spark):
         (r.id_1, r.id_2)
         for r in fingerprint_overlap_pairs(
             df, "doc_id", "text", k=8, window=4, min_shared=5,
-            max_df=None, hash_fn="md5",
+            max_df=None,
         ).collect()
     }
     assert (1, 2) in got
@@ -99,8 +99,7 @@ def test_winnowing_md5_fingerprints_are_hex_strings(spark):
     from gcpdatapipelines_spark.operators.text import winnowing_fingerprints
 
     df = spark.createDataFrame([(1, "abcdefghijklmnop")], "doc_id bigint, text string")
-    rows = winnowing_fingerprints(df, "doc_id", "text", k=4, window=2,
-                                  hash_fn="md5").collect()
+    rows = winnowing_fingerprints(df, "doc_id", "text", k=4, window=2).collect()
     assert rows and all(
         isinstance(r.fingerprint, str) and len(r.fingerprint) == 16 for r in rows
     )
@@ -159,25 +158,6 @@ def test_ks_two_sample_ignores_nulls(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_minhash_md5_mode_finds_same_neardups(spark):
-    from gcpdatapipelines_spark.operators.dedup import minhash_lsh_pairs
-
-    base = "the quick brown fox jumps over the lazy dog again and " * 5
-    rows = [
-        (1, base),
-        (2, base + "with one extra tail clause"),
-        (3, "entirely different text about columnar shuffles " * 6),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {
-        (r.id_1, r.id_2)
-        for r in minhash_lsh_pairs(
-            df, "doc_id", "text", n=5, threshold=0.5, hash_fn="md5"
-        ).collect()
-    }
-    assert (1, 2) in got and all(3 not in p for p in got)
-
-
 def test_minhash_perm_constants_are_valid(spark):
     from gcpdatapipelines_spark.operators.dedup import (
         _MINHASH_P,
@@ -187,26 +167,6 @@ def test_minhash_perm_constants_are_valid(spark):
     consts = minhash_perm_constants(64)
     assert len(consts) == 64 and len(set(consts)) == 64
     assert all(0 < a < _MINHASH_P and 0 <= b < _MINHASH_P for a, b in consts)
-
-
-def test_simhash_md5_planted_pair(spark):
-    from gcpdatapipelines_spark.operators.dedup import simhash_pairs_md5
-
-    # 40 distinct tokens: one extra token flips only bits whose vote
-    # margin was exactly +-1 — a handful of the 64 (each bit's margin
-    # is a 40-step random walk), comfortably under the pigeonhole cut
-    base = " ".join(f"word{i}" for i in range(40))
-    rows = [
-        (1, base),
-        (2, base + " extra"),  # one extra token: tiny Hamming drift
-        (3, "totally unrelated corpus about broadcast joins " * 5),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {
-        (r.id_1, r.id_2): r.hamming
-        for r in simhash_pairs_md5(df, "doc_id", "text", max_hamming=8).collect()
-    }
-    assert (1, 2) in got and all(3 not in p for p in got)
 
 
 def test_simhash_md5_signature_words_are_32bit(spark):
@@ -224,10 +184,8 @@ def test_bootstrap_md5_mode_deterministic_and_sane(spark):
 
     rows = [(i, 10.0 + (i % 7)) for i in range(400)]
     df = spark.createDataFrame(rows, "event_id bigint, value double")
-    r1 = bootstrap_mean_ci(df, "event_id", "value", replicates=50,
-                           hash_fn="md5").collect()[0]
-    r2 = bootstrap_mean_ci(df, "event_id", "value", replicates=50,
-                           hash_fn="md5").collect()[0]
+    r1 = bootstrap_mean_ci(df, "event_id", "value", replicates=50).collect()[0]
+    r2 = bootstrap_mean_ci(df, "event_id", "value", replicates=50).collect()[0]
     assert (r1.ci_lo, r1.ci_hi) == (r2.ci_lo, r2.ci_hi)  # deterministic
     assert r1.ci_lo <= r1.mean <= r1.ci_hi
     assert 0 < r1.ci_hi - r1.ci_lo < 1.0  # sane width for sd~2, n=400

@@ -430,14 +430,10 @@ def test_incremental_precomputed_keys_path_identical(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     corpus = df.filter("doc_id < 30")
     inc = df.filter("doc_id >= 30")
-    state = lsh_band_keys(corpus, "doc_id", "text", hash_fn="md5")
-    fresh, _ = incremental_neardup(
-        inc, state, "doc_id", "text", hash_fn="md5"
-    )
-    pre = lsh_band_keys(inc, "doc_id", "text", hash_fn="md5")
-    fast, _ = incremental_neardup(
-        inc, state, "doc_id", "text", hash_fn="md5", precomputed_keys=pre
-    )
+    state = lsh_band_keys(corpus, "doc_id", "text")
+    fresh, _ = incremental_neardup(inc, state, "doc_id", "text")
+    pre = lsh_band_keys(inc, "doc_id", "text")
+    fast, _ = incremental_neardup(inc, state, "doc_id", "text", precomputed_keys=pre)
     assert sorted(r.doc_id for r in fresh.collect()) == sorted(
         r.doc_id for r in fast.collect()
     )

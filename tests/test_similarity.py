@@ -111,25 +111,9 @@ def test_codegen_neardup_bit_identical_to_lambda(spark):
     assert lam == cg and lam
 
 
-def test_pruned_equals_exact_on_fixture(spark):
-    """The pruned default must be bit-identical to the exact O(n^2)
-    scan — the soundness guarantee users rely on."""
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    exact = {
-        (r["id_1"], r["id_2"]): r["sim"]
-        for r in S.embedding_neardup_pairs_codegen(emb, threshold=0.3).collect()
-    }
-    pruned = {
-        (r["id_1"], r["id_2"]): r["sim"]
-        for r in S.embedding_neardup_pairs_pruned(emb, threshold=0.3, nlist=16).collect()
-    }
-    assert pruned == exact and pruned
-
-
 def _clustered_vectors(spark, per_cluster=40, dim=8):
     """Three tight clusters around orthogonal axes + planted near-dups;
-    at threshold 0.95 only intra-cluster pairs qualify, so cross-axis
-    cell pairs are provably prunable."""
+    at threshold 0.95 only intra-cluster pairs qualify."""
     rows = []
     vid = 0
     # interleave clusters across ids so the lowest-id centroid sample
@@ -145,48 +129,17 @@ def _clustered_vectors(spark, per_cluster=40, dim=8):
 
 
 @pytest.mark.slow
-def test_pruned_equals_exact_clustered_high_threshold(spark):
+def test_codegen_equals_exact_clustered_high_threshold(spark):
     vecs = _clustered_vectors(spark)
     exact = {
         (r["id_1"], r["id_2"]): r["sim"]
         for r in S.embedding_neardup_pairs(vecs, threshold=0.95).collect()
     }
-    pruned = {
+    cg = {
         (r["id_1"], r["id_2"]): r["sim"]
-        for r in S.embedding_neardup_pairs_pruned(vecs, threshold=0.95, nlist=6).collect()
+        for r in S.embedding_neardup_pairs_codegen(vecs, threshold=0.95).collect()
     }
-    assert pruned == exact and pruned
-
-
-def test_cell_pair_pruning_actually_prunes(spark):
-    """On clustered data at a near-dup threshold the candidate cell
-    pairs must be a strict subset of all nlist^2 pairs — the operator
-    must not silently degrade to an all-pairs scan."""
-    vecs = _clustered_vectors(spark)
-    _, cells = S._cell_index(vecs, "vec_id", "embedding", 6)
-    n_cells = cells.count()
-    n_pairs = S._candidate_cell_pairs(cells, 0.95).count()
-    assert n_pairs < n_cells * n_cells, (n_pairs, n_cells)
-
-
-@pytest.mark.slow
-def test_pruned_with_trained_centroids_equals_exact(spark):
-    """Trained (k-means) centroids only change PRUNING POWER, never
-    the result — equality with the exact scan must hold for any
-    centroid frame."""
-    vecs = _clustered_vectors(spark)
-    _, centroids = S.ivf_build_kmeans(vecs, nlist=4)
-    exact = {
-        (r["id_1"], r["id_2"]): r["sim"]
-        for r in S.embedding_neardup_pairs(vecs, threshold=0.95).collect()
-    }
-    pruned = {
-        (r["id_1"], r["id_2"]): r["sim"]
-        for r in S.embedding_neardup_pairs_pruned(
-            vecs, threshold=0.95, nlist=4, centroids=centroids
-        ).collect()
-    }
-    assert pruned == exact and pruned
+    assert cg == exact and cg
 
 
 def test_pq_codebook_and_code_shapes(spark):
@@ -211,6 +164,37 @@ def test_pq_identical_vectors_share_codes(spark):
     cb = S.pq_build(vecs, m=4, ksub=2, max_iter=5)
     codes = {r["vec_id"]: r["code"] for r in S.pq_encode(vecs, cb).collect()}
     assert codes[0] == codes[1]
+
+
+def test_pq_encode_and_topk_reject_inconsistent_metadata(spark):
+    """Caller-supplied codebook metadata is checked on the driver: a
+    ragged ``entries`` grid or a malformed m/dsub raises ValueError
+    before any Spark job runs."""
+    vecs = spark.createDataFrame(
+        [Row(vec_id=0, embedding=[1.0, 0.0, 0.0, 1.0])], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    )
+    grid = [Row(sub_id=s, cent_id=c, cent_vec=[float(c), 0.0]) for s in (0, 1) for c in (0, 1)]
+    cb = spark.createDataFrame(grid, "sub_id INT, cent_id INT, cent_vec ARRAY<DOUBLE>")
+    ragged = {
+        "cent_ids not dense": grid[:3],  # sub 1 lacks centroid 1
+        "sub_ids not dense": [r for r in grid if r.sub_id == 1],
+        "have dim": grid[:3] + [Row(sub_id=1, cent_id=1, cent_vec=[1.0])],
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("pq_metadata_check", "driver-side validation only")
+    try:
+        for msg, entries in ragged.items():
+            with pytest.raises(ValueError, match=msg):
+                S.pq_encode(vecs, cb, entries=entries)
+        qs = vecs.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+        for m, dsub in [(2, None), (0, 2), (2, 0)]:
+            with pytest.raises(ValueError, match="positive ints"):
+                S.pq_topk(vecs, cb, qs, m=m, dsub=dsub)
+        assert list(sc.statusTracker().getJobIdsForGroup("pq_metadata_check")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    codes = S.pq_encode(vecs, cb, entries=grid).collect()
+    assert [list(r.code) for r in codes] == [[1, 0]]
 
 
 @pytest.mark.slow
@@ -516,7 +500,7 @@ def test_hard_negatives_excludes_same_label_and_ranks(spark):
 # diverse_kcenter
 # ---------------------------------------------------------------------------
 
-from gcpdatapipelines_spark.operators.similarity import diverse_kcenter  # noqa: E402
+from gcpdatapipelines_spark.operators.similarity import diverse_kcenter_portable  # noqa: E402
 
 
 def test_diverse_kcenter_picks_the_spread(spark):
@@ -529,7 +513,7 @@ def test_diverse_kcenter_picks_the_spread(spark):
         (5, [0.0, 0.0, 1.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    out = diverse_kcenter(emb, k=3).collect()
+    out = diverse_kcenter_portable(emb, k=3, dim=3).collect()
     picked = {r.vec_id for r in out}
     assert out[0].vec_id == 1 and out[0].rank == 0  # deterministic seed
     assert picked == {1, 3, 5} or picked == {1, 5, 3}
@@ -540,29 +524,30 @@ def test_diverse_kcenter_picks_the_spread(spark):
 
 @pytest.mark.slow
 def test_diverse_kcenter_deterministic_under_partitioning(spark):
+    # many tied vectors: the id tiebreak must decide, in the distributed
+    # rounds as well as the driver replay
     rows = [(i, [float((i * 7) % 5), float((i * 3) % 4), 1.0]) for i in range(40)]
     emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    a = [(r.rank, r.vec_id) for r in diverse_kcenter(emb, k=5).collect()]
-    b = [(r.rank, r.vec_id) for r in diverse_kcenter(emb.repartition(9), k=5).collect()]
-    assert a == b
+
+    def picks(df, **kw):
+        out = diverse_kcenter_portable(df, k=5, dim=3, **kw).collect()
+        return [(r.rank, r.vec_id) for r in out]
+
+    a = picks(emb)
+    assert a == picks(emb.repartition(9))
+    assert a == picks(emb.repartition(9), local_threshold=0)
 
 
-def test_diverse_kcenter_portable_agrees_with_dgemm_tier(spark):
-    """The portable (codegen literal-scan) tier selects the SAME
-    traversal as the Arrow-dgemm production tier on the fixture — the
-    two differ only in float summation order, which the 9-dp
-    truncation + id tiebreak absorbs."""
-    from gcpdatapipelines_spark.operators.similarity import diverse_kcenter_portable
-
+def test_diverse_kcenter_portable_local_tier_matches_distributed_on_fixture(spark):
+    """The driver replay and the distributed codegen rounds select the
+    same traversal with bit-identical scores on the dim-64 fixture."""
     emb = read_table(spark, SF_SMOKE, "embeddings")
-    a = [(r.rank, r.vec_id) for r in diverse_kcenter(emb, k=5).collect()]
-    b = [(r.rank, r.vec_id) for r in diverse_kcenter_portable(emb, k=5).collect()]
-    assert a == b
+    a = [tuple(r) for r in diverse_kcenter_portable(emb, k=5).collect()]
+    b = [tuple(r) for r in diverse_kcenter_portable(emb, k=5, local_threshold=0).collect()]
+    assert a == b and len(a) == 5
 
 
 def test_diverse_kcenter_portable_partitioning_invariant(spark):
-    from gcpdatapipelines_spark.operators.similarity import diverse_kcenter_portable
-
     emb = read_table(spark, SF_SMOKE, "embeddings")
     a = [
         (r.rank, r.vec_id, r.max_cos_to_prior)

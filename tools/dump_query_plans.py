@@ -1,6 +1,8 @@
-"""Dump .explain('formatted') for named queries to plans/r11/<q>_<tag>.txt.
+"""Dump .explain('formatted') for named queries to <out_dir>/<q>_<tag>.txt.
 
-    python tools/dump_r11_plans.py before q1 q2 ...
+    python tools/dump_query_plans.py plans/r11 before q1 q2 ...
+
+A relative out_dir is resolved against the repository root.
 """
 from __future__ import annotations
 
@@ -15,15 +17,14 @@ import __spark_entry__ as entry_mod
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plan-dump")
     queries = entry_mod.queries()
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r11",
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), out_dir
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
