@@ -17,9 +17,12 @@ flow with the DataFrame — no side-input plumbing needed).
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -60,6 +63,14 @@ def bq_string_schema_to_ddl(compact: str) -> str:
     return ", ".join(parts)
 
 
+def _as_ddl(schema: str) -> str:
+    """A compact BQ schema string ('ID:INTEGER,...') as DDL; a DDL
+    string ('ID BIGINT, ...') passes through unchanged."""
+    if ":" in schema and " " not in schema.split(",")[0].strip():
+        return bq_string_schema_to_ddl(schema)
+    return schema
+
+
 def bq_dict_schema_to_ddl(fields: list[dict]) -> str:
     """JSON-dict schema ({'name','type','mode'} per field, reference
     csv_to_bq_NYC.py:10-33) -> Spark DDL string. REQUIRED/NULLABLE modes
@@ -91,9 +102,7 @@ def read_csv(
     read_csv_no_pandas.py:18-24 is matched."""
     reader = spark.read.option("header", str(header).lower())
     if schema is not None:
-        if ":" in schema and " " not in schema.split(",")[0].strip():
-            schema = bq_string_schema_to_ddl(schema)
-        reader = reader.schema(schema)
+        reader = reader.schema(_as_ddl(schema))
     elif infer:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path)
@@ -124,9 +133,7 @@ def read_csv_with_rejects(
     scans or write the parsed frame to a parquet intermediate and read
     good/rejects from that (the caller owns the lifecycle either
     way — this function never unpersists)."""
-    if ":" in schema and " " not in schema.split(",")[0].strip():
-        schema = bq_string_schema_to_ddl(schema)
-    full = schema + ", __corrupt STRING"
+    full = _as_ddl(schema) + ", __corrupt STRING"
     df = (
         spark.read.option("header", str(header).lower())
         .option("mode", "PERMISSIVE")
@@ -153,11 +160,9 @@ def read_jsonl(
     or BQ compact string) the read is single-pass; without it Spark
     runs an extra schema-inference scan — fine interactively, pass the
     schema in pipelines (the S5-vs-S1 trade, SURVEY §2.1)."""
-    if schema is not None and ":" in schema and " " not in schema.split(",")[0].strip():
-        schema = bq_string_schema_to_ddl(schema)
     r = spark.read
     if schema is not None:
-        r = r.schema(schema)
+        r = r.schema(_as_ddl(schema))
     return r.json(path)
 
 
@@ -171,9 +176,7 @@ def read_jsonl_with_rejects(
     same contract and PERMISSIVE/corrupt-sentinel mechanics as
     read_csv_with_rejects (including the ``cache`` lifecycle note
     there). Returns (good, rejects(raw))."""
-    if ":" in schema and " " not in schema.split(",")[0].strip():
-        schema = bq_string_schema_to_ddl(schema)
-    full = schema + ", __corrupt STRING"
+    full = _as_ddl(schema) + ", __corrupt STRING"
     df = (
         spark.read.option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "__corrupt")
@@ -205,6 +208,93 @@ def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> N
 # TimestampType (us) here — same truncation DuckDB applies on read.
 _NANOS_TS_COLS = {"events": ("ts",)}
 
+# read_table's schema memo: path -> (key, inferred footer schema). The
+# key is (application id, _INFERENCE_CONFS values, file listing), so a
+# new session, a conf flip or any rewrite of the table misses. Only the
+# schema is kept, never a DataFrame: every read still builds a fresh
+# plan over Spark's own file listing. Bounded: oldest path out first.
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMA_MEMO_MAX = 256
+_SCHEMA_MEMO_LOCK = threading.Lock()
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_GLOB_CHARS = frozenset("*?[{")
+
+
+def _local_listing(path: str) -> tuple | None:
+    """(relative path, size, mtime ns) of every file under ``path``
+    (or of ``path`` itself when it is a file), sorted; None when the
+    path does not exist. Hidden and ``_``-prefixed files are kept:
+    including more than Spark reads can only cause a miss."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((".", st.st_size, st.st_mtime_ns),)
+        out = []
+        for dirpath, _dirs, files in os.walk(path, followlinks=True):
+            for f in files:
+                full = os.path.join(dirpath, f)
+                fst = os.stat(full)
+                out.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
+def _schema_memo_key(spark: SparkSession, path: str) -> tuple | None:
+    """read_table's memo key for ``path``, built without a Spark job in
+    a fixed number of py4j calls; None when the path cannot be
+    fingerprinted locally (a non-local file system, a glob, a missing
+    path, a session without a JVM), which skips the memo."""
+    jsc = getattr(spark, "_jsc", None)
+    if jsc is None or _GLOB_CHARS.intersection(path):
+        return None
+    sc = jsc.sc()
+    scheme, sep, rest = path.partition(":")
+    if sep and len(scheme) > 1:
+        # an explicit scheme: only the local file system is listed here
+        if scheme != "file":
+            return None
+        local = "/" + rest.lstrip("/")
+    else:
+        default_fs = sc.hadoopConfiguration().get("fs.defaultFS") or "file:///"
+        if not default_fs.startswith("file:"):
+            return None
+        local = path
+    listing = _local_listing(local)
+    if listing is None:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return (sc.applicationId(), confs, listing)
+
+
+def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the footer schema inferred
+    by an earlier read of the same unchanged table in this session
+    (the inference costs one Spark job; a read with a given schema
+    costs none)."""
+    key = _schema_memo_key(spark, path)
+    hit = _SCHEMA_MEMO.get(path) if key is not None else None
+    if hit is not None and hit[0] == key:
+        df = spark.read.schema(hit[1]).parquet(path)
+        # the relation must surface exactly the inferred schema (order
+        # and types of partition columns included); otherwise infer
+        if df.schema == hit[1]:
+            return df
+    df = spark.read.parquet(path)
+    if key is not None:
+        with _SCHEMA_MEMO_LOCK:
+            _SCHEMA_MEMO.pop(path, None)
+            if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+                _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+            _SCHEMA_MEMO[path] = (key, df.schema)
+    return df
+
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S2: table scan (BigQuery table -> warehouse parquet).
@@ -226,13 +316,28 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (unix_micros) shift by the offset. That was w17_session_table's
     driver-red signature (rows ✓ schema ✓ hash ✗, every
     session_start_us/_end_us off by exactly the zone offset).
+
+    Schema memo: inferring a parquet schema runs a Spark job that reads
+    the footers. The inferred schema is memoized per table path and a
+    repeat read of an unchanged table passes it to the reader, so it
+    runs no job. The memo key is the Spark application id, the values
+    of the parquet confs that change inference (``nanosAsLong``,
+    ``inferTimestampNTZ.enabled``, ``binaryAsString``,
+    ``int96AsTimestamp``, ``mergeSchema``) and the table's file listing
+    (relative paths, sizes, modification times, read with ``os.stat``).
+    A new session, a flipped conf, or any overwrite, append or deletion
+    of a file misses and re-infers. Only the schema is kept: each call
+    returns a new DataFrame (two reads of one table still self-join
+    without ambiguity) over Spark's own listing at call time. Tables on
+    a non-local file system, glob paths and missing paths are not
+    memoized. At most 256 paths are kept, oldest out first.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name in _NANOS_TS_COLS:
         # runtime-set so sessions built without session.get_spark (the
         # driver creates its own) can still scan TIMESTAMP(NANOS)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet_memo(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col in _NANOS_TS_COLS.get(name, ()):
         field = df.schema[col] if col in df.columns else None
         if field is not None and field.dataType.simpleString() == "bigint":

@@ -3,7 +3,11 @@
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark import io
@@ -83,6 +87,115 @@ def test_events_ts_is_timestamp(spark, sf_dir):
     """TIMESTAMP(NANOS) parquet surfaces as a proper TimestampType."""
     ev = io.read_table(spark, sf_dir, "events")
     assert dict(ev.dtypes)["ts"] == "timestamp"
+
+
+# ---------------------------------------------------------------------------
+# read_table schema memo
+# ---------------------------------------------------------------------------
+
+
+def _jobs_started_by(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted per job group
+    with the status tracker. A one-task marker job runs in a second
+    group after fn: the listener bus delivers job starts in order, so
+    once the marker is visible every job fn started is visible too."""
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    group, marker = f"io-memo-{tag}", f"io-memo-marker-{tag}"
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "partitioned"])
+def test_read_table_repeat_read_runs_no_job(spark, tmp_path, partitioned):
+    """A repeat read_table of an unchanged table takes its schema from
+    the session memo: no footer-inference job, same schema and rows."""
+    df = spark.createDataFrame(
+        [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")], "id BIGINT, v STRING, day STRING"
+    )
+    (df.write.partitionBy("day") if partitioned else df.write).parquet(str(tmp_path / "t.parquet"))
+    first, jobs_first = _jobs_started_by(spark, lambda: io.read_table(spark, str(tmp_path), "t"))
+    again, jobs_again = _jobs_started_by(spark, lambda: io.read_table(spark, str(tmp_path), "t"))
+    assert jobs_first >= 1  # the count sees the inference job
+    assert jobs_again == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_read_table_memo_misses_on_overwrite_append_and_conf(spark, tmp_path):
+    """Each change that can alter the inferred schema re-infers: an
+    overwrite with another schema, an appended file (visible under
+    mergeSchema) and a flipped nanosAsLong (whose new answer for a
+    TIMESTAMP(NANOS) column is Spark's inference error)."""
+    d, path = str(tmp_path), str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a")], "id BIGINT, v STRING").write.parquet(path)
+    io.read_table(spark, d, "t")
+    assert io.read_table(spark, d, "t").columns == ["id", "v"]
+
+    io.write_overwrite(spark.createDataFrame([(2, 2.5)], "id BIGINT, w DOUBLE"), path)
+    df = io.read_table(spark, d, "t")
+    assert df.dtypes == [("id", "bigint"), ("w", "double")]
+    assert [tuple(r) for r in df.collect()] == [(2, 2.5)]
+
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        io.read_table(spark, d, "t")
+        io.write_append(
+            spark.createDataFrame([(3, 3.5, "z")], "id BIGINT, w DOUBLE, x STRING"), path
+        )
+        df = io.read_table(spark, d, "t")
+        assert sorted(df.columns) == ["id", "w", "x"]
+        assert sorted(tuple(r[c] for c in ("id", "w", "x")) for r in df.collect()) == [
+            (2, 2.5, None),
+            (3, 3.5, "z"),
+        ]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = 1_700_000_000_123_456_789
+    pq.write_table(
+        pa.table({"id": [1], "ts": pa.array([ns], pa.timestamp("ns"))}),
+        str(tmp_path / "nanos.parquet"),
+    )
+    before = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    try:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        io.read_table(spark, d, "nanos")
+        df = io.read_table(spark, d, "nanos")
+        assert dict(df.dtypes)["ts"] == "bigint"
+        assert df.collect()[0]["ts"] == ns
+        # without nanosAsLong Spark has no type for TIMESTAMP(NANOS):
+        # re-inference must raise, not reuse the memoized bigint
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            io.read_table(spark, d, "nanos")
+    finally:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", before)
+
+
+def test_read_table_two_reads_self_join(spark, tmp_path):
+    """Two reads of one table (the second served by the schema memo)
+    are independent relations: a self-join on them is not ambiguous."""
+    spark.range(5).write.parquet(str(tmp_path / "t.parquet"))
+    a = io.read_table(spark, str(tmp_path), "t")
+    b = io.read_table(spark, str(tmp_path), "t")
+    pairs = a.join(b, a["id"] == b["id"] + 1).select(a["id"].alias("x"), b["id"].alias("y"))
+    assert sorted(tuple(r) for r in pairs.collect()) == [(i + 1, i) for i in range(4)]
 
 
 def test_csv_rejects_quarantined(spark, tmp_path):

@@ -251,6 +251,36 @@ def test_srp_rejects_uneven_bands(spark):
         S.srp_signatures(vecs, nbits=10, bands=4)
 
 
+def test_srp_axes_finds_every_sign_preserving_neardup(spark):
+    """Recall pin for sim_srp_lsh's configuration (64 bits, 4 bands,
+    axes mode, floor scorer). Each planted twin keeps every coordinate's
+    sign but rescales its magnitude (cosine ~0.9, never an exact
+    duplicate), so all four band keys agree and banding must surface
+    every twin; verification then scores it at its true cosine."""
+    import numpy as np
+
+    emb = read_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    rng = np.random.default_rng(11)
+    twins, want = [], {}
+    for r in emb.orderBy("vec_id").limit(8).collect():
+        v = np.asarray(r["embedding"], dtype=np.float32)
+        twin = (v * rng.uniform(0.2, 1.8, v.size)).astype(np.float32)
+        assert np.array_equal(np.signbit(twin), np.signbit(v))
+        cos = float(v.astype(np.float64) @ twin / (np.linalg.norm(v) * np.linalg.norm(twin)))
+        assert 0.8 < cos < 0.97, cos
+        twins.append((r["vec_id"] + 100_000, twin.tolist()))
+        want[(r["vec_id"], r["vec_id"] + 100_000)] = cos
+    corpus = emb.unionByName(spark.createDataFrame(twins, emb.schema))
+    out = S.srp_lsh_pairs(
+        corpus, threshold=0.75, nbits=64, bands=4, mode="axes", floor_sim=True
+    )
+    got = {(r["id_1"], r["id_2"]): r["sim"] for r in out.collect()}
+    missing = sorted(set(want) - set(got))
+    assert not missing, f"sign-preserving twins not found: {missing}"
+    for pair, cos in want.items():
+        assert got[pair] == pytest.approx(cos, abs=1e-5)
+
+
 @pytest.mark.slow
 def test_srp_lsh_pairs_subset_and_recall(spark):
     """Verified SRP candidates must be a SUBSET of the exact pair set
