@@ -693,37 +693,22 @@ def _sq_l2(a, b):
     )
 
 
-def _sub_vectors(
-    df: DataFrame,
-    codebooks: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int | None = None,
-    dsub: int | None = None,
+def _sub_d2(
+    df: DataFrame, codebooks: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(id, sub_id, sub_vec): each vector split into the codebooks'
-    m subspaces of dsub dims — the ONE place the subspace slicing
-    arithmetic lives, shared by encode (corpus side) and ADC query
-    (LUT side) so they can never drift apart.
-
-    ``m``/``dsub``: pass when known to skip the two metadata jobs
-    (each ``first()`` is a full driver round trip; r11 — the ADC
-    pipeline paid 4 such jobs per call before any data moved)."""
-    if m is None:
-        m = codebooks.agg(F.max("sub_id")).first()[0] + 1
-    if dsub is None:
-        dsub = codebooks.select(F.size("cent_vec").alias("d")).first()["d"]
-    return df.select(
+    """(id, sub_id, cent_id, d2): squared L2 from each vector's sub_id-th
+    slice to every centroid of that subspace — the ONE place the
+    plan-side subspace slicing lives, shared by encode (window path)
+    and the ADC LUT so they can never drift apart. Each codebook row
+    sizes its own slice (``size(cent_vec)``) inside the plan, so
+    building the frame runs no Spark job."""
+    dsub = F.size("cent_vec")
+    sub_vec = F.slice(F.col(vec_col), F.col("sub_id") * dsub + 1, dsub)
+    return df.crossJoin(F.broadcast(codebooks)).select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.transform(
-                    F.slice(F.col(vec_col), s * dsub + 1, dsub),
-                    lambda x: x.cast("double"),
-                ),
-            )
-        ).alias("sub_id", "sub_vec"),
+        "sub_id",
+        "cent_id",
+        _sq_l2(F.transform(sub_vec, lambda x: x.cast("double")), F.col("cent_vec")).alias("d2"),
     )
 
 
@@ -818,13 +803,7 @@ def pq_encode(
 
     from pyspark.sql import Window
 
-    subs = _sub_vectors(vectors, codebooks, id_col, vec_col)
-    scored = subs.join(F.broadcast(codebooks), "sub_id").select(
-        id_col,
-        "sub_id",
-        "cent_id",
-        _sq_l2(F.col("sub_vec"), F.col("cent_vec")).alias("d2"),
-    )
+    scored = _sub_d2(vectors, codebooks, id_col, vec_col)
     w = Window.partitionBy(id_col, "sub_id").orderBy("d2", "cent_id")
     best = (
         scored.withColumn("__r", F.row_number().over(w))
@@ -850,17 +829,10 @@ def pq_topk(
     q_vec_col: str = "q_vec",
     k: int = 10,
     exclude_self: bool = True,
-    m: int | None = None,
-    dsub: int | None = None,
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance computation (ADC):
     dist(q, x) ~ sum_m ||q_m - cent[m][code_m(x)]||^2, read from a
-    per-query lookup table. ``m``/``dsub``: pass when known to skip
-    the per-call metadata jobs (see :func:`_sub_vectors`); pass both
-    (a half-known shape still costs a job) as positive ints, else
-    ValueError. Their agreement with ``codebooks`` is the caller's
-    contract: checking it would cost the job they exist to skip, so
-    derive them from the same collected rows that pq_encode validates.
+    per-query lookup table (:func:`_sub_d2`: no metadata job).
 
     The LUT (q x m x ksub rows) is a broadcast join of the query
     subvectors against the codebooks; the corpus side only explodes
@@ -870,18 +842,7 @@ def pq_topk(
     quality is recall-tested against brute force)."""
     from pyspark.sql import Window
 
-    if (m, dsub) != (None, None) and not all(
-        isinstance(x, int) and x > 0 for x in (m, dsub)
-    ):
-        raise ValueError(f"pq_topk: m={m}, dsub={dsub} must both be positive ints")
-    lut = _sub_vectors(queries, codebooks, q_id_col, q_vec_col, m, dsub).join(
-        F.broadcast(codebooks), "sub_id"
-    ).select(
-        q_id_col,
-        "sub_id",
-        "cent_id",
-        _sq_l2(F.col("sub_vec"), F.col("cent_vec")).alias("d2"),
-    )
+    lut = _sub_d2(queries, codebooks, q_id_col, q_vec_col)
     code_rows = codes.select(
         id_col, F.posexplode(F.col("code")).alias("sub_id", "cent_id")
     )

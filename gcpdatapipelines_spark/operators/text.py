@@ -183,7 +183,7 @@ def fingerprint_overlap_pairs(
     ``fingerprints``: a precomputed (persisted) winnowing_fingerprints
     frame for the same (df, k, window) — three consumers
     (df-cap counts + both self-join sides) read it, so callers with a
-    corpus-scoped cache (queries._winnowing_fp_cached) skip the triple
+    corpus-scoped cache (the queries._winnowing_fp prep) skip the triple
     recompute. Identical results either way."""
     # deliberately NOT cached operator-internally: an internal cache()
     # cannot unpersist under the lazy return contract, and measured

@@ -10,9 +10,10 @@ local[N] for tests and on a 1000-executor cluster unchanged:
   This automates the reference's hand-rolled broadcast side-input join
   (reference pipeline.py:61) and its manual project-then-shuffle.
 - Arrow on: columnar Python<->JVM transfer for the few Pandas-UDF paths.
-- shuffle.partitions default sized by env (32 locally); on a real
-  cluster AQE coalesces from a higher initial number, so this is a
-  floor not a tuning knob.
+- local[N] and shuffle.partitions default to the cores this process
+  may run on ($SPARK_GRAFT_CPUS overrides); on a real cluster AQE
+  coalesces from a higher initial number, so this is a floor not a
+  tuning knob.
 """
 
 from __future__ import annotations
@@ -23,8 +24,6 @@ import warnings
 from pyspark.sql import SparkSession
 
 from .blas import pin_blas_threads
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Conf tag get_spark stamps on sessions it builds, so
 # ensure_engine_confs can tell engine-owned sessions from foreign ones
@@ -98,15 +97,14 @@ def get_spark(
     """Build (or reuse) the engine's SparkSession.
 
     On a cluster, pass ``master=None`` and let spark-submit decide; in
-    tests/bench we default to ``local[$SPARK_GRAFT_CPUS]``.
+    tests/bench we default to ``local[$SPARK_GRAFT_CPUS]``. Both that
+    and the shuffle partition count default to the number of cores
+    this process may run on (its CPU affinity).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

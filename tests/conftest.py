@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -51,3 +53,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def jobs_started_by(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted per job group
+    with the status tracker. A one-task marker job runs in a second
+    group after fn: the listener bus delivers job starts in order, so
+    once the marker is visible every job fn started is visible too."""
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    group, marker = f"jobs-{tag}", f"jobs-marker-{tag}"
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))

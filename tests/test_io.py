@@ -3,14 +3,13 @@
 from __future__ import annotations
 
 import os
-import time
-import uuid
 
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark import io
+from tests.conftest import jobs_started_by
 
 
 def test_bq_string_schema_to_ddl():
@@ -94,30 +93,6 @@ def test_events_ts_is_timestamp(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _jobs_started_by(spark, fn):
-    """(fn(), number of Spark jobs fn started), counted per job group
-    with the status tracker. A one-task marker job runs in a second
-    group after fn: the listener bus delivers job starts in order, so
-    once the marker is visible every job fn started is visible too."""
-    sc = spark.sparkContext
-    tag = uuid.uuid4().hex
-    group, marker = f"io-memo-{tag}", f"io-memo-marker-{tag}"
-    try:
-        sc.setJobGroup(group, group)
-        out = fn()
-        sc.setJobGroup(marker, marker)
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(marker):
-        assert time.monotonic() < deadline, "marker job never reached the status tracker"
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "partitioned"])
 def test_read_table_repeat_read_runs_no_job(spark, tmp_path, partitioned):
     """A repeat read_table of an unchanged table takes its schema from
@@ -126,8 +101,8 @@ def test_read_table_repeat_read_runs_no_job(spark, tmp_path, partitioned):
         [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")], "id BIGINT, v STRING, day STRING"
     )
     (df.write.partitionBy("day") if partitioned else df.write).parquet(str(tmp_path / "t.parquet"))
-    first, jobs_first = _jobs_started_by(spark, lambda: io.read_table(spark, str(tmp_path), "t"))
-    again, jobs_again = _jobs_started_by(spark, lambda: io.read_table(spark, str(tmp_path), "t"))
+    first, jobs_first = jobs_started_by(spark, lambda: io.read_table(spark, str(tmp_path), "t"))
+    again, jobs_again = jobs_started_by(spark, lambda: io.read_table(spark, str(tmp_path), "t"))
     assert jobs_first >= 1  # the count sees the inference job
     assert jobs_again == 0
     assert again.schema == first.schema

@@ -137,23 +137,17 @@ def test_srp_axes_nan_bit_matches_sql_sign_test(spark):
 
 
 def test_doc_tokens_cache_partitioning_feeds_groupby(spark, sf_dir):
-    """_doc_tokens_cached repartitions by doc_id ONCE at cache fill;
+    """The _doc_tokens prep repartitions by doc_id ONCE at cache fill;
     every consumer aggregating on doc_id must reuse that partitioning
     with ZERO additional exchanges (the r8 change's whole point — one
-    cheap narrow-row shuffle before a many-pass cache)."""
+    cheap narrow-row shuffle before a many-pass cache). The registry
+    re-persists an entry an earlier test's spark.catalog.clearCache()
+    dropped, so the plan always has an InMemoryRelation to anchor on."""
     from pyspark.sql import functions as F
 
     from gcpdatapipelines_spark import queries as Q
 
-    # build a FRESH cache entry: an earlier test's
-    # spark.catalog.clearCache() (test_round12_ops) unpersists the
-    # frame while the prep dict still holds it, and an unpersisted
-    # plan has no InMemoryRelation to anchor the assertion on
-    key = (spark.sparkContext.applicationId, sf_dir, "tokens")
-    prior = Q._PREP_CACHE.pop(key, None)
-    if prior is not None:
-        prior.unpersist()  # don't leak the displaced entry's storage
-    toks = Q._doc_tokens_cached(spark, sf_dir)
+    toks = Q._doc_tokens(spark, sf_dir)
     agg = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
     agg.collect()
     plan = agg._jdf.queryExecution().executedPlan().toString()
@@ -163,8 +157,6 @@ def test_doc_tokens_cache_partitioning_feeds_groupby(spark, sf_dir):
     assert "Exchange" not in outer, outer
     # and the cache itself carries the doc_id hash partitioning
     assert "hashpartitioning(doc_id" in plan
-    toks.unpersist()
-    Q._PREP_CACHE.pop(key, None)
 
 
 # ---------------------------------------------------------------------------

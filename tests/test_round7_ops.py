@@ -197,10 +197,11 @@ def test_bootstrap_md5_mode_deterministic_and_sane(spark):
 
 
 def test_rotation_orders_red_then_upgraded_first():
+    import __spark_entry__ as entry_mod
     import gcpdatapipelines_spark.queries as qmod
 
-    recorded, red, rows_only = qmod._driver_record_state()
-    order = list(qmod.queries())
+    recorded, red, rows_only = entry_mod._driver_record_state()
+    order = list(entry_mod.queries())
     # every latest-red query sorts before every non-red one
     if red:
         last_red = max(order.index(n) for n in red if n in order)

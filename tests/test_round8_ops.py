@@ -7,6 +7,7 @@ import json
 
 import pytest
 
+import __spark_entry__ as entry_mod
 import gcpdatapipelines_spark.queries as qmod
 from tests.conftest import SF_SMOKE
 
@@ -50,7 +51,7 @@ def test_rows_only_row_is_not_red_regardless_of_err_text(tmp_path):
                     "hash_match": False, "spark_rows": 123,
                     "oracle_rows": None, "err": err}},
         )
-        recorded, red, weak = qmod._driver_record_state(root=root)
+        recorded, red, weak = entry_mod._driver_record_state(root=root)
         assert name in recorded
         assert name not in red, f"rows-only row went red under err={err!r}"
 
@@ -66,7 +67,7 @@ def test_rows_only_crash_row_is_red(tmp_path):
                     "hash_match": False, "spark_rows": sr,
                     "oracle_rows": None, "err": "spark error"}},
         )
-        _, red, _ = qmod._driver_record_state(root=root)
+        _, red, _ = entry_mod._driver_record_state(root=root)
         assert name in red
 
 
@@ -78,7 +79,7 @@ def test_oracle_backed_hash_mismatch_is_red(tmp_path):
                 "hash_match": False, "spark_rows": 5,
                 "oracle_rows": 5, "err": None}},
     )
-    _, red, _ = qmod._driver_record_state(root=root)
+    _, red, _ = entry_mod._driver_record_state(root=root)
     assert name in red
 
 
@@ -90,7 +91,7 @@ def test_oracle_backed_green_is_not_red_or_weak(tmp_path):
                 "hash_match": True, "spark_rows": 5,
                 "oracle_rows": 5, "err": None}},
     )
-    recorded, red, weak = qmod._driver_record_state(root=root)
+    recorded, red, weak = entry_mod._driver_record_state(root=root)
     assert name in recorded and name not in red and name not in weak
 
 
@@ -104,7 +105,7 @@ def test_weak_row_upgrades_when_oracle_exists(tmp_path):
                 "hash_match": None, "spark_rows": 77,
                 "oracle_rows": None, "err": "no_oracle"}},
     )
-    recorded, red, weak = qmod._driver_record_state(root=root)
+    recorded, red, weak = entry_mod._driver_record_state(root=root)
     # rows-only disposition of an oracle-backed name: not red (err is
     # the benign label, no explicit False) but weak -> upgraded lane
     assert name in weak and name not in red

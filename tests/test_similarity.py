@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark.io import read_table
 from gcpdatapipelines_spark.operators import similarity as S
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_started_by
 
 
 def test_brute_force_known_nearest(spark):
@@ -167,9 +167,10 @@ def test_pq_identical_vectors_share_codes(spark):
 
 
 def test_pq_encode_and_topk_reject_inconsistent_metadata(spark):
-    """Caller-supplied codebook metadata is checked on the driver: a
-    ragged ``entries`` grid or a malformed m/dsub raises ValueError
-    before any Spark job runs."""
+    """Caller-supplied codebook rows are checked on the driver: a
+    ragged ``entries`` grid raises ValueError before any Spark job
+    runs. (pq_topk takes no codebook metadata: it sizes its slices
+    inside the plan, see test_pq_topk_build_runs_no_job.)"""
     vecs = spark.createDataFrame(
         [Row(vec_id=0, embedding=[1.0, 0.0, 0.0, 1.0])], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     )
@@ -186,15 +187,47 @@ def test_pq_encode_and_topk_reject_inconsistent_metadata(spark):
         for msg, entries in ragged.items():
             with pytest.raises(ValueError, match=msg):
                 S.pq_encode(vecs, cb, entries=entries)
-        qs = vecs.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-        for m, dsub in [(2, None), (0, 2), (2, 0)]:
-            with pytest.raises(ValueError, match="positive ints"):
-                S.pq_topk(vecs, cb, qs, m=m, dsub=dsub)
         assert list(sc.statusTracker().getJobIdsForGroup("pq_metadata_check")) == []
     finally:
         sc.setJobGroup(None, None)
     codes = S.pq_encode(vecs, cb, entries=grid).collect()
     assert [list(r.code) for r in codes] == [[1, 0]]
+
+
+def test_pq_topk_build_runs_no_job(spark):
+    """Building the ADC top-k plan runs no Spark job: each codebook row
+    sizes its own subspace slice inside the plan, so no first() probes
+    the codebook for m or dsub. The codebook here is Spark-computed
+    (not a local relation), the case where a probe would be a job."""
+    emb = read_table(spark, SF_SMOKE, "embeddings")
+    cb = S.pq_build_sample(emb, m=4, ksub=4)
+    rows = cb.collect()
+    codes = S.pq_encode(emb, cb, entries=rows)
+    qs = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    top, jobs = jobs_started_by(spark, lambda: S.pq_topk(codes, cb, qs, k=3))
+    assert jobs == 0
+    # the in-plan slicing scores like a driver-side ADC over the
+    # collected codebook
+    cent = {(r.sub_id, r.cent_id): r.cent_vec for r in rows}
+    code = {r.vec_id: r.code for r in codes.collect()}
+    dsub = len(rows[0].cent_vec)
+
+    def adc(q_vec, vec_id):
+        return sum(
+            (float(x) - y) ** 2
+            for s, c in enumerate(code[vec_id])
+            for x, y in zip(q_vec[s * dsub:(s + 1) * dsub], cent[(s, c)])
+        )
+
+    got = sorted(top.collect(), key=lambda r: (r.q_id, r.rnk))
+    for q in qs.collect():
+        mine = [r for r in got if r.q_id == q.q_id]
+        best = sorted(adc(q.q_vec, v) for v in code if v != q.q_id)[:3]
+        assert [r.adc_dist for r in mine] == pytest.approx(best, abs=1e-6)
+        for r in mine:
+            assert r.adc_dist == pytest.approx(adc(q.q_vec, r.vec_id), abs=1e-6)
 
 
 @pytest.mark.slow

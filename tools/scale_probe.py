@@ -49,7 +49,7 @@ def cand_minhash(spark, sf_dir):
     exact frame dedup_minhash_lsh verifies."""
     from gcpdatapipelines_spark.operators.dedup import lsh_candidate_pairs
 
-    banded = Q._md5_band_keys_cached(spark, sf_dir)
+    banded = Q._md5_band_keys(spark, sf_dir)
     return lsh_candidate_pairs(banded, "doc_id").count(), _docs_n(spark, sf_dir)
 
 
@@ -101,7 +101,7 @@ def cand_phash(spark, sf_dir):
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
         (F.col("doc_id") % 3 + 1).cast("int"),
     )
-    sig = Q._simhash_md5_cached(spark, sf_dir).select(
+    sig = Q._simhash_md5(spark, sf_dir).select(
         F.col("doc_id").alias("asset_id"), kind.alias("kind"), "sig_hi", "sig_lo"
     )
     cand, _keys = banded_two_word_probe_candidates(sig, "asset_id", "kind")
@@ -116,7 +116,7 @@ def cand_jaccard_prefix(spark, sf_dir):
     far below all-pairs the prefix theorem prunes on this corpus."""
     from gcpdatapipelines_spark.operators.dedup import jaccard_prefix_candidates
 
-    sh = Q._doc_shingles_cached(spark, sf_dir, 5)
+    sh = Q._doc_shingles(spark, sf_dir)
     return jaccard_prefix_candidates(sh, "doc_id", 0.5).count(), _docs_n(
         spark, sf_dir
     )
