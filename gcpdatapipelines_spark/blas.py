@@ -1,19 +1,18 @@
-"""Runtime BLAS thread pinning for Arrow-batched kernels.
+"""Runtime BLAS thread pinning for the driver process.
 
-Why this exists: every Python worker process that loads numpy gets an
-OpenBLAS pool sized to the machine (32 threads here). With 32 Arrow
-workers running mapInPandas/applyInPandas kernels concurrently that is
-32 x 32 = 1024 BLAS threads contending for 32 cores — the classic
-oversubscription collapse for matmul-shaped kernels (sim_opq_topk and
-friends). The parallelism budget already belongs to Spark's task
-scheduler; inside a kernel each dgemm should be single-threaded.
+Why this exists: a process that loads numpy gets an OpenBLAS pool
+sized to the machine. The parallelism budget already belongs to
+Spark's task scheduler, so each dgemm should be single-threaded.
+Python WORKERS need nothing from this module: Spark starts them with
+``OMP_NUM_THREADS = spark.task.cpus`` (1) unless
+``spark.executorEnv.OMP_NUM_THREADS`` says otherwise, so an Arrow
+kernel's numpy already runs one BLAS thread. The DRIVER keeps the
+machine-wide pool, and ``session.get_spark`` /
+``session.ensure_engine_confs`` pin it here.
 
 threadpoolctl is not in the image, so this is the minimal portable
 equivalent: scan /proc/self/maps for loaded BLAS shared objects and
-call their runtime set-num-threads entry points via ctypes. Call
-``pin_blas_threads()`` as the FIRST statement inside every kernel body
-that touches numpy — the kernel closure carries this module as a
-global, so cloudpickle imports it on the worker automatically.
+call their runtime set-num-threads entry points via ctypes.
 
 Cost: a shared object gets mapped by an import, so the maps scan runs
 again only when ``len(sys.modules)`` has changed since the last scan;
@@ -22,8 +21,7 @@ otherwise a call is one length compare. Measured on a 4-core x86 host
 rescan and cost 16-20 ms, dominated by a backtracking regex over every
 line; now the first call (or one after an import) scans in ~1 ms and a
 repeat call costs well under a microsecond. The driver makes ~10 calls
-per catalog pass (``session.ensure_engine_confs``), and the
-``applyInPandas`` kernels make one per group on the workers.
+per catalog pass (``session.ensure_engine_confs``).
 """
 
 from __future__ import annotations

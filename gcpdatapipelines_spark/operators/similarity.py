@@ -313,9 +313,6 @@ def _assign_nearest(
     )
 
     def kernel(batches):
-        from gcpdatapipelines_spark.blas import pin_blas_threads
-
-        pin_blas_threads()
         for pdf in batches:
             X = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
             xn = np.linalg.norm(X, axis=1)
@@ -471,9 +468,6 @@ def neardup_pairs_blas_int8(
         import numpy as np
         import pandas as pd
 
-        from gcpdatapipelines_spark.blas import pin_blas_threads
-
-        pin_blas_threads()
         empty = pd.DataFrame(
             {
                 "id_1": pd.Series(dtype="int64"),
@@ -904,9 +898,6 @@ def rotate_vectors(
     def project(batches):
         import pandas as pd
 
-        from gcpdatapipelines_spark.blas import pin_blas_threads
-
-        pin_blas_threads()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -928,9 +919,6 @@ def _cross_correlation(pairs: DataFrame, a_col: str, b_col: str, dim: int):
     def part(batches):
         import pandas as pd
 
-        from gcpdatapipelines_spark.blas import pin_blas_threads
-
-        pin_blas_threads()
         acc = np.zeros((dim, dim))
         seen = False
         for pdf in batches:
@@ -1127,9 +1115,6 @@ def pq_encode_rotated(
     def kern(batches):
         import pandas as pd
 
-        from gcpdatapipelines_spark.blas import pin_blas_threads
-
-        pin_blas_threads()
         cn2 = (C**2).sum(-1)  # (m, ksub)
         for pdf in batches:
             if pdf.empty:
@@ -1394,9 +1379,6 @@ def srp_signatures(
     def project(batches):
         import pandas as pd
 
-        from gcpdatapipelines_spark.blas import pin_blas_threads
-
-        pin_blas_threads()
         for pdf in batches:
             if pdf.empty:
                 continue

@@ -965,9 +965,6 @@ def cusum_alarms(
     def _fold(pdf):
         import pandas as pd
 
-        from ..blas import pin_blas_threads
-
-        pin_blas_threads()
         # array_sort(struct(ts, tiebreak, v)) field order, reproduced
         pdf = pdf.sort_values(
             [ts_col, tiebreak, "__v"], kind="mergesort", ignore_index=True

@@ -1989,7 +1989,7 @@ def sim_neardup_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_semantic_keep (one cached assignment, three consumers).
 
     The int8 kernel is pinned bit-for-bit against a pure-Python model
-    in tests/test_round15_ops.py."""
+    in tests/test_similarity.py."""
     from .operators.similarity import neardup_pairs_blas_int8
 
     return neardup_pairs_blas_int8(
@@ -6224,7 +6224,7 @@ def a23_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (returned value's rank within n/accuracy of p*n) rides
     as a boolean the oracle pins TRUE — an out-of-contract sketch
     hash-fails (upgraded from rows-only; tolerance also pinned in
-    tests/test_round3_ops.py::TestApproxQuantiles)."""
+    tests/test_agg.py::TestApproxQuantiles)."""
     from .operators.agg import approx_quantiles_audited
 
     li = _t(spark, sf_dir, "lineitem")
@@ -6418,8 +6418,7 @@ def sim_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose singular-vector signs are BLAS-implementation-specific, so no
     engine-portable bit-exact twin exists; recall vs the exact L2
     scan and the beat-plain-PQ property are pinned in
-    tests/test_similarity.py (opq recall) and tests/test_round3_ops.py
-    (catalog wiring)."""
+    tests/test_similarity.py (opq recall and catalog wiring)."""
     from .operators.similarity import (
         pq_encode_rotated,
         pq_topk,
@@ -9197,7 +9196,7 @@ def sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance is the count of sign disagreements, which the oracle
     states directly — so candidate cut, rerank, and ranks hash-check
     end-to-end (recall@10 vs brute force stays pinned in
-    tests/test_round5_ops.py)."""
+    tests/test_similarity.py)."""
     from .operators.similarity import binary_hamming_topk
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -9378,7 +9377,7 @@ def _zipf_sql(dialect: str) -> str:
     log ulp (~1e-15 relative) straddling a 1e-9 truncation boundary
     flips a digit. At 6 dp the boundary margin demanded of each value
     is 1000× wider while the final slope (itself floor-6dp) is
-    numerically indistinguishable; tests/test_round12_ops.py audits
+    numerically indistinguishable; tests/test_queries.py audits
     the actual boundary distances at sf0.001/sf0.01 (the NOTES
     HLL-audit procedure) and pins a >=1e4-ulp margin."""
     if dialect == "spark":
@@ -11293,7 +11292,7 @@ def w29_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration of funnel.markov_attribution_quantized, bit-mirrored by
     a 60-stage unrolled-CTE DuckDB twin (was rows-only through r5 —
     the float numpy solve stays as the production tier, pinned in
-    tests/test_round6_ops.py)."""
+    tests/test_funnel.py)."""
     from .operators.funnel import markov_attribution_quantized
 
     ev = _t(spark, sf_dir, "events")

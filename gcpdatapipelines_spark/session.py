@@ -13,7 +13,8 @@ local[N] for tests and on a 1000-executor cluster unchanged:
 - local[N] and shuffle.partitions default to the cores this process
   may run on ($SPARK_GRAFT_CPUS overrides); on a real cluster AQE
   coalesces from a higher initial number, so this is a floor not a
-  tuning knob.
+  tuning knob. The driver heap defaults to half of physical memory
+  ($SPARK_GRAFT_DRIVER_MEM overrides).
 """
 
 from __future__ import annotations
@@ -55,7 +56,7 @@ def ensure_engine_confs(spark: SparkSession) -> None:
     """Pin the engine's runtime-mandatory confs on an externally-built
     session. Idempotent value pins; session.py is the single module
     that owns conf writes (pinned by
-    tests/test_round13_ops.py::test_no_session_conf_writes_in_operators);
+    tests/test_session.py::test_no_session_conf_writes_in_operators);
     operators CALL this instead of flipping confs themselves.
 
     Sessions this module did not build get a ONE-TIME warning when a
@@ -99,9 +100,12 @@ def get_spark(
     On a cluster, pass ``master=None`` and let spark-submit decide; in
     tests/bench we default to ``local[$SPARK_GRAFT_CPUS]``. Both that
     and the shuffle partition count default to the number of cores
-    this process may run on (its CPU affinity).
+    this process may run on (its CPU affinity). The driver heap
+    defaults to half of physical memory ($SPARK_GRAFT_DRIVER_MEM
+    overrides).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    heap_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
@@ -152,11 +156,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # local[N] runs every executor thread inside the driver JVM, so
-        # the driver heap IS the cluster memory: size it like one fat
-        # executor (the host has 128 GiB; 48g keeps 32 threads of
-        # shingle/vector work out of spill-and-GC territory, which
-        # showed up as 5-10x run-to-run swings on the dedup heavies)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # the driver heap IS the cluster memory. Half of physical
+        # memory leaves the other half to the JVM's off-heap use, the
+        # Python workers and the page cache.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{heap_mb}m")
     )
     if master is not None:
         builder = builder.master(master)

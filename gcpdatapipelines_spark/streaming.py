@@ -633,6 +633,50 @@ def funnel_stream(
     )
 
 
+def _drain_foreach_batch(stream_df: DataFrame, fn, checkpoint: str) -> None:
+    """Run ``fn(batch_df, batch_id)`` on every micro-batch of the
+    stream's current input (trigger availableNow) and wait for it."""
+    q = (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _fold_into_state(stream_df: DataFrame, fold, target_path: str, checkpoint: str) -> None:
+    """Keep a parquet state table at ``target_path`` up to date with
+    the stream: each micro-batch's new state is ``fold(batch_df,
+    state)``, where ``state`` is the current table (None before the
+    first batch).
+
+    The new state goes to a STAGING directory that is then renamed
+    into place: the target path is never overwritten while a plan is
+    reading it (cache()+count() does NOT guarantee that — evicted
+    blocks recompute from the input path mid-overwrite), and a crash
+    mid-write leaves the old state intact. State existence is checked
+    explicitly via the Hadoop FileSystem, so a transient read or fold
+    failure PROPAGATES instead of silently replacing the table with
+    one micro-batch. The delete+rename swap has a sub-second
+    non-atomic window on object-store FSs; a table format with atomic
+    commits closes it."""
+
+    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        hpath = spark._jvm.org.apache.hadoop.fs.Path
+        tgt = hpath(target_path)
+        fs = tgt.getFileSystem(spark._jsc.hadoopConfiguration())
+        state = spark.read.parquet(target_path) if fs.exists(tgt) else None
+        staging = target_path.rstrip("/") + f".__staging_{batch_id}"
+        fold(batch_df, state).write.mode("overwrite").parquet(staging)
+        fs.delete(tgt, True)
+        if not fs.rename(hpath(staging), tgt):
+            raise IOError(f"staging swap failed: {staging} -> {target_path}")
+
+    _drain_foreach_batch(stream_df, do_batch, checkpoint)
+
+
 def upsert_sink_stream(
     stream_df: DataFrame,
     target_path: str,
@@ -650,44 +694,19 @@ def upsert_sink_stream(
 
     Delivery: foreachBatch may replay a batch after failure, but the
     merge is idempotent (same source twice is a no-op), so the target
-    converges exactly-once. Each batch writes the merged result to a
-    STAGING directory and renames it into place: the target path is
-    never overwritten while a plan is reading it (cache()+count() does
-    NOT guarantee that — evicted blocks recompute from the input path
-    mid-overwrite), and a crash mid-write leaves the old target
-    intact. Target existence is checked explicitly via the Hadoop
-    FileSystem, so a transient read or merge failure PROPAGATES
-    instead of silently replacing the table with one micro-batch. The
-    delete+rename swap has a sub-second non-atomic window on
-    object-store FSs; a table format with atomic commits closes it."""
+    converges exactly-once. The merged result is written by
+    _fold_into_state's staging swap: the target is never overwritten in
+    place, and a failed read or merge propagates."""
     from .operators.history import keep_latest
     from .operators.merge import merge_upsert
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, target: DataFrame | None) -> DataFrame:
         compact = keep_latest(batch_df, on, order_col, tiebreak)
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        tgt = hpath(target_path)
-        fs = tgt.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(tgt):
-            target = spark.read.parquet(target_path)
-            merged = merge_upsert(target, compact, on, broadcast_source=True)
-        else:  # first batch: no target yet
-            merged = compact
-        staging = target_path.rstrip("/") + f".__staging_{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        fs.delete(tgt, True)
-        if not fs.rename(hpath(staging), tgt):
-            raise IOError(f"staging swap failed: {staging} -> {target_path}")
+        if target is None:  # first batch: no target yet
+            return compact
+        return merge_upsert(target, compact, on, broadcast_source=True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _fold_into_state(stream_df, fold, target_path, checkpoint)
 
 
 def incremental_neardup_pipeline(
@@ -749,13 +768,7 @@ def incremental_neardup_pipeline(
         .format("parquet")
         .load(source_dir)
     )
-    q = (
-        src.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach_batch(src, do_batch, checkpoint)
 
 
 def drift_monitor_stream(
@@ -796,13 +809,7 @@ def drift_monitor_stream(
         ).withColumn("batch_id", F.lit(batch_id))
         row.write.mode("append").parquet(metrics_path)
 
-    q = (
-        events.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach_batch(events, _score, checkpoint)
 
 
 def hll_sketch_stream(
@@ -823,40 +830,22 @@ def hll_sketch_stream(
     Delivery: replayed batches are absorbed — max-merge is idempotent
     (max(x, x) == x), so the register state converges exactly-once
     without any dedup bookkeeping; this is precisely why sketch state
-    is the right streaming-aggregation state at 100 TB. The staging-
-    swap write protocol follows upsert_sink_stream: state is never
-    overwritten in place, failures propagate."""
+    is the right streaming-aggregation state at 100 TB. State is
+    written by _fold_into_state's staging swap: never overwritten in
+    place, failures propagate."""
     from .operators.sketches import hll_registers
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state: DataFrame | None) -> DataFrame:
         regs = hll_registers(batch_df, key_col, p)
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        tgt = hpath(target_path)
-        fs = tgt.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(tgt):
-            state = spark.read.parquet(target_path)
-            merged = (
-                state.unionByName(regs)
-                .groupBy("bucket")
-                .agg(F.max("rho").alias("rho"))
-            )
-        else:
-            merged = regs
-        staging = target_path.rstrip("/") + f".__staging_{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        fs.delete(tgt, True)
-        if not fs.rename(hpath(staging), tgt):
-            raise IOError(f"staging swap failed: {staging} -> {target_path}")
+        if state is None:
+            return regs
+        return (
+            state.unionByName(regs)
+            .groupBy("bucket")
+            .agg(F.max("rho").alias("rho"))
+        )
 
-    q = (
-        stream_df.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _fold_into_state(stream_df, fold, target_path, checkpoint)
 
 
 def quantile_sketch_stream(
@@ -873,7 +862,7 @@ def quantile_sketch_stream(
     (u = h60(id)/2^60), unioned with the parquet sample state, and cut
     back to each group's k smallest-u rows — the streaming form of the
     bottom-k merge identity ``bottomk(A ∪ B) == bottomk(bottomk(A) ∪
-    bottomk(B))`` (pinned in tests/test_round6_ops.py), keeping a
+    bottomk(B))`` (pinned in tests/test_sketches.py), keeping a
     uniform k-row sample per group over an unbounded stream; any
     quantile of the stream-so-far is one in-memory percentile over the
     state.
@@ -882,47 +871,30 @@ def quantile_sketch_stream(
     in the state changes nothing (dedup on (grp, u) before the cut),
     so the sample converges exactly-once without batch bookkeeping.
     State is bounded at k rows per group regardless of stream length.
-    Staging-swap write protocol as upsert_sink_stream."""
+    State is written by _fold_into_state's staging swap."""
     from pyspark.sql import Window
 
     from .operators.sketches import HASH_BITS, _h60
 
     two60 = float(1 << HASH_BITS)
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state: DataFrame | None) -> DataFrame:
         fresh = batch_df.select(
             F.col(group_col).alias("grp"),
             F.col(value_col).cast("double").alias("v"),
             (_h60(F.col(id_col)) / F.lit(two60)).alias("u"),
         )
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        tgt = hpath(target_path)
-        fs = tgt.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(tgt):
-            state = spark.read.parquet(target_path)
+        if state is not None:
             fresh = state.unionByName(fresh)
         w = Window.partitionBy("grp").orderBy("u")
-        merged = (
+        return (
             fresh.dropDuplicates(["grp", "u"])
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .drop("__rn")
         )
-        staging = target_path.rstrip("/") + f".__staging_{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        fs.delete(tgt, True)
-        if not fs.rename(hpath(staging), tgt):
-            raise IOError(f"staging swap failed: {staging} -> {target_path}")
 
-    q = (
-        stream_df.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _fold_into_state(stream_df, fold, target_path, checkpoint)
 
 
 def hll_daily_sketch_stream(
@@ -939,15 +911,14 @@ def hll_daily_sketch_stream(
     rolling distinct counts (read the state, fan registers across the
     window, estimate). State is 2^p rows per ACTIVE day regardless of
     key volume; max-merge makes batch replay idempotent, exactly as
-    hll_sketch_stream's global form. Staging-swap write protocol as
-    upsert_sink_stream."""
+    hll_sketch_stream's global form. State is written by
+    _fold_into_state's staging swap."""
     from .operators.sketches import HASH_BITS, _h60
 
     m = 1 << p
     w_bits = HASH_BITS - p
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state: DataFrame | None) -> DataFrame:
         day = F.date_trunc("day", F.col(ts_col)).cast("date")
         regs = (
             batch_df.select(
@@ -963,30 +934,15 @@ def hll_daily_sketch_stream(
                 ).alias("rho")
             )
         )
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        tgt = hpath(target_path)
-        fs = tgt.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(tgt):
-            state = spark.read.parquet(target_path)
-            regs = (
-                state.unionByName(regs)
-                .groupBy("day", "bucket")
-                .agg(F.max("rho").alias("rho"))
-            )
-        staging = target_path.rstrip("/") + f".__staging_{batch_id}"
-        regs.write.mode("overwrite").parquet(staging)
-        fs.delete(tgt, True)
-        if not fs.rename(hpath(staging), tgt):
-            raise IOError(f"staging swap failed: {staging} -> {target_path}")
+        if state is None:
+            return regs
+        return (
+            state.unionByName(regs)
+            .groupBy("day", "bucket")
+            .agg(F.max("rho").alias("rho"))
+        )
 
-    q = (
-        stream_df.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _fold_into_state(stream_df, fold, target_path, checkpoint)
 
 
 def pattern_match_stream(

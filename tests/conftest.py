@@ -15,35 +15,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slow: heavyweight parity/property sweep; excluded from the "
-        "default tier (the full ~1300-test suite takes ~33 min of "
-        "Spark-session wall, past the verify gate's time budget — r10 "
-        "verdict #1). Run the full suite with SPARK_GRAFT_TEST_TIER="
-        "full, or just the slow tier with -m slow.",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    """Tiered default: deselect slow-marked tests unless the caller
-    asked for them (explicit -m) or for everything
-    (SPARK_GRAFT_TEST_TIER=full). Every test stays green in the full
-    tier — the default tier only bounds the gate's wall clock; it
-    never hides a failure (deselected, not skipped)."""
-    if os.environ.get("SPARK_GRAFT_TEST_TIER", "fast") == "full":
-        return
-    if config.getoption("-m"):
-        return
-    keep, drop = [], []
-    for item in items:
-        (drop if "slow" in item.keywords else keep).append(item)
-    if drop:
-        config.hook.pytest_deselected(items=drop)
-        items[:] = keep
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", shuffle_partitions=8)
@@ -77,3 +48,21 @@ def jobs_started_by(spark, fn):
         assert time.monotonic() < deadline, "marker job never reached the status tracker"
         time.sleep(0.05)
     return out, len(tracker.getJobIdsForGroup(group))
+
+
+def planted_docs(spark, n_clusters=40, dup_per_cluster=4, n_unique=120):
+    """Corpus with planted near-duplicate clusters: each cluster shares
+    one base sentence with a tiny per-member suffix tweak; uniques are
+    all distinct word streams. Vocabulary is wide so unrelated docs
+    share almost no 5-gram shingles."""
+    rows = []
+    doc_id = 0
+    for c in range(n_clusters):
+        base = " ".join(f"w{c}x{i} token{c} common{i}" for i in range(12))
+        for d in range(dup_per_cluster):
+            rows.append((doc_id, f"{base} tail{c} variant{d}"))
+            doc_id += 1
+    for u in range(n_unique):
+        rows.append((doc_id, " ".join(f"u{u}q{i} solo{u}z{i}" for i in range(14))))
+        doc_id += 1
+    return spark.createDataFrame(rows, "doc_id BIGINT, text STRING"), doc_id

@@ -31,7 +31,6 @@ def _frames(spark):
     return left, right
 
 
-@pytest.mark.slow
 def test_asof_backward_semantics(spark):
     left, right = _frames(spark)
     out = {

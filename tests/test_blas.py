@@ -1,4 +1,5 @@
-"""BLAS thread pinning: the pin holds, and a repeat call is O(1)."""
+"""BLAS thread pinning: the driver pin holds, a repeat call is O(1),
+and Python workers run one BLAS thread without a pin."""
 
 from __future__ import annotations
 
@@ -44,3 +45,26 @@ def test_repeat_pin_skips_maps_scan_until_a_module_loads(monkeypatch, tmp_path):
     counts = blas.blas_thread_counts()
     assert counts, "expected at least one loaded BLAS runtime"
     assert all(v == 1 for v in counts.values()), counts
+
+
+def test_worker_blas_pinned_to_one_thread(spark):
+    """PySpark starts Python workers with OMP_NUM_THREADS =
+    spark.task.cpus, so a kernel that never pins must still report a
+    single-thread BLAS pool."""
+    def kern(batches):
+        import pandas as pd
+
+        from gcpdatapipelines_spark.blas import blas_thread_counts
+
+        counts = list(blas_thread_counts().values())
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"n": [max(counts) if counts else -1]})
+
+    rows = (
+        spark.range(8)
+        .repartition(4)
+        .mapInPandas(kern, "n INT")
+        .collect()
+    )
+    assert rows and all(r["n"] == 1 for r in rows), rows

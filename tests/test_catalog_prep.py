@@ -32,3 +32,31 @@ def test_repeat_prep_queries_persist_nothing_new(spark):
         persisted = jsc.getPersistentRDDs().size()
         query(spark, SF_SMOKE).collect()
         assert jsc.getPersistentRDDs().size() == persisted, name
+
+
+# ---------------------------------------------------------------------------
+# shared token cache: its doc_id partitioning feeds consumers shuffle-free
+# ---------------------------------------------------------------------------
+
+
+def test_doc_tokens_cache_partitioning_feeds_groupby(spark, sf_dir):
+    """The _doc_tokens prep repartitions by doc_id ONCE at cache fill;
+    every consumer aggregating on doc_id must reuse that partitioning
+    with ZERO additional exchanges (the r8 change's whole point — one
+    cheap narrow-row shuffle before a many-pass cache). The registry
+    re-persists an entry an earlier test's spark.catalog.clearCache()
+    dropped, so the plan always has an InMemoryRelation to anchor on."""
+    from pyspark.sql import functions as F
+
+    from gcpdatapipelines_spark import queries as Q
+
+    toks = Q._doc_tokens(spark, sf_dir)
+    agg = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
+    agg.collect()
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" in plan, plan
+    # consumer side = everything above the cached relation: no shuffle
+    outer = plan.split("InMemoryRelation")[0]
+    assert "Exchange" not in outer, outer
+    # and the cache itself carries the doc_id hash partitioning
+    assert "hashpartitioning(doc_id" in plan

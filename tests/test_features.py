@@ -57,3 +57,42 @@ def test_quantile_bin_fact_never_shuffles_for_cutpoints(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
+
+
+# ---------------------------------------------------------------------------
+# woe_iv
+# ---------------------------------------------------------------------------
+
+
+def test_woe_iv_matches_python_model(spark):
+    from gcpdatapipelines_spark.operators.features import woe_iv
+
+    counts = {"A": (30, 70), "B": (60, 40), "C": (10, 90)}
+    rows = []
+    for cat, (ev, ne) in counts.items():
+        rows += [(cat, True)] * ev + [(cat, False)] * ne
+    df = spark.createDataFrame(rows, "cat STRING, ev BOOLEAN")
+    got = {r["cat"]: r for r in woe_iv(df, "cat", F.col("ev")).collect()}
+
+    et = sum(ev for ev, _ in counts.values())
+    nt = sum(ne for _, ne in counts.values())
+    iv = 0.0
+    for cat, (ev, ne) in counts.items():
+        woe = math.log((ev / et) / (ne / nt))
+        term = (ev / et - ne / nt) * woe
+        iv += term
+        assert abs(got[cat]["woe"] - woe) < 1e-5
+        assert abs(got[cat]["iv_term"] - term) < 1e-5
+    for r in got.values():
+        assert abs(r["iv_total"] - iv) < 1e-5
+
+
+def test_woe_iv_drops_zero_class_categories(spark):
+    from gcpdatapipelines_spark.operators.features import woe_iv
+
+    rows = [("A", True)] * 5 + [("A", False)] * 5 + [("Z", True)] * 4
+    df = spark.createDataFrame(rows, "cat STRING, ev BOOLEAN")
+    out = woe_iv(df, "cat", F.col("ev")).collect()
+    assert [r["cat"] for r in out] == ["A"]
+    # balanced A: woe == 0, iv == 0
+    assert out[0]["woe"] == 0.0 and out[0]["iv_total"] == 0.0

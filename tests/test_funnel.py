@@ -11,6 +11,7 @@ from gcpdatapipelines_spark.operators.funnel import (
     funnel_counts,
     funnel_user_stages,
     retention_cohorts,
+    time_decay_attribution,
 )
 
 T0 = dt.datetime(2024, 1, 1)
@@ -296,3 +297,227 @@ def test_srm_check_balanced_and_broken(spark):
     broken = spark.createDataFrame([(i,) for i in range(900)] + [(2 * i + 1,) for i in range(100)], "uid BIGINT")
     r2 = srm_check(broken, F.col("uid") % 2 == 1).first()
     assert r2.chi2 > 3.84  # flags the imbalance
+
+
+def test_time_decay_attribution_hand_weights(spark):
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, t0, "click"),
+        (1, t0 + dt.timedelta(days=7), "email"),
+        (1, t0 + dt.timedelta(days=14), "purchase"),
+        (2, t0, "click"),  # user 2 never converts: no credit
+    ]
+    df = spark.createDataFrame(rows, "user_id BIGINT, ts TIMESTAMP, event_type STRING")
+    out = {r.channel: r for r in time_decay_attribution(df, "user_id", "ts", "event_type").collect()}
+    # click is 14 days before the purchase -> 0.25; email 7 days -> 0.5
+    assert out["click"].credit == 0.25 and out["click"].n_touches == 1
+    assert out["email"].credit == 0.5
+    assert set(out) == {"click", "email"}
+
+
+# ---------------------------------------------------------------------------
+# markov_attribution
+# ---------------------------------------------------------------------------
+
+
+def _mk_journeys(spark, journeys):
+    from datetime import datetime, timedelta
+
+    base = datetime(2024, 6, 1)
+    rows = []
+    for u, steps in enumerate(journeys):
+        for i, st in enumerate(steps):
+            rows.append((u, base + timedelta(minutes=i), st, i))
+    return spark.createDataFrame(
+        rows, "user_id BIGINT, ts TIMESTAMP, event_type STRING, event_id BIGINT"
+    )
+
+
+def test_markov_attribution_hand_chain(spark):
+    """Hand-solved absorbing chain: journeys A->CONV, A->B->CONV,
+    B->null, C->null give removal effects A=0.75, B=0.5, C=0 (base
+    P(conv)=0.5; removing A leaves only START->B->CONV=0.125;
+    removing B kills A's second path: 0.25)."""
+    from gcpdatapipelines_spark.operators.funnel import markov_attribution
+
+    df = _mk_journeys(
+        spark,
+        [["A", "purchase"], ["A", "B", "purchase"], ["B"], ["C"]],
+    )
+    got = {
+        r["channel"]: r
+        for r in markov_attribution(
+            df, "user_id", "ts", "event_type", "purchase", "event_id"
+        ).collect()
+    }
+    assert abs(got["A"]["removal_effect"] - 0.75) < 1e-9
+    assert abs(got["B"]["removal_effect"] - 0.5) < 1e-9
+    assert got["C"]["removal_effect"] == 0.0
+    assert abs(got["A"]["attribution_share"] - 0.6) < 1e-9
+    assert abs(got["B"]["attribution_share"] - 0.4) < 1e-9
+    assert abs(got["A"]["attributed_conversions"] - 1.2) < 1e-6
+    assert abs(got["B"]["attributed_conversions"] - 0.8) < 1e-6
+
+
+def test_markov_attribution_cuts_at_first_conversion(spark):
+    """Post-conversion events must not contribute transitions: a
+    journey A->CONV->Z->Z equals A->CONV (Z earns no credit and no
+    Z state appears)."""
+    from gcpdatapipelines_spark.operators.funnel import markov_attribution
+
+    df = _mk_journeys(
+        spark, [["A", "purchase", "Z", "Z"], ["A", "purchase"]]
+    )
+    got = markov_attribution(
+        df, "user_id", "ts", "event_type", "purchase", "event_id"
+    ).collect()
+    assert {r["channel"] for r in got} == {"A"}
+    assert got[0]["removal_effect"] == 1.0
+
+
+def test_shapley_attribution_hand_case(spark):
+    """Two channels, hand-solved: v(A)=1/3, v(B)=1/2, v(AB)=1 gives
+    phi_A=5/12, phi_B=7/12 (efficiency: they sum to v(AB) since
+    v(empty)=0); 4 conversions split 1.67/2.33."""
+    from gcpdatapipelines_spark.operators.funnel import shapley_attribution
+
+    journeys = (
+        [["A", "purchase"]] + [["A"]] * 2           # v(A)=1/3
+        + [["B", "purchase"]] + [["B"]]             # v(B)=1/2
+        + [["A", "B", "purchase"]] * 2              # v(AB)=1
+    )
+    df = _mk_journeys(spark, journeys)
+    got = {
+        r["channel"]: r
+        for r in shapley_attribution(
+            df, "user_id", "ts", "event_type", "purchase"
+        ).collect()
+    }
+    assert abs(got["A"]["shapley_value"] - 5 / 12) < 1e-6
+    assert abs(got["B"]["shapley_value"] - 7 / 12) < 1e-6
+    assert abs(got["A"]["attribution_share"] - 5 / 12) < 1e-6
+    assert abs(got["A"]["attributed_conversions"] - 4 * 5 / 12) < 1e-2
+
+
+def test_shapley_ignores_post_conversion_channels(spark):
+    """Channels seen only after the first conversion earn nothing and
+    do not appear."""
+    from gcpdatapipelines_spark.operators.funnel import shapley_attribution
+
+    df = _mk_journeys(spark, [["A", "purchase", "Z"], ["A"]])
+    got = shapley_attribution(
+        df, "user_id", "ts", "event_type", "purchase"
+    ).collect()
+    assert {r["channel"] for r in got} == {"A"}
+
+
+# ---------------------------------------------------------------------------
+# markov quantized tier: must agree with the float linear-solve tier
+# ---------------------------------------------------------------------------
+
+
+def _journey_frame(spark):
+    rows = []
+    eid = 0
+
+    def add(u, *chans):
+        nonlocal eid
+        for i, c in enumerate(chans):
+            rows.append((u, f"2024-01-01 00:{i:02d}:00", eid, c))
+            eid += 1
+
+    # converting journeys through different channel mixes
+    for u in range(20):
+        add(u, "click", "view", "purchase")
+    for u in range(20, 30):
+        add(u, "view", "purchase")
+    for u in range(30, 45):
+        add(u, "click", "error")  # non-converting
+    for u in range(45, 50):
+        add(u, "signup", "click", "purchase")
+    from pyspark.sql import functions as F
+
+    return spark.createDataFrame(
+        rows, "u long, ts string, eid long, ch string"
+    ).select(
+        "u", F.col("ts").cast("timestamp").alias("ts"), "eid", "ch"
+    )
+
+
+def test_markov_quantized_agrees_with_float_solver(spark):
+    from gcpdatapipelines_spark.operators.funnel import (
+        markov_attribution,
+        markov_attribution_quantized,
+    )
+
+    df = _journey_frame(spark)
+    fl = {
+        r.channel: r
+        for r in markov_attribution(
+            df, "u", "ts", "ch", "purchase", "eid"
+        ).collect()
+    }
+    qt = {
+        r.channel: r
+        for r in markov_attribution_quantized(
+            df, "u", "ts", "ch", "purchase", "eid"
+        ).collect()
+    }
+    assert set(fl) == set(qt)
+    for c in fl:
+        # 60-step truncated iteration vs exact solve: within 1e-4
+        assert abs(qt[c].removal_effect_ppm / 1e6 - fl[c].removal_effect) < 1e-4
+        assert abs(qt[c].share_ppm / 1e6 - fl[c].attribution_share) < 1e-3
+        assert (
+            abs(
+                qt[c].attributed_conversions_c / 100
+                - fl[c].attributed_conversions
+            )
+            < 0.5
+        )
+
+
+def test_markov_quantized_partitioning_invariant(spark):
+    from gcpdatapipelines_spark.operators.funnel import (
+        markov_attribution_quantized,
+    )
+
+    df = _journey_frame(spark)
+    a = markov_attribution_quantized(
+        df, "u", "ts", "ch", "purchase", "eid"
+    ).collect()
+    b = markov_attribution_quantized(
+        df.repartition(7), "u", "ts", "ch", "purchase", "eid"
+    ).collect()
+    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+# ---------------------------------------------------------------------------
+# shapley SQL tier: must agree with the python-model tier
+# ---------------------------------------------------------------------------
+
+
+def test_shapley_sql_tier_agrees_with_python_model(spark, tmp_path):
+    from gcpdatapipelines_spark.operators.funnel import shapley_attribution
+    from gcpdatapipelines_spark.queries import _shapley_sql
+
+    df = _journey_frame(spark).selectExpr(
+        "u AS user_id", "ts", "eid AS event_id", "ch AS event_type",
+        "CAST(1.0 AS DOUBLE) AS value", "'{}' AS props",
+    )
+    py = {
+        r.channel: r
+        for r in shapley_attribution(
+            df, "user_id", "ts", "event_type", "purchase"
+        ).collect()
+    }
+    df.createOrReplaceTempView("events")
+    sq = {
+        r.channel: r for r in spark.sql(_shapley_sql("spark")).collect()
+    }
+    assert set(py) == set(sq)
+    for c in py:
+        assert abs(sq[c].shapley_micro / 1e6 - py[c].shapley_value) < 1e-4
+        assert abs(sq[c].share_ppm / 1e6 - py[c].attribution_share) < 1e-3

@@ -9,7 +9,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark import io
-from tests.conftest import jobs_started_by
+from tests.conftest import SF_SMOKE, jobs_started_by
 
 
 def test_bq_string_schema_to_ddl():
@@ -303,3 +303,42 @@ def test_overwrite_partitions_replaces_only_touched(spark, tmp_path):
     d2 = sorted((r.id, r.v) for r in back.filter("day = '2024-01-02'").collect())
     assert d1 == [(1, 10.0), (2, 20.0)]  # untouched partition intact
     assert d2 == [(3, 99.0), (4, 44.0)]  # restated partition replaced
+
+
+# ---------------------------------------------------------------------------
+# io.read_table timezone pin (r5 verdict #1)
+# ---------------------------------------------------------------------------
+
+
+def test_read_table_pins_utc(spark):
+    from gcpdatapipelines_spark.io import read_table
+
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        read_table(spark, SF_SMOKE, "events")
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_unix_micros_invariant_under_session_tz(spark):
+    """Absolute epoch-us outputs must not depend on the caller's session
+    timezone — the exact class behind w17_session_table's driver red."""
+    import pyspark.sql.functions as F
+
+    from gcpdatapipelines_spark.io import read_table
+
+    def first_us():
+        ev = read_table(spark, SF_SMOKE, "events")
+        return (
+            ev.select(F.unix_micros("ts").alias("us"))
+            .orderBy("us").limit(1).collect()[0].us
+        )
+
+    utc = first_us()
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        ny = first_us()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert utc == ny

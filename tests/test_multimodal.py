@@ -3,8 +3,6 @@ frame sampling, byte-aware partitioning."""
 
 from __future__ import annotations
 
-import pytest
-
 from gcpdatapipelines_spark.io import read_table
 from gcpdatapipelines_spark.operators import multimodal as M
 from tests.conftest import SF_SMOKE
@@ -198,7 +196,6 @@ def _real_wav(seconds: float, rate: int = 8000) -> bytes:
     return buf.getvalue()
 
 
-@pytest.mark.slow
 def test_media_decode_real_bmp_and_wav_through_spark_plumbing(spark):
     """media_decode parses REAL file bytes (BMP dims, WAV duration)
     through the exact mapInPandas path the fake stand-in uses — the

@@ -5,14 +5,10 @@ row-correct but would stop scaling — treated as a failure
 
 from __future__ import annotations
 
-import pytest
-
 from gcpdatapipelines_spark import plans as P
 from gcpdatapipelines_spark.queries import SPARK_QUERIES
 from tests.conftest import SF_SMOKE
 
-# Heavyweight parity/property sweep: slow tier (see conftest).
-pytestmark = pytest.mark.slow
 
 
 

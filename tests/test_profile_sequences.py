@@ -11,6 +11,8 @@ from gcpdatapipelines_spark import plans as PL
 from gcpdatapipelines_spark.io import read_table
 from gcpdatapipelines_spark.operators.profile import profile_columns
 from gcpdatapipelines_spark.operators.sequences import (
+    activity_streaks,
+    bigram_lift,
     event_sequences,
     rolling_mean,
     transition_counts,
@@ -321,3 +323,205 @@ def test_holt_linear_matches_python_recursion(spark):
     assert level == trunc6(lvl)
     assert trend == trunc6(trd)
     assert fc1 == trunc6(lvl + trd)
+
+
+class TestBigramLift:
+    def test_lift_values(self, spark):
+        rows = [
+            (1, _ts(0), 1, "a"), (1, _ts(1), 2, "b"),
+            (1, _ts(2), 3, "a"), (1, _ts(3), 4, "b"),
+            (2, _ts(0), 5, "a"), (2, _ts(1), 6, "c"),
+        ]
+        df = spark.createDataFrame(
+            rows, "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING"
+        )
+        out = {(r.a, r.b): r for r in
+               bigram_lift(df, "user_id", "ts", "event_type", "event_id").collect()}
+        # bigrams: (a,b)x2, (b,a)x1, (a,c)x1 -> N=4
+        assert out[("a", "b")].n_ab == 2
+        # lift(a,b) = (2*4)/(c_a=3 * c_b=2) = 8/6
+        assert abs(out[("a", "b")].lift - round(8 / 6, 6)) < 1e-9
+        # lift(a,c) = (1*4)/(3*1)
+        assert abs(out[("a", "c")].lift - round(4 / 3, 6)) < 1e-9
+
+
+def _day_ts(day: int, hour: int = 9):
+    return dt.datetime(2024, 1, day, hour)
+
+
+def test_streaks_known_islands(spark):
+    # u1: days 1,2,3 then 5,6 -> longest 3, active 5
+    # u2: single day -> 1/1; u3: duplicate events one day -> 1/1
+    rows = [
+        (1, _day_ts(1)), (1, _day_ts(2)), (1, _day_ts(3)), (1, _day_ts(5)), (1, _day_ts(6)),
+        (2, _day_ts(10)),
+        (3, _day_ts(4, 1)), (3, _day_ts(4, 23)),
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
+    got = {
+        r["user_id"]: (r["longest_streak"], r["n_active_days"])
+        for r in activity_streaks(df, "user_id", "ts").collect()
+    }
+    assert got == {1: (3, 5), 2: (1, 1), 3: (1, 1)}
+
+
+def test_streaks_gap_of_one_day_breaks(spark):
+    df = spark.createDataFrame(
+        [(1, _day_ts(d)) for d in (1, 3, 5, 7)], "user_id long, ts timestamp"
+    )
+    [r] = activity_streaks(df, "user_id", "ts").collect()
+    assert (r["longest_streak"], r["n_active_days"]) == (1, 4)
+
+
+def test_freshness_audit_lag_and_stale(spark):
+    import datetime as dt
+
+    from gcpdatapipelines_spark.operators.profile import freshness_audit
+
+    t0 = dt.datetime(2024, 1, 10)
+    rows = [
+        ("live", t0),
+        ("live", t0 - dt.timedelta(days=9)),
+        ("dead", t0 - dt.timedelta(days=2)),
+    ]
+    df = spark.createDataFrame(rows, "feed STRING, ts TIMESTAMP")
+    out = {r.shard: r for r in freshness_audit(df, "feed", "ts").collect()}
+    assert out["live"].lag_hours == 0.0 and not out["live"].stale
+    assert out["dead"].lag_hours == 48.0 and out["dead"].stale
+    assert out["live"].n_rows == 2
+
+
+def test_key_skew_audit_flat_vs_skewed(spark):
+    from gcpdatapipelines_spark.operators.profile import key_skew_audit
+
+    flat = spark.createDataFrame([(i % 10,) for i in range(100)], "k BIGINT")
+    skew = spark.createDataFrame([(0,)] * 91 + [(i,) for i in range(1, 10)], "k BIGINT")
+    rf = key_skew_audit(flat, "k").first()
+    rs = key_skew_audit(skew, "k").first()
+    assert rf.gini == 0.0 and rf.max_over_avg == 1.0
+    assert rs.gini > 0.7 and rs.top1_share == 0.91 and rs.max_over_avg == 9.1
+    assert rf.n_keys == rs.n_keys == 10
+
+
+# ---------------------------------------------------------------------------
+# join_size_estimate
+# ---------------------------------------------------------------------------
+
+
+def test_join_size_estimate_exact_at_full_rate(spark):
+    """rate=1.0 samples every key: the estimate IS the exact
+    product-sum and rel_err == 0."""
+    from gcpdatapipelines_spark.operators.profile import join_size_estimate
+
+    l = spark.createDataFrame(
+        [(i % 10, i) for i in range(300)], "k INT, x BIGINT"
+    )
+    r = spark.createDataFrame(
+        [(i % 7, i) for i in range(200)], "k INT, y BIGINT"
+    )
+    got = join_size_estimate(l, "k", r, "k", rate=1.0).collect()[0]
+    exact = l.join(r, "k").count()
+    assert got["exact_join_rows"] == exact
+    assert got["est_join_rows"] == float(exact)
+    assert got["rel_err"] == 0.0
+
+
+def test_join_size_estimate_concentrates(spark):
+    """With many keys of similar weight, a 20% key sample lands
+    within ~35% of the truth (unbiased; error ~ 1/sqrt(sampled
+    keys))."""
+    from gcpdatapipelines_spark.operators.profile import join_size_estimate
+
+    l = spark.createDataFrame(
+        [(i % 500, i) for i in range(5000)], "k INT, x BIGINT"
+    )
+    r = spark.createDataFrame(
+        [(i % 500, i) for i in range(3000)], "k INT, y BIGINT"
+    )
+    got = join_size_estimate(l, "k", r, "k", rate=0.2).collect()[0]
+    assert got["exact_join_rows"] == l.join(r, "k").count()
+    assert got["n_keys_sampled"] > 50
+    assert got["rel_err"] < 0.35, got
+
+
+def test_join_size_estimate_disjoint_keys_is_zero(spark):
+    """No overlapping keys: estimate 0, exact 0 guarded against
+    divide-by-zero is not required (exact>0 in catalog); here assert
+    the estimator returns 0 sampled product mass."""
+    from gcpdatapipelines_spark.operators.profile import join_size_estimate
+
+    l = spark.createDataFrame([(i, i) for i in range(100)], "k INT, x BIGINT")
+    r = spark.createDataFrame(
+        [(i + 1000, i) for i in range(100)], "k INT, y BIGINT"
+    )
+    got = join_size_estimate(l, "k", r, "k", rate=1.0).collect()[0]
+    assert got["est_join_rows"] == 0.0
+
+
+# ---------------------------------------------------------------------------
+# pattern_match_negation
+# ---------------------------------------------------------------------------
+
+
+def test_pattern_negation_cases(spark):
+    """Four journeys pin the semantics: clean match; blocker between
+    -> no match; blocker AFTER the goal -> still a match; goal beyond
+    horizon -> no match."""
+    from datetime import datetime, timedelta
+
+    from gcpdatapipelines_spark.operators.sequences import (
+        pattern_match_negation,
+    )
+
+    base = datetime(2024, 7, 1)
+
+    def j(u, steps):
+        return [
+            (u, base + timedelta(minutes=m), t, i)
+            for i, (m, t) in enumerate(steps)
+        ]
+
+    rows = (
+        j(1, [(0, "click"), (10, "purchase")])                       # match
+        + j(2, [(0, "click"), (5, "error"), (10, "purchase")])       # blocked
+        + j(3, [(0, "click"), (10, "purchase"), (20, "error")])      # match
+        + j(4, [(0, "click"), (90, "purchase")])                     # too late
+    )
+    df = spark.createDataFrame(
+        rows, "user_id BIGINT, ts TIMESTAMP, event_type STRING, event_id BIGINT"
+    )
+    got = {
+        r["user"]: (r["n_start"], r["n_matched"])
+        for r in pattern_match_negation(
+            df, "user_id", "ts", "event_type",
+            "click", "purchase", "error", 3600, "event_id",
+        ).collect()
+    }
+    assert got == {1: (1, 1), 2: (1, 0), 3: (1, 1), 4: (1, 0)}
+
+
+def test_pattern_negation_uses_next_goal_only(spark):
+    """The pattern binds to the NEXT goal: click -> error -> purchase
+    -> purchase is blocked (the error precedes the first purchase),
+    even though a later purchase also exists."""
+    from datetime import datetime, timedelta
+
+    from gcpdatapipelines_spark.operators.sequences import (
+        pattern_match_negation,
+    )
+
+    base = datetime(2024, 7, 1)
+    rows = [
+        (1, base + timedelta(minutes=m), t, i)
+        for i, (m, t) in enumerate(
+            [(0, "click"), (5, "error"), (10, "purchase"), (20, "purchase")]
+        )
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id BIGINT, ts TIMESTAMP, event_type STRING, event_id BIGINT"
+    )
+    got = pattern_match_negation(
+        df, "user_id", "ts", "event_type",
+        "click", "purchase", "error", 3600, "event_id",
+    ).collect()[0]
+    assert (got["n_start"], got["n_matched"]) == (1, 0)

@@ -4,8 +4,6 @@ invariants, salted-agg equivalence."""
 
 from __future__ import annotations
 
-import pytest
-
 import math
 
 import pandas as pd
@@ -16,9 +14,6 @@ from hypothesis import strategies as st
 from gcpdatapipelines_spark.operators.dedup import ngram_jaccard_pairs
 from gcpdatapipelines_spark.operators.pivot import transpose
 from gcpdatapipelines_spark.operators.skew import salted_count_per_key
-
-# Heavyweight parity/property sweep: slow tier (see conftest).
-pytestmark = pytest.mark.slow
 
 
 KEYS = st.integers(min_value=0, max_value=3)

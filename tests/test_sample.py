@@ -7,7 +7,9 @@ from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark.io import read_table
 from gcpdatapipelines_spark.operators.sample import (
+    cap_per_group,
     deterministic_sample,
+    deterministic_shuffle,
     stratified_sample,
     train_test_split,
 )
@@ -271,3 +273,189 @@ def test_time_series_cv_monotone_expanding_and_no_leak(spark):
 
 
 from gcpdatapipelines_spark.operators.sample import time_series_cv_folds  # noqa: E402
+
+
+class TestCapPerGroup:
+    def test_cap_and_passthrough(self, spark):
+        rows = [(i, "big") for i in range(20)] + [(100, "small"), (101, "small")]
+        df = spark.createDataFrame(rows, "doc_id BIGINT, source STRING")
+        out = cap_per_group(df, "doc_id", "source", 5)
+        by_src = (
+            out.groupBy("source").agg(F.count("*").alias("n")).collect()
+        )
+        got = {r.source: r.n for r in by_src}
+        assert got == {"big": 5, "small": 2}
+
+    def test_deterministic(self, spark):
+        df = spark.createDataFrame(
+            [(i, "s") for i in range(50)], "doc_id BIGINT, source STRING"
+        )
+        a = {r.doc_id for r in cap_per_group(df, "doc_id", "source", 7).collect()}
+        b = {r.doc_id for r in cap_per_group(df, "doc_id", "source", 7).collect()}
+        assert a == b and len(a) == 7
+
+
+class TestSplitStratified:
+    def test_exact_proportions_per_stratum(self, spark):
+        rows = [(i, "a") for i in range(100)] + [(1000 + i, "b") for i in range(10)]
+        df = spark.createDataFrame(rows, "doc_id BIGINT, source STRING")
+        from gcpdatapipelines_spark.operators.sample import split_stratified
+
+        out = split_stratified(df, "doc_id", "source", test_pct=20)
+        counts = {
+            (r.source, r.split): r.n
+            for r in out.groupBy("source", "split").agg(F.count("*").alias("n")).collect()
+        }
+        assert counts[("a", "test")] == 20 and counts[("a", "train")] == 80
+        # interleaved slots keep even a 10-row stratum at the ratio:
+        # exactly 2 of 10 land in test (every 5th rank)
+        assert counts[("b", "test")] == 2 and counts[("b", "train")] == 8
+
+    def test_deterministic(self, spark):
+        df = spark.createDataFrame(
+            [(i, "s") for i in range(50)], "doc_id BIGINT, source STRING"
+        )
+        from gcpdatapipelines_spark.operators.sample import split_stratified
+
+        a = {(r.doc_id, r.split) for r in split_stratified(df, "doc_id", "source").collect()}
+        b = {(r.doc_id, r.split) for r in split_stratified(df, "doc_id", "source").collect()}
+        assert a == b
+
+
+def test_shuffle_is_permutation(spark):
+    docs = read_table(spark, SF_SMOKE, "documents").select("doc_id")
+    n = docs.count()
+    out = deterministic_shuffle(docs, "doc_id")
+    assert out.count() == n
+    # every (shard, pos) address unique; positions dense 1..len per shard
+    assert out.select("shard", "shard_pos").distinct().count() == n
+    bad = (
+        out.groupBy("shard")
+        .agg(F.max("shard_pos").alias("mx"), F.count("*").alias("cnt"))
+        .filter(F.col("mx") != F.col("cnt"))
+        .count()
+    )
+    assert bad == 0
+
+
+def test_shuffle_reproducible_and_seed_sensitive(spark):
+    docs = read_table(spark, SF_SMOKE, "documents").select("doc_id").limit(200)
+    a = {(r["doc_id"], r["shard"], r["shard_pos"])
+         for r in deterministic_shuffle(docs, "doc_id").collect()}
+    b = {(r["doc_id"], r["shard"], r["shard_pos"])
+         for r in deterministic_shuffle(docs, "doc_id").collect()}
+    assert a == b
+    c = {(r["doc_id"], r["shard"], r["shard_pos"])
+         for r in deterministic_shuffle(docs, "doc_id", seed=7).collect()}
+    assert a != c
+
+
+def test_shuffle_decorrelates_key_order(spark):
+    """Adjacent keys must not land at adjacent positions — the point
+    of shuffling. Check shards of consecutive doc_ids look spread."""
+    docs = read_table(spark, SF_SMOKE, "documents").select("doc_id").limit(64)
+    shards = [
+        r["shard"]
+        for r in deterministic_shuffle(docs, "doc_id").orderBy("doc_id").collect()
+    ]
+    assert len(set(shards)) > 10  # 64 consecutive ids spray across shards
+
+
+def test_kfold_balanced_and_deterministic(spark):
+    from gcpdatapipelines_spark.operators.sample import split_kfold
+
+    docs = read_table(spark, SF_SMOKE, "documents").select("doc_id", "lang")
+    out = split_kfold(docs, "doc_id", "lang", k=5)
+    sizes = (
+        out.groupBy("lang", "fold").count()
+        .groupBy("lang")
+        .agg(F.max("count").alias("mx"), F.min("count").alias("mn"))
+        .collect()
+    )
+    assert sizes and all(r["mx"] - r["mn"] <= 1 for r in sizes)
+    again = split_kfold(docs, "doc_id", "lang", k=5)
+    assert out.exceptAll(again).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# group_kfold / sim_recall_eval / sim_mmr_rerank / pagerank tier
+# ---------------------------------------------------------------------------
+
+
+def test_group_kfold_never_splits_a_group(spark):
+    from gcpdatapipelines_spark.io import read_table
+    from gcpdatapipelines_spark.operators.sample import group_kfold
+
+    ev = read_table(spark, SF_SMOKE, "events").select("user_id", "event_id")
+    folds = group_kfold(ev, "user_id", k=5)
+    import pyspark.sql.functions as F
+
+    per_user = folds.groupBy("user_id").agg(
+        F.countDistinct("fold").alias("nf")
+    )
+    assert per_user.filter(F.col("nf") > 1).count() == 0
+    spread = {r.fold for r in folds.select("fold").distinct().collect()}
+    assert spread == {0, 1, 2, 3, 4}
+
+
+# ---------------------------------------------------------------------------
+# concat_chunk_pack
+# ---------------------------------------------------------------------------
+
+
+def test_concat_chunk_pack_matches_python_model(spark):
+    from gcpdatapipelines_spark.operators.sample import concat_chunk_pack
+
+    lens = [(i, (i * 37) % 900 + 1) for i in range(200)]
+    df = spark.createDataFrame(lens, "doc_id long, n long")
+    got = {
+        r.doc_id: (
+            r.n_tokens,
+            r.start_off,
+            r.first_chunk,
+            r.last_chunk,
+            r.chunks_spanned,
+        )
+        for r in concat_chunk_pack(df, "doc_id", "n", capacity=256).collect()
+    }
+    off = 0
+    for i, n in lens:
+        first = off // 256
+        last = (off + n - 1) // 256 if n > 0 else first
+        assert got[i] == (n, off, first, last, last - first + 1)
+        off += n
+
+
+def test_concat_chunk_pack_stream_is_contiguous(spark):
+    from gcpdatapipelines_spark.operators.sample import concat_chunk_pack
+
+    df = spark.createDataFrame(
+        [(i, (i * 13) % 50 + 1) for i in range(500)], "doc_id long, n long"
+    )
+    rows = sorted(
+        concat_chunk_pack(df, "doc_id", "n", capacity=128).collect(),
+        key=lambda r: r.doc_id,
+    )
+    off = 0
+    for r in rows:
+        assert r.start_off == off  # no gaps, no overlaps
+        off += r.n_tokens
+    assert all(r.chunks_spanned >= 1 for r in rows)
+
+
+def test_concat_chunk_pack_partitioning_invariant(spark):
+    from gcpdatapipelines_spark.operators.sample import concat_chunk_pack
+
+    df = spark.createDataFrame(
+        [(i, (i * 7) % 99 + 1) for i in range(300)], "doc_id long, n long"
+    )
+    a = sorted(
+        map(tuple, concat_chunk_pack(df, "doc_id", "n", 64).collect())
+    )
+    b = sorted(
+        map(
+            tuple,
+            concat_chunk_pack(df.repartition(23), "doc_id", "n", 64).collect(),
+        )
+    )
+    assert a == b

@@ -3,8 +3,6 @@ partition pruning, bucketed tables, approximate aggregates."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark import io, plans
@@ -12,8 +10,6 @@ from gcpdatapipelines_spark.io import read_table
 from gcpdatapipelines_spark.operators import skew
 from tests.conftest import SF_SMOKE
 
-# Heavyweight parity/property sweep: slow tier (see conftest).
-pytestmark = pytest.mark.slow
 
 
 

@@ -1,10 +1,10 @@
-"""Batch/stream parity: the streaming twins must produce the same
-results as the batch catalog queries over the same fixture data."""
+"""streaming.py: the streaming twins must produce the same results as
+the batch catalog queries over the same fixture data; per-route
+sinks."""
 
 from __future__ import annotations
 
 import pytest
-
 from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark import streaming as S
@@ -12,8 +12,6 @@ from gcpdatapipelines_spark.io import read_table
 from gcpdatapipelines_spark.queries import w3_event_hourly, w7_sessionize
 from tests.conftest import SF_SMOKE
 
-# Heavyweight parity/property sweep: slow tier (see conftest).
-pytestmark = pytest.mark.slow
 
 
 
@@ -974,3 +972,72 @@ def test_funnel_stream_purges_dormant_state_with_horizon(spark, tmp_path):
     )
     rows = {(r["user_id"], r["completed_at"]) for r in got.collect()}
     assert rows == {(2, mins(10)), (1, mins(150))}
+
+
+# ---------------------------------------------------------------------------
+# per-route independent-trigger routed writes
+# ---------------------------------------------------------------------------
+
+
+def test_routed_write_streams_per_trigger(spark, tmp_path):
+    import gcpdatapipelines_spark.streaming as S
+
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = "doc_id BIGINT, lang STRING"
+    spark.createDataFrame(
+        [(1, "en"), (2, "en"), (3, "zh"), (4, "fr")], schema
+    ).write.mode("overwrite").parquet(str(src / "d.parquet"))
+    stream = (
+        spark.readStream.schema(schema).format("parquet").load(str(src / "d.parquet"))
+    )
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    qs = S.routed_write_streams_per_trigger(
+        stream,
+        out,
+        ckpt,
+        {"en": "1 seconds", "zh": "10 seconds"},
+        available_now=True,
+    )
+    for q in qs:
+        q.awaitTermination()
+    en = spark.read.parquet(f"{out}/lang=en")
+    zh = spark.read.parquet(f"{out}/lang=zh")
+    rest = spark.read.parquet(f"{out}/lang=__rest")
+    assert sorted(r.doc_id for r in en.collect()) == [1, 2]
+    assert [r.doc_id for r in zh.collect()] == [3]
+    assert [r.doc_id for r in rest.collect()] == [4]  # unlisted route kept
+
+
+def test_routed_rest_arm_keeps_null_routes(spark, tmp_path):
+    """Rows with a NULL route column must land in __rest, not vanish:
+    ~isin(...) is NULL for NULL input and a bare filter drops it."""
+    import gcpdatapipelines_spark.streaming as S
+
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = "doc_id BIGINT, lang STRING"
+    spark.createDataFrame(
+        [(1, "en"), (2, None), (3, "zh"), (4, "xx")], schema
+    ).write.mode("overwrite").parquet(str(src / "d.parquet"))
+    stream = (
+        spark.readStream.schema(schema).format("parquet").load(str(src / "d.parquet"))
+    )
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    qs = S.routed_write_streams_per_trigger(
+        stream, out, ckpt, {"en": "1 seconds"}, available_now=True
+    )
+    for q in qs:
+        q.awaitTermination()
+    rest = spark.read.parquet(f"{out}/lang=__rest")
+    ids = {r.doc_id for r in rest.collect()}
+    assert ids == {2, 3, 4}, ids  # NULL route included
+
+
+def test_routed_empty_triggers_rejected(spark):
+    import gcpdatapipelines_spark.streaming as S
+
+    with pytest.raises(ValueError, match="non-empty"):
+        S.routed_write_streams_per_trigger(None, "o", "c", {})
+    with pytest.raises(ValueError, match="unparseable"):
+        S.routed_write_streams_per_trigger(None, "o", "c", {"en": "not an interval"})

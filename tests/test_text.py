@@ -1,10 +1,13 @@
-"""Text-analysis operator semantics."""
+"""operators/text.py: tokenizing, chunking, retrieval scoring and
+winnowing fingerprints."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 
 from gcpdatapipelines_spark.operators import text as T
+from gcpdatapipelines_spark.operators.text import chunk_overlap
+from tests.conftest import SF_SMOKE, planted_docs
 
 
 def _one(spark, text):
@@ -395,3 +398,291 @@ def test_gopher_symbol_and_mean_len_rules(spark):
     }
     assert rows[0]["f_symbol"] == 0
     assert rows[1]["f_mean_len"] == 0 and rows[1]["keep"] == 0
+
+
+# ---------------------------------------------------------------------------
+# winnowing: the k-gram hash must stay inside codegen (no interpreted HOF)
+# ---------------------------------------------------------------------------
+
+
+def test_winnowing_hashes_in_codegen_not_hof(spark):
+    """The per-gram hash must be a plain per-row expression after an
+    explode of the position range — a higher-order transform() lambda
+    is INTERPRETED row-by-row and dominated the operator at ~300
+    grams/doc (r7: 6.5 -> 4.2 s solo at sf0.1 from this change
+    alone)."""
+    from gcpdatapipelines_spark.io import read_table
+    from gcpdatapipelines_spark.operators.text import winnowing_fingerprints
+
+    d = read_table(spark, SF_SMOKE, "documents")
+    out = winnowing_fingerprints(d, "doc_id", "text", k=20, window=8)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "transform(" not in plan  # no interpreted HOF on the hot path
+    assert "explode(sequence(" in plan
+    # and the gram hashing semantics: first/last full windows included
+    rows = out.groupBy().count().first()[0]
+    assert rows > 0
+
+
+# ---------------------------------------------------------------------------
+# winnowing: exchange BEFORE the fan-out
+# ---------------------------------------------------------------------------
+
+
+def test_winnowing_exchanges_before_explode_not_after(spark):
+    """The window's mandatory doc_id exchange must move to the small
+    pre-explode doc rows (repartition by doc_id), not shuffle the ~300x
+    larger gram rows: exactly two exchanges total — the doc_id
+    repartition and the distinct's (doc_id, fingerprint) agg exchange —
+    and the window consumes the repartition's partitioning directly."""
+    from gcpdatapipelines_spark.io import read_table
+    from gcpdatapipelines_spark.operators.text import winnowing_fingerprints
+
+    d = read_table(spark, SF_SMOKE, "documents")
+    out = winnowing_fingerprints(d, "doc_id", "text", k=20, window=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # one explicit repartition on doc_id (pre-explode; AQE renders the
+    # later distinct exchange only at runtime), and the window itself
+    # adds NO exchange — no shuffle key ever contains the gram hash
+    assert "REPARTITION_BY_NUM" in plan and "hashpartitioning(doc_id" in plan
+    assert plan.count("Exchange") <= 2, plan
+    assert "hashpartitioning(h#" not in plan and "hashpartitioning(pos" not in plan
+
+
+def test_fingerprint_overlap_injection_parity(spark):
+    """fingerprint_overlap_pairs(fingerprints=precomputed) matches the
+    self-building path."""
+    from gcpdatapipelines_spark.operators.text import (
+        fingerprint_overlap_pairs,
+        winnowing_fingerprints,
+    )
+
+    docs, _ = planted_docs(spark, n_clusters=10, dup_per_cluster=3, n_unique=20)
+    kw = dict(k=20, window=8, min_shared=5)
+    base = fingerprint_overlap_pairs(docs, "doc_id", "text", **kw)
+    fp = winnowing_fingerprints(docs, "doc_id", "text", 20, 8).persist()
+    inj = fingerprint_overlap_pairs(docs, "doc_id", "text", **kw, fingerprints=fp)
+    b = sorted(map(tuple, base.collect()))
+    i = sorted(map(tuple, inj.collect()))
+    assert b == i and len(b) > 0
+    fp.unpersist()
+
+
+class TestChunkOverlap:
+    def _doc(self, spark, n_tokens):
+        text = " ".join(f"w{i:03d}" for i in range(1, n_tokens + 1))
+        return spark.createDataFrame([(1, text)], "doc_id BIGINT, text STRING")
+
+    def test_short_doc_single_chunk(self, spark):
+        out = chunk_overlap(self._doc(spark, 10), "doc_id", "text", 64, 48).collect()
+        assert len(out) == 1
+        assert out[0].chunk_tokens == 10 and out[0].start_tok == 1
+
+    def test_overlap_and_tail(self, spark):
+        # 100 tokens, window 64 stride 48: chunks at 1 (1-64) and 49 (49-100)
+        out = sorted(
+            chunk_overlap(self._doc(spark, 100), "doc_id", "text", 64, 48).collect(),
+            key=lambda r: r.start_tok,
+        )
+        assert [(r.start_tok, r.chunk_tokens) for r in out] == [(1, 64), (49, 52)]
+        # the overlap region (tokens 49-64) appears in both chunks
+        assert out[0].chunk_text.split()[48:] == out[1].chunk_text.split()[:16]
+
+    def test_no_redundant_tail(self, spark):
+        # 60 tokens: chunk 1 covers 1-60 entirely; start 49 must NOT emit
+        out = chunk_overlap(self._doc(spark, 60), "doc_id", "text", 64, 48).collect()
+        assert [(r.start_tok, r.chunk_tokens) for r in out] == [(1, 60)]
+
+
+class TestInvertedIndex:
+    def test_postings_sorted_and_banded(self, spark):
+        docs = spark.createDataFrame(
+            [
+                (3, "apple banana"),
+                (1, "apple apple cherry"),
+                (2, "apple banana durian"),
+            ],
+            "doc_id BIGINT, text STRING",
+        )
+        from gcpdatapipelines_spark.operators.text import inverted_index
+
+        out = {r.token: r for r in
+               inverted_index(docs, "doc_id", "text", min_df=2).collect()}
+        # 'apple' in all 3 docs (repeats collapse), postings sorted
+        assert out["apple"].df == 3 and out["apple"].postings == [1, 2, 3]
+        assert out["banana"].df == 2 and out["banana"].postings == [2, 3]
+        # singletons dropped by min_df
+        assert "cherry" not in out and "durian" not in out
+
+    def test_max_df_cap(self, spark):
+        docs = spark.createDataFrame(
+            [(i, "stop word" if i else "stop") for i in range(4)],
+            "doc_id BIGINT, text STRING",
+        )
+        from gcpdatapipelines_spark.operators.text import inverted_index
+
+        out = {r.token for r in
+               inverted_index(docs, "doc_id", "text", 2, max_df=3).collect()}
+        assert out == {"word"}  # 'stop' df=4 exceeds the cap
+
+
+class TestSparseCosine:
+    def test_identical_docs_most_similar(self, spark):
+        docs = spark.createDataFrame(
+            [
+                (0, "apple banana cherry"),
+                (1, "apple banana cherry"),
+                (2, "durian elderberry fig"),
+                (3, "apple zebra yak"),
+            ],
+            "doc_id BIGINT, text STRING",
+        )
+        from gcpdatapipelines_spark.operators.text import sparse_cosine_topk
+
+        out = sparse_cosine_topk(docs, "doc_id", "text", query_max_id=1, k=3)
+        rows = sorted(out.collect(), key=lambda r: r.rnk)
+        # doc 1 is word-identical to query doc 0 -> rank 1, cosine 1.0
+        assert rows[0].doc_id == 1 and abs(rows[0].cos_sim - 1.0) < 1e-9
+        # doc 2 shares no tokens -> absent from candidates entirely
+        assert all(r.doc_id != 2 for r in rows)
+
+
+class TestHashingFeatures:
+    def test_counts_and_width(self, spark):
+        from gcpdatapipelines_spark.operators.text import hashing_features
+
+        docs = spark.createDataFrame(
+            [(1, "apple apple banana"), (2, "apple")],
+            "doc_id BIGINT, text STRING",
+        )
+        out = {r.doc_id: r.features for r in
+               hashing_features(docs, "doc_id", "text", dim=16).collect()}
+        assert len(out[1]) == 16 and len(out[2]) == 16
+        assert sum(out[1]) == 3 and sum(out[2]) == 1
+        # same token -> same slot: doc1's apple slot holds 2, doc2's 1
+        import hashlib
+        slot = int(hashlib.md5(b"apple").hexdigest()[:8], 16) % 16
+        assert out[1][slot] == 2 and out[2][slot] == 1
+
+
+def test_bm25_matches_python_model(spark):
+    import math
+
+    from gcpdatapipelines_spark.operators.text import bm25_topk
+
+    corpus = {
+        1: "spark join fast table spark",
+        2: "join window stream",
+        3: "table row filter value",
+        4: "spark spark spark spark window",
+    }
+    df = spark.createDataFrame(list(corpus.items()), "doc_id long, text string")
+    terms = ["spark", "window"]
+    got = {r["doc_id"]: r["bm25"] for r in bm25_topk(df, "doc_id", "text", terms).collect()}
+
+    toks = {d: t.split() for d, t in corpus.items()}
+    n, avgdl = len(toks), sum(map(len, toks.values())) / len(toks)
+    dfreq = {t: sum(t in v for v in toks.values()) for t in terms}
+    exp = {}
+    for d, v in toks.items():
+        s = 0.0
+        for t in terms:
+            tf = v.count(t)
+            if not tf:
+                continue
+            idf = math.log((n - dfreq[t] + 0.5) / (dfreq[t] + 0.5) + 1.0)
+            s += round(idf * tf * 2.2 / (tf + 1.2 * (1 - 0.75 + 0.75 * len(v) / avgdl)), 9)
+        if s:
+            exp[d] = round(s, 6)
+    assert got == exp
+    # doc 4 (4x spark) must outrank doc 1 (2x spark) despite saturation
+    assert got[4] > got[1]
+
+
+# ---------------------------------------------------------------------------
+# rake_keywords
+# ---------------------------------------------------------------------------
+
+
+def test_rake_matches_python_model(spark):
+    from gcpdatapipelines_spark.operators.text import rake_keywords
+
+    docs = [
+        (1, "deep learning of the deep neural network"),
+        (2, "neural network training and deep learning"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id BIGINT, text STRING")
+    got = {
+        r["phrase"]: (r["n_occur"], r["rake_score"])
+        for r in rake_keywords(df, "doc_id", "text", top=10).collect()
+    }
+
+    # phrases: doc1 -> [deep learning], [deep neural network]
+    #          doc2 -> [neural network training], [deep learning]
+    phrases = [
+        ["deep", "learning"],
+        ["deep", "neural", "network"],
+        ["neural", "network", "training"],
+        ["deep", "learning"],
+    ]
+    freq, deg = {}, {}
+    for p in phrases:
+        for w in p:
+            freq[w] = freq.get(w, 0) + 1
+            deg[w] = deg.get(w, 0) + len(p)
+    score = {w: deg[w] / freq[w] for w in freq}
+    want = {}
+    for p in phrases:
+        text = " ".join(p)
+        s = round(sum(score[w] for w in p), 6)
+        n, _ = want.get(text, (0, s))
+        want[text] = (n + 1, s)
+    assert got == want
+
+
+def test_rake_top_k_ordering(spark):
+    from gcpdatapipelines_spark.operators.text import rake_keywords
+
+    docs = [(i, "alpha beta gamma of delta") for i in range(5)]
+    df = spark.createDataFrame(docs, "doc_id BIGINT, text STRING")
+    out = rake_keywords(df, "doc_id", "text", top=1).collect()
+    assert len(out) == 1
+    # "alpha beta gamma" (len 3, score 9) beats "delta" (score 1)
+    assert out[0]["phrase"] == "alpha beta gamma"
+    assert out[0]["n_occur"] == 5
+
+
+# ---------------------------------------------------------------------------
+# winnowing md5 mode (oracle-expressible fingerprints)
+# ---------------------------------------------------------------------------
+
+
+def test_winnowing_md5_mode_same_pairs_semantics(spark):
+    from gcpdatapipelines_spark.operators.text import fingerprint_overlap_pairs
+
+    base = "the quick brown fox jumps over the lazy dog " * 6
+    rows = [
+        (1, base),
+        (2, base + " with a tiny suffix edit"),
+        (3, "completely different content about spark shuffles " * 6),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {
+        (r.id_1, r.id_2)
+        for r in fingerprint_overlap_pairs(
+            df, "doc_id", "text", k=8, window=4, min_shared=5,
+            max_df=None,
+        ).collect()
+    }
+    assert (1, 2) in got
+    assert all(3 not in pair for pair in got)
+
+
+def test_winnowing_md5_fingerprints_are_hex_strings(spark):
+    from gcpdatapipelines_spark.operators.text import winnowing_fingerprints
+
+    df = spark.createDataFrame([(1, "abcdefghijklmnop")], "doc_id bigint, text string")
+    rows = winnowing_fingerprints(df, "doc_id", "text", k=4, window=2).collect()
+    assert rows and all(
+        isinstance(r.fingerprint, str) and len(r.fingerprint) == 16 for r in rows
+    )

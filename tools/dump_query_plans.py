@@ -1,6 +1,6 @@
 """Dump .explain('formatted') for named queries to <out_dir>/<q>_<tag>.txt.
 
-    python tools/dump_query_plans.py plans/r11 before q1 q2 ...
+    python tools/dump_query_plans.py plans before q1 q2 ...
 
 A relative out_dir is resolved against the repository root.
 """
