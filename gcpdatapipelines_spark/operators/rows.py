@@ -48,14 +48,9 @@ def reshape(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
 
 def filter_eq_ci(df: DataFrame, col: str, value: str) -> DataFrame:
     """P6/P9: case-insensitive equality filter
-    (reference Flask_app/main.py:25-29)."""
+    (reference Flask_app/main.py:25-29); also the key predicate of
+    ``serving.point_query``'s Spark path (P7)."""
     return df.filter(F.lower(F.col(col)) == value.lower())
-
-
-def point_lookup(df: DataFrame, key_col: str, key: str) -> DataFrame:
-    """P7: point lookup by key (reference Fast_API/main.py:31-36);
-    missing key yields an empty frame, caller supplies defaults."""
-    return filter_eq_ci(df, key_col, key).limit(1)
 
 
 def to_csv_line(df: DataFrame, *cols: str, out: str = "line") -> DataFrame:

@@ -6,13 +6,20 @@ The reference re-scans the whole CSV on EVERY request
 (Flask_app/main.py:19 — documented anti-pattern, SURVEY.md §4.1). Here
 the engine side does the scan once:
 
-- ``point_query``: the engine-native form — case-insensitive filter +
-  limit(1) against a (cached) DataFrame; Catalyst pushes the predicate
-  to the scan.
+- ``point_query``: the engine-native form. On a cached frame no larger
+  than ``spark.sql.autoBroadcastJoinThreshold`` it probes a driver-side
+  hash index built with one Spark job the first time the frame's cache
+  entry is probed and dropped with that entry (the choice Spark makes
+  when it collects a small join side and hashes it). Any other frame
+  takes the Spark path: case-insensitive filter + limit(1), with the
+  predicate pushed to the scan.
 - ``build_index``: the serving-edge form (reference S6,
   Fast_API/read_csv_no_pandas.py:7-25) — collect the dimension once
   into a lowercased-key dict for O(1) probes. Only valid for
   dimension-sized tables; that is exactly the serving use case.
+- Both index forms hold what the Spark path returns: keys folded by
+  Spark's ``lower``, the first row per key in collect order, null keys
+  skipped; a hit is a copy, so callers may mutate it.
 - ``make_flask_app`` / ``make_fastapi_app``: thin demo endpoints with
   the reference's exact missing-key contract (zero-filled defaults,
   never an error — Fast_API/main.py:25-36). Import-gated: the engine
@@ -24,13 +31,70 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.rows import filter_eq_ci
+
+# point_query's hash indexes, one per (applicationId, id of the cache
+# entry's column-buffer RDD, key column). A cached frame is a fixed
+# snapshot, and that RDD lives exactly as long as it: unpersist and
+# clearCache drop it, and a write to a cached path recaches under a new
+# RDD. So a stale entry is never reached again, and each build drops
+# every entry whose RDD is gone or whose application has ended.
+_INDEXES: dict[tuple, dict] = {}
+
+
+def _index(df: DataFrame, key_col: str) -> dict:
+    """One collect of ``df`` into {lower(key): row dict}: the first row
+    per key in collect order, null keys skipped — exactly the row the
+    Spark path's filter + limit(1) returns for each key."""
+    names = df.columns
+    index: dict = {}
+    for r in df.select(F.lower(F.col(key_col)), "*").collect():
+        if r[0] is not None and r[0] not in index:
+            index[r[0]] = dict(zip(names, r[1:]))
+    return index
+
+
+def _probe(index: dict, key_col: str, key: str, defaults: dict) -> dict:
+    hit = index.get(key.lower())
+    if hit is None:
+        return {**defaults, key_col: key}
+    return dict(hit)
+
+
+def _cached_index(df: DataFrame, key_col: str) -> dict | None:
+    """The hash index of ``df``'s cache entry, built on its first probe;
+    None when ``df`` is not cached or is larger than the broadcast
+    threshold (a negative threshold disables the index)."""
+    spark = df.sparkSession
+    jspark = spark._jsparkSession  # noqa: SLF001
+    entry = jspark.sharedState().cacheManager().lookupCachedData(df._jdf)  # noqa: SLF001
+    if entry.isEmpty():
+        return None
+    # returns (creating it on first access) the entry's RDD; no job runs
+    rdd_id = entry.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+    app_id = spark.sparkContext.applicationId
+    memo_key = (app_id, rdd_id, key_col)
+    index = _INDEXES.get(memo_key)
+    if index is not None:
+        return index
+    threshold = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
+    if threshold < 0 or size > threshold:
+        return None
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
+    for k in [k for k in _INDEXES if k[0] != app_id or not persisted.containsKey(k[1])]:
+        del _INDEXES[k]
+    index = _INDEXES[memo_key] = _index(df, key_col)
+    return index
+
 
 def point_query(df: DataFrame, key_col: str, key: str, defaults: dict) -> dict:
     """Case-insensitive point lookup; missing key -> defaults with the
     probe key echoed back (reference Flask_app/main.py:21-29)."""
-    rows = (
-        df.filter(F.lower(F.col(key_col)) == key.lower()).limit(1).collect()
-    )
+    index = _cached_index(df, key_col)
+    if index is not None:
+        return _probe(index, key_col, key, defaults)
+    rows = filter_eq_ci(df, key_col, key).limit(1).collect()
     if not rows:
         return {**defaults, key_col: key}
     return rows[0].asDict()
@@ -40,16 +104,11 @@ def build_index(df: DataFrame, key_col: str) -> dict:
     """Collect a dimension into a lowercased-key dict for O(1) serving
     probes (reference S6). The collect is intentional and single-shot —
     the anti-pattern being replaced is per-request rescans."""
-    return {
-        r[key_col].lower(): r.asDict() for r in df.collect() if r[key_col] is not None
-    }
+    return _index(df, key_col)
 
 
 def index_lookup(index: dict, key_col: str, key: str, defaults: dict) -> dict:
-    hit = index.get(key.lower())
-    if hit is None:
-        return {**defaults, key_col: key}
-    return hit
+    return _probe(index, key_col, key, defaults)
 
 
 def make_flask_app(df: DataFrame, key_col: str, defaults: dict):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from gcpdatapipelines_spark import serving
 from gcpdatapipelines_spark.io import read_table
 from gcpdatapipelines_spark.operators import enrich as E
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_started_by
 
 
 def test_resolver_called_per_distinct_key(spark):
@@ -54,6 +54,124 @@ def test_index_lookup_matches_point_query(spark):
         "x": 0,
         "n_name": "nope",
     }
+
+
+# two rows share one key in different case with different payloads, a
+# null key and an empty key: the rows that tell an index apart from
+# filter + limit(1)
+DIM_ROWS = [("Alpha", 1), ("beta", 2), ("ALPHA", 3), (None, 4), ("", 5), ("Gamma", 6)]
+PROBES = ["alpha", "ALPHA", "Alpha", "BETA", "gamma", "", "delta", "None", "alp"]
+
+
+def _dim(spark, path, rows=DIM_ROWS):
+    spark.createDataFrame(rows, "k string, v int").repartition(1).write.mode(
+        "overwrite"
+    ).parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def _probe_all(df):
+    return [serving.point_query(df, "k", p, {"v": 0}) for p in PROBES]
+
+
+def test_index_lookup_keeps_the_row_point_query_returns(spark):
+    df = spark.createDataFrame([("Host", 1), ("HOST", 2), ("other", 3)], "k string, v int")
+    idx = serving.build_index(df, "k")
+    for probe in ("host", "HOST", "Other", "nope"):
+        assert serving.index_lookup(idx, "k", probe, {"v": 0}) == serving.point_query(
+            df, "k", probe, {"v": 0}
+        )
+
+
+def test_lookup_results_are_copies(spark, tmp_path):
+    df = spark.createDataFrame([("Host", 1)], "k string, v int")
+    idx = serving.build_index(df, "k")
+    serving.index_lookup(idx, "k", "host", {})["v"] = 99
+    assert serving.index_lookup(idx, "k", "host", {}) == {"k": "Host", "v": 1}
+    cached = _dim(spark, tmp_path / "dim").cache()
+    try:
+        serving.point_query(cached, "k", "beta", {})["v"] = 99
+        assert serving.point_query(cached, "k", "beta", {}) == {"k": "beta", "v": 2}
+    finally:
+        cached.unpersist()
+
+
+def test_cached_point_query_matches_the_spark_path(spark, tmp_path):
+    df = _dim(spark, tmp_path / "dim")
+    want = _probe_all(df)
+    assert want[0] == want[1] == want[2] == {"k": "Alpha", "v": 1}
+    assert want[5] == {"k": "", "v": 5} and want[7] == {"v": 0, "k": "None"}
+    df.cache()
+    try:
+        assert _probe_all(df) == want
+        assert serving._cached_index(df, "k") is not None
+    finally:
+        df.unpersist()
+
+
+def test_cached_probes_after_the_first_start_no_job(spark, tmp_path):
+    df = _dim(spark, tmp_path / "dim")
+    probes = [PROBES[i % len(PROBES)] for i in range(100)]
+    df.cache()
+    try:
+        _, first = jobs_started_by(spark, lambda: serving.point_query(df, "k", "alpha", {}))
+        _, rest = jobs_started_by(
+            spark, lambda: [serving.point_query(df, "k", p, {}) for p in probes]
+        )
+    finally:
+        df.unpersist()
+    assert first >= 1
+    assert rest == 0
+
+
+def test_write_under_a_cached_frame_rebuilds_the_index(spark, tmp_path):
+    path = tmp_path / "dim"
+    df = _dim(spark, path).cache()
+    try:
+        assert serving.point_query(df, "k", "gamma", {}) == {"k": "Gamma", "v": 6}
+        _dim(spark, path, [("Gamma", 1006)])
+        assert serving.point_query(df, "k", "gamma", {}) == {"k": "Gamma", "v": 1006}
+        assert serving.point_query(df, "k", "beta", {"v": 0}) == {"k": "beta", "v": 0}
+    finally:
+        df.unpersist()
+
+
+def test_unpersisted_frame_takes_the_spark_path(spark, tmp_path):
+    df = _dim(spark, tmp_path / "dim").cache()
+    serving.point_query(df, "k", "alpha", {})
+    df.unpersist()
+    assert serving._cached_index(df, "k") is None
+    got, jobs = jobs_started_by(spark, lambda: serving.point_query(df, "k", "beta", {}))
+    assert got == {"k": "beta", "v": 2} and jobs >= 1
+
+
+def test_negative_broadcast_threshold_disables_the_index(spark, tmp_path):
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(conf)
+    df = _dim(spark, tmp_path / "dim").cache()
+    spark.conf.set(conf, "-1")
+    try:
+        for p in PROBES[:3]:
+            _, jobs = jobs_started_by(spark, lambda p=p: serving.point_query(df, "k", p, {}))
+            assert jobs >= 1, p
+        assert serving._cached_index(df, "k") is None
+    finally:
+        spark.conf.set(conf, before)
+        df.unpersist()
+
+
+def test_index_memo_keeps_only_live_cache_entries(spark, tmp_path):
+    df = _dim(spark, tmp_path / "dim")
+    app = spark.sparkContext.applicationId
+    sizes = []
+    for _ in range(5):
+        df.cache()
+        assert serving.point_query(df, "k", "beta", {}) == {"k": "beta", "v": 2}
+        persisted = spark.sparkContext._jsc.getPersistentRDDs()
+        assert all(k[0] == app and persisted.containsKey(k[1]) for k in serving._INDEXES)
+        sizes.append(len(serving._INDEXES))
+        df.unpersist()
+    assert len(set(sizes)) == 1, sizes
 
 
 def test_web_apps_import_gated(spark):

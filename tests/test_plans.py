@@ -155,7 +155,7 @@ def test_tfidf_aggregates_are_partial(spark):
     assert P.has_partial_aggregation(df)
 
 
-def test_q2_correlated_min_decorrelates(spark):
+def test_q2_min_aggregate_and_size_filter_pushed(spark):
     """The per-part scalar-min subquery must compile to ONE aggregate
     joined back on p_partkey — never a per-row re-aggregation."""
     df = _q(spark, "q2_min_cost_supplier")
