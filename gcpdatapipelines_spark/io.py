@@ -20,7 +20,7 @@ import os
 import stat
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -113,7 +113,6 @@ def read_csv_with_rejects(
     path: str,
     schema: str,
     header: bool = True,
-    cache: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Declared-schema CSV read that quarantines malformed rows instead
     of failing or silently nulling them — the ingestion contract a
@@ -124,25 +123,32 @@ def read_csv_with_rejects(
     Returns (good, rejects): ``good`` has the declared columns for rows
     that parsed; ``rejects`` has the raw offending line (one column,
     ``raw``). Implementation: PERMISSIVE mode with a columnNameOfCorrupt
-    sentinel; both frames are cheap filters over one parsed frame.
+    sentinel; both frames are cheap filters over one parsed frame,
+    which is cached so the two consumers share one scan.
 
-    ``cache``: True (default) caches the parsed frame so the two
-    consumers share one scan — right when the input fits cluster
-    storage. For inputs beyond cache capacity, evicted partitions
-    would silently re-parse, so pass cache=False and either accept two
-    scans or write the parsed frame to a parquet intermediate and read
-    good/rejects from that (the caller owns the lifecycle either
-    way — this function never unpersists)."""
-    full = _as_ddl(schema) + ", __corrupt STRING"
-    df = (
-        spark.read.option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "__corrupt")
-        .schema(full)
-        .csv(path)
+    The parse cache has no handle of its own and this function never
+    unpersists it: callers release it with ``spark.catalog.clearCache()``
+    (as the ingest benchmark does after each pass). For inputs beyond
+    cache capacity, evicted partitions silently re-parse; write
+    ``good`` to a parquet intermediate instead of re-reading it."""
+    return _read_with_rejects(
+        spark.read.option("header", str(header).lower()), "csv", path, schema
     )
-    if cache:
-        df = df.cache()  # one scan, two consumers (good + rejects)
+
+
+def _read_with_rejects(
+    reader: DataFrameReader, fmt: str, path: str, schema: str
+) -> tuple[DataFrame, DataFrame]:
+    """(good, rejects(raw)) of one cached PERMISSIVE ``fmt`` parse of
+    ``path`` under ``schema`` plus a ``__corrupt`` sentinel column."""
+    df = (
+        reader.option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "__corrupt")
+        .schema(_as_ddl(schema) + ", __corrupt STRING")
+        .format(fmt)
+        .load(path)
+        .cache()  # one scan, two consumers (good + rejects)
+    )
     good = df.filter(F.col("__corrupt").isNull()).drop("__corrupt")
     rejects = df.filter(F.col("__corrupt").isNotNull()).select(
         F.col("__corrupt").alias("raw")
@@ -170,26 +176,11 @@ def read_jsonl_with_rejects(
     spark: SparkSession,
     path: str,
     schema: str,
-    cache: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Declared-schema JSONL read that quarantines malformed lines —
-    same contract and PERMISSIVE/corrupt-sentinel mechanics as
-    read_csv_with_rejects (including the ``cache`` lifecycle note
-    there). Returns (good, rejects(raw))."""
-    full = _as_ddl(schema) + ", __corrupt STRING"
-    df = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "__corrupt")
-        .schema(full)
-        .json(path)
-    )
-    if cache:
-        df = df.cache()
-    good = df.filter(F.col("__corrupt").isNull()).drop("__corrupt")
-    rejects = df.filter(F.col("__corrupt").isNotNull()).select(
-        F.col("__corrupt").alias("raw")
-    )
-    return good, rejects
+    same contract, parse cache and lifecycle as
+    :func:`read_csv_with_rejects`. Returns (good, rejects(raw))."""
+    return _read_with_rejects(spark.read, "json", path, schema)
 
 
 def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> None:

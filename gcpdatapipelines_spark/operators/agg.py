@@ -19,30 +19,6 @@ def count_per_key(df: DataFrame, *keys: str, alias: str = "cnt") -> DataFrame:
     return df.groupBy(*keys).agg(F.count("*").alias(alias))
 
 
-def mean_per_key(df: DataFrame, value: str, *keys: str, alias: str = "mean_val") -> DataFrame:
-    """A2: MeanCombineFn per key (reference pipeline.py:62)."""
-    return df.groupBy(*keys).agg(F.avg(value).alias(alias))
-
-
-def group_collect(df: DataFrame, value: str, *keys: str, alias: str = "vals") -> DataFrame:
-    """A3: GroupByKey -> (key, iterable) (reference
-    data_transpose_working_1.py:175). Sorted for determinism."""
-    return df.groupBy(*keys).agg(F.sort_array(F.collect_list(value)).alias(alias))
-
-
-def distinct_per_key(df: DataFrame, value: str, *keys: str, alias: str = "distinct_vals") -> DataFrame:
-    """A4: UniqueList — distinct within group (reference
-    data_transpose.py:45-48). collect_set is the map-side-combined
-    analogue of GroupByKey + set()."""
-    return df.groupBy(*keys).agg(F.sort_array(F.collect_set(value)).alias(alias))
-
-
-def collect_all(df: DataFrame, value: str, alias: str = "all_vals") -> DataFrame:
-    """A5: CombineGlobally ToList (reference data_transpose.py:110-114).
-    Single-reducer by construction — only for schema-sized data."""
-    return df.agg(F.sort_array(F.collect_list(value)).alias(alias))
-
-
 def distinct_rows(df: DataFrame, *cols: str) -> DataFrame:
     """A7: whole-row Distinct (reference schema_generator.ipynb cell 23)."""
     return (df.select(*cols) if cols else df).distinct()

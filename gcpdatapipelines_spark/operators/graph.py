@@ -389,95 +389,6 @@ def degree_histogram(
     return deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
-def pagerank(
-    pairs: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    damping: float = 0.85,
-    max_iter: int = 30,
-    tol: float | None = 1e-6,
-    check_every: int = 5,
-) -> DataFrame:
-    """(node, rank) by power iteration over the UNDIRECTED graph
-    (each edge contributes both directions), ranks summing to 1.
-
-    Classic shuffle shape: ranks ⋈ out-degree-normalized edges →
-    groupBy(dst)-sum per iteration, lineage truncated with
-    localCheckpoint so the plan stays O(1) across iterations (swap in
-    a reliable checkpoint dir at cluster scale). The symmetrized graph
-    has no dangling nodes, so mass is conserved without a dangling
-    redistribution term. Convergence = L1 delta < tol, computed as a
-    2-value aggregate on the same action that materializes the round
-    (a sync barrier, not a data transfer — same protocol as
-    connected_components). Engine-portable parity is NOT claimed:
-    float sums reassociate across partitionings, so catalog exposure
-    is rows-only; exactness is pinned in tests against a dense
-    reference solver at 1e-9."""
-    sym = (
-        pairs.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-    )
-    out_edges = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = out_edges.groupBy("u").agg(F.count("*").alias("outdeg"))
-    n = deg.count()
-    # Right-size the iteration partitioning to the graph, not to
-    # spark.sql.shuffle.partitions: per-iteration cost has a fixed
-    # floor per partition (task scheduling + checkpoint block), so a
-    # small graph on wide defaults pays 32x overhead for no
-    # parallelism, while a 100 TB edge list scales parts linearly.
-    # norm and ranks share one HashPartitioning on u, so the
-    # rank-contribution join is co-partitioned — the only shuffle per
-    # iteration is the groupBy(v) that the algorithm inherently needs.
-    parts = max(2, min(norm_parts_cap := 4096, n // 250_000 + 2))
-    norm = (
-        out_edges.join(deg, "u")
-        .select("u", "v", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .repartition(parts, "u")
-        .localCheckpoint()
-    )
-    ranks = (
-        deg.select("u", F.lit(1.0 / n).alias("rank"))
-        .repartition(parts, "u")
-        .localCheckpoint()
-    )
-    base = (1.0 - damping) / n
-    for it in range(max_iter):
-        contrib = (
-            norm.join(ranks, "u")
-            .groupBy("v")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("__in"))
-        )
-        new_ranks = (
-            contrib.select(
-                F.col("v").alias("u"),
-                (F.lit(base) + F.lit(damping) * F.col("__in")).alias("rank"),
-            )
-            .repartition(parts, "u")
-            .localCheckpoint()
-        )
-        # Convergence checks are an EXTRA job per round (the join+agg
-        # below) on top of the checkpoint that materializes the round;
-        # amortize by probing every ``check_every`` iterations, or pass
-        # tol=None for a fixed-iteration run with zero probe jobs —
-        # right for rank-order consumers, where ~10 damped iterations
-        # already separate the ordering and exact L1 residual is
-        # irrelevant.
-        if tol is not None and (it % check_every == check_every - 1):
-            delta = (
-                new_ranks.withColumnRenamed("rank", "__new")
-                .join(ranks, "u")
-                .agg(F.sum(F.abs(F.col("__new") - F.col("rank"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            if delta < tol:
-                ranks = new_ranks
-                break
-        ranks = new_ranks
-    return ranks.select(F.col("u").alias("node"), "rank")
-
-
 def _local_pagerank_exact(
     spark, rows, damping_num: int, damping_den: int, iters: int, scale: int
 ) -> DataFrame:
@@ -525,26 +436,31 @@ def pagerank_exact_scaled(
     scale: int = 10**12,
     local_threshold: int = 100_000,
 ) -> DataFrame:
-    """(node, rank_e12) — PageRank power iteration carried entirely in
-    SCALED INTEGER arithmetic: ranks are BIGINTs in units of
-    1/``scale``, per-edge contributions are integer divisions
-    ``rank DIV outdeg``, and the damped update is
-    ``base + (d_num * sum) DIV d_den``. Every operation is exactly
+    """(node, rank_e12) — PageRank power iteration over the UNDIRECTED
+    graph (each edge contributes both directions, so there are no
+    dangling nodes), carried entirely in SCALED INTEGER arithmetic:
+    ranks are BIGINTs in units of 1/``scale``, per-edge contributions
+    are integer divisions ``rank DIV outdeg``, and the damped update
+    is ``base + (d_num * sum) DIV d_den``. Every operation is exactly
     defined on the input bits — no float reassociation anywhere — so
     the result is bit-identical on ANY engine and ANY partitioning,
-    which is what makes this tier oracle-checkable where the float
-    production path (:func:`pagerank`) is not. Quantization error vs
-    the real-valued iteration is bounded by one unit per division per
-    round (< iters * (deg+2) / scale per node — ~1e-10 at the default
-    scale), far below rank-ordering resolution.
+    which is what makes PageRank oracle-checkable at all (a float
+    power iteration reassociates its sums across partitionings).
+    Quantization error vs the real-valued iteration is bounded by one
+    unit per division per round (< iters * (deg+2) / scale per node —
+    ~1e-10 at the default scale), far below rank-ordering resolution;
+    tests pin ``rank_e12 / scale`` within 1e-9 of a dense float
+    solver.
 
-    Same plan shape as :func:`pagerank`: co-partitioned rank⋈edges,
-    one groupBy(dst) shuffle per round, lineage truncated every THIRD
-    round with localCheckpoint (each checkpoint is an eager barrier
-    job — per-round truncation spent ~20% of wall on barriers at
-    local[32]; three join+agg rounds of lineage stay well inside
-    catalyst's comfort zone and the values are bit-identical either
-    way). Fixed-iteration by construction (integer states admit no
+    Plan shape: ranks and out-degree edges share one HashPartitioning
+    on u sized to the graph (not to spark.sql.shuffle.partitions), so
+    the rank⋈edges join is co-partitioned and the only shuffle per
+    round is the groupBy(dst) the algorithm needs. Lineage is
+    truncated every THIRD round with localCheckpoint (each checkpoint
+    is an eager barrier job — per-round truncation spent ~20% of wall
+    on barriers at local[32]; three join+agg rounds of lineage stay
+    well inside catalyst's comfort zone and the values are
+    bit-identical either way). Fixed-iteration by construction (integer states admit no
     residual tolerance). Size-tiered like :func:`connected_components`:
     <= ``local_threshold`` canonical edges replay the identical
     integer iteration on the driver (Python // == Spark DIV on the

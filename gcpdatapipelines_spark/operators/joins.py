@@ -185,6 +185,16 @@ def range_join_bucketed(
     return joined.drop("__bucket", "__start", "__end")
 
 
+# join types under which every output row carries a fact row, so the
+# dim side's salt replication can never surface as a duplicate
+_FACT_PRESERVING = frozenset({
+    "inner", "cross",
+    "left", "left_outer", "leftouter",
+    "left_semi", "leftsemi", "semi",
+    "left_anti", "leftanti", "anti",
+})
+
+
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -210,7 +220,18 @@ def salted_join(
     oracle twin checks. Cost: dim side is shuffled ``nsalts``× larger;
     worth it when the hot key's single-reducer time dominates. The
     broadcast hint is deliberately absent — salting only applies to
-    shuffle joins (a broadcast join has no reducer to skew)."""
+    shuffle joins (a broadcast join has no reducer to skew).
+
+    ``how`` is restricted to fact-preserving types: every dim row is
+    replicated ``nsalts``×, so a right/full outer join would emit each
+    unmatched dim row once per salt — those types raise instead of
+    silently over-counting."""
+    if how not in _FACT_PRESERVING:
+        raise ValueError(
+            f"salted_join supports fact-preserving joins only "
+            f"({sorted(_FACT_PRESERVING)}); got {how!r} — dim replication "
+            f"would duplicate unmatched dim rows"
+        )
     f = fact.withColumn(
         "__salt",
         F.pmod(F.xxhash64(F.col(salt_from)), F.lit(nsalts)).cast("int"),

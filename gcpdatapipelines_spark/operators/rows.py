@@ -12,26 +12,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def parse_csv_line(df: DataFrame, line_col: str, names: list[str]) -> DataFrame:
-    """P1: split+zip dict parse (reference csv_to_bq.py:14-20) as a
-    single split + positional projection. Prefer schema'd CSV read (S1);
-    this exists for already-loaded raw lines."""
-    parts = F.split(F.col(line_col), ",")
-    return df.select(*[parts.getItem(i).alias(n) for i, n in enumerate(names)])
-
-
 def project(df: DataFrame, *cols: str) -> DataFrame:
     """P2: column projection (reference csv_to_bq_NYC.py:58-62). Catalyst
     prunes the scan to exactly these columns."""
     return df.select(*cols)
-
-
-def duration_seconds(start: Column, end: Column, fmt: str = "yyyy-MM-dd'T'HH:mm:ss") -> Column:
-    """P3: strptime + timedelta.total_seconds (reference pipeline.py:11-20)
-    as built-in timestamp arithmetic. Works on string or timestamp cols."""
-    start_ts = F.to_timestamp(start, fmt) if fmt else start
-    end_ts = F.to_timestamp(end, fmt) if fmt else end
-    return (F.unix_timestamp(end_ts) - F.unix_timestamp(start_ts)).cast("double")
 
 
 def add_scalar(df: DataFrame, col: str, amount) -> DataFrame:
@@ -65,80 +49,32 @@ def composite_key(*cols: str, sep: str = "") -> Column:
     return F.concat_ws(sep, *[F.col(c).cast("string") for c in cols])
 
 
-def avg_rank2(
-    df: DataFrame,
-    col: str,
-    out_col: str,
-    nshards: int = 64,
-) -> DataFrame:
-    """Twice the AVERAGE rank (ties averaged) of ``col`` as an exact
-    BIGINT: 2*avg_rank = lo + hi of the tie group's row-number span =
-    2*rank() + tie_count - 1 — always an integer, so downstream
-    statistics (Spearman) stay in exact integer arithmetic.
-
-    Distributed the same way as :func:`dense_ids`: rows shard by value
-    range, each shard ranks locally under a bounded window, per-shard
-    offsets (the only driver state — ``nshards`` counts) lift local
-    ranks to global. A tie group has ONE value, hence lives in ONE
-    shard, so local rank + offset and the (shard, value) tie count are
-    globally exact. No stage sees a global order."""
-    from pyspark.sql import Window
-
-    bounds = df.agg(
-        F.min(F.col(col)).alias("mn"), F.max(F.col(col)).alias("mx")
-    ).first()
-    mn, mx = bounds["mn"], bounds["mx"]
-    if mn is None:
-        return df.withColumn(out_col, F.lit(None).cast("long"))
-    if mx == mn:
-        shard_expr = F.lit(0)
-    else:
-        # equal values always map to the same shard (pure function of
-        # the value), which is all the correctness argument needs
-        shard_expr = F.least(
-            F.lit(nshards - 1),
-            F.floor(
-                (F.col(col).cast("double") - float(mn))
-                / ((float(mx) - float(mn)) / nshards)
-            ).cast("int"),
-        )
-    sharded = df.withColumn("__shard", shard_expr)
-    counts = sharded.groupBy("__shard").count().collect()
-    base, run = {}, 0
-    for r in sorted(counts, key=lambda r: r["__shard"]):
-        base[r["__shard"]] = run
-        run += r["count"]
-    omap = F.create_map(*[F.lit(v) for kv in sorted(base.items()) for v in kv])
-    w_rank = Window.partitionBy("__shard").orderBy(col)
-    w_tie = Window.partitionBy("__shard", col)
-    return (
-        sharded.withColumn(
-            out_col,
-            (
-                2 * (F.rank().over(w_rank) + omap[F.col("__shard")])
-                + F.count("*").over(w_tie)
-                - 1
-            ).cast("long"),
-        )
-        .drop("__shard")
-    )
-
-
 def avg_rank2_multi(
     df: DataFrame,
     cols: dict[str, str],
     nshards: int = 64,
 ) -> DataFrame:
-    """:func:`avg_rank2` for several columns at once — identical rank
-    arithmetic per column, but the driver round trips FUSE: one agg
-    computes every column's (min, max) bounds (1 job instead of
-    |cols|), and one stacked groupBy computes every column's per-shard
-    counts (1 job instead of |cols|). The |cols| rank windows remain —
-    ranking k columns inherently orders k ways — but driver-side
-    latency no longer multiplies with the column count (2 + k jobs vs
-    3k), which is what in-bench times are made of at small SF.
+    """Twice the AVERAGE rank (ties averaged) of each column as an
+    exact BIGINT: 2*avg_rank = lo + hi of the tie group's row-number
+    span = 2*rank() + tie_count - 1 — always an integer, so downstream
+    statistics (Spearman) stay in exact integer arithmetic.
 
-    ``cols``: {column -> output rank column}."""
+    Distributed the same way as :func:`dense_ids`: rows shard by value
+    range, each shard ranks locally under a bounded window, per-shard
+    offsets (the only driver state — ``nshards`` counts per column)
+    lift local ranks to global. A tie group has ONE value, hence lives
+    in ONE shard, so local rank + offset and the (shard, value) tie
+    count are globally exact. No stage sees a global order.
+
+    The driver round trips are shared by all columns: one agg computes
+    every column's (min, max) bounds and one stacked groupBy computes
+    every column's per-shard counts. The |cols| rank windows remain —
+    ranking k columns inherently orders k ways — but driver-side
+    latency does not multiply with the column count (2 + k jobs), which
+    is what in-bench times are made of at small SF.
+
+    ``cols``: {column -> output rank column}; an all-NULL column ranks
+    to NULL."""
     from pyspark.sql import Window
 
     names = list(cols)

@@ -64,75 +64,93 @@ def _dyadic_c(p: int) -> int:
 def hll_distinct(
     df: DataFrame, key_col: str, p: int = 9
 ) -> DataFrame:
-    """HyperLogLog cardinality estimate with fully-visible registers.
-
-    bucket = h mod 2^p; rho = number of leading zeros of the remaining
-    (60-p)-bit word + 1, computed as (60-p) - floor(log2(w)) for w>0
-    (exact in float64: w < 2^51 is exactly representable and log2 of
-    it floors correctly) and (60-p)+1 for w=0. Registers are the
-    per-bucket max rho — a partial+final max aggregate, so at scale
-    each map task ships at most 2^p bytes.
+    """HyperLogLog cardinality estimate with fully-visible registers
+    (:func:`hll_registers` — a partial+final max aggregate, so at
+    scale each map task ships at most 2^p rows).
 
     Returns ONE row: (m, n_exact, v_empty, hll_raw, hll_estimate,
-    rel_err) — raw = alpha_m * m^2 / sum(2^-M_j) over ALL m buckets
-    (empty buckets contribute 2^0), estimate applies the standard
-    small-range correction E <= 2.5m -> m * ln(m/V). n_exact rides
-    along so the oracle checks the estimator AND its ground truth in
-    the same row."""
-    m = 1 << p
-    alpha = _hll_alpha(m)
-    w_bits = HASH_BITS - p
-    c = _dyadic_c(p)
-    # integer div/mod only: h is up to 2^60, which double arithmetic
-    # would corrupt (>2^53). rho <= w_bits+1 == c, so the register
-    # fold sum(2^-rho) is carried as the EXACT integer sum of
-    # 2^(c-rho) (each term a dyadic integer, total < 2^62) — one
-    # order-free associative sum, bit-identical in every engine.
-    keyed = df.select(_h60(F.col(key_col)).alias("h")).selectExpr(
-        f"h % {m} AS bucket", f"h div {m} AS w"
-    )
-    regs = keyed.groupBy("bucket").agg(
-        F.expr(
-            f"max(CASE WHEN w > 0 THEN {w_bits} - CAST(floor(log2(w)) AS BIGINT)"
-            f" ELSE {w_bits + 1} END)"
-        ).alias("rho")
-    )
+    rel_err) — the raw and small-range-corrected estimates of
+    :func:`_hll_estimate`. n_exact rides along so the oracle checks
+    the estimator AND its ground truth in the same row."""
     n_exact = df.select(F.countDistinct(key_col).alias("n_exact"))
-    summed = regs.agg(
-        F.expr(f"sum(CAST(power(2.0, {c} - rho) AS BIGINT))").alias("s_scaled"),
-        F.count("*").alias("v_occupied"),
-    )
-    scale = float(1 << c)
-    out = summed.crossJoin(n_exact).select(
-        F.lit(m).alias("m"),
-        F.col("n_exact"),
-        (F.lit(m) - F.col("v_occupied")).cast("long").alias("v_empty"),
-        trunc_dp(
-            F.lit(alpha * m * m)
-            / (
-                (
-                    F.col("s_scaled")
-                    + (F.lit(m) - F.col("v_occupied")) * F.lit(1 << c)
-                )
-                / F.lit(scale)
-            ),
-            6,
-        ).alias("hll_raw"),
-    )
-    corrected = F.when(
-        (F.col("hll_raw") <= 2.5 * m) & (F.col("v_empty") > 0),
-        trunc_dp(F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("v_empty")), 6),
-    ).otherwise(F.col("hll_raw"))
-    return out.select(
-        "m",
+    est = _hll_estimate(_hll_fold(hll_registers(df, key_col, p), p), p)
+    return est.crossJoin(n_exact).select(
+        F.lit(1 << p).alias("m"),
         "n_exact",
         "v_empty",
         "hll_raw",
-        corrected.alias("hll_estimate"),
-        trunc_dp(
-            F.abs(corrected - F.col("n_exact")) / F.col("n_exact"), 6
-        ).alias("rel_err"),
+        "hll_estimate",
+        _rel_err("hll_estimate"),
     )
+
+
+def _hll_regs(hashed: DataFrame, p: int, *by: str) -> DataFrame:
+    """(*by, bucket, rho): the per-bucket max-rho registers of a frame
+    of (*by, h). bucket = h mod 2^p; rho = the leading zeros of the
+    remaining (60-p)-bit word w = h div 2^p, plus one: (60-p) -
+    floor(log2(w)) for w > 0 and (60-p)+1 for w = 0. Integer div/mod
+    only: h is up to 2^60, which double arithmetic would corrupt
+    (> 2^53); w < 2^51 is exact in float64 and its log2 floors
+    correctly."""
+    m = 1 << p
+    w_bits = HASH_BITS - p
+    return (
+        hashed.selectExpr(*by, f"h % {m} AS bucket", f"h div {m} AS w")
+        .groupBy(*by, "bucket")
+        .agg(
+            F.expr(
+                f"max(CASE WHEN w > 0 THEN {w_bits} - CAST(floor(log2(w)) AS BIGINT)"
+                f" ELSE {w_bits + 1} END)"
+            ).alias("rho")
+        )
+    )
+
+
+def _hll_fold(regs: DataFrame, p: int, *by: str) -> DataFrame:
+    """(*by, s_scaled, v_occupied): the register fold sum(2^-rho) per
+    ``by`` group, carried as the EXACT integer sum of 2^(c-rho) with
+    c = _dyadic_c(p) >= every rho — each term a dyadic integer, one
+    order-free associative sum, bit-identical in every engine."""
+    c = _dyadic_c(p)
+    return regs.groupBy(*by).agg(
+        F.expr(f"sum(CAST(power(2.0, {c} - rho) AS BIGINT))").alias("s_scaled"),
+        F.count("*").alias("v_occupied"),
+    )
+
+
+def _hll_estimate(folded: DataFrame, p: int) -> DataFrame:
+    """``folded`` with (s_scaled, v_occupied) replaced by v_empty,
+    hll_raw = alpha_m * m^2 / sum(2^-M_j) over ALL m buckets (empty
+    buckets contribute 2^0) and hll_estimate, which applies the
+    standard small-range correction E <= 2.5m -> m * ln(m/V)."""
+    m = 1 << p
+    c = _dyadic_c(p)
+    occupied = F.col("v_occupied")
+    raw = trunc_dp(
+        F.lit(_hll_alpha(m) * m * m)
+        / (
+            (F.col("s_scaled") + (F.lit(m) - occupied) * F.lit(1 << c))
+            / F.lit(float(1 << c))
+        ),
+        6,
+    )
+    out = folded.withColumns(
+        {"v_empty": (F.lit(m) - occupied).cast("long"), "hll_raw": raw}
+    ).drop("s_scaled", "v_occupied")
+    return out.withColumn(
+        "hll_estimate",
+        F.when(
+            (F.col("hll_raw") <= 2.5 * m) & (F.col("v_empty") > 0),
+            trunc_dp(F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("v_empty")), 6),
+        ).otherwise(F.col("hll_raw")),
+    )
+
+
+def _rel_err(estimate: str):
+    """|estimate - n_exact| / n_exact, truncated to 6 dp."""
+    return trunc_dp(
+        F.abs(F.col(estimate) - F.col("n_exact")) / F.col("n_exact"), 6
+    ).alias("rel_err")
 
 
 def _hll_alpha(m: int) -> float:
@@ -192,9 +210,9 @@ def hll_rollup(
     """Mergeable distinct-count rollup in md5-mode: per-shard HLL
     registers (the KB-sized state a 100 TB pipeline persists per
     day/partition) max-merged into one union estimate — the same
-    registers, dyadic-exact fold, and small-range correction as
-    :func:`hll_distinct`, so the whole rollup is deterministic and
-    oracle-hashable (the production DataSketches tier lives in
+    register, fold and estimate helpers as :func:`hll_distinct`, so
+    the whole rollup is deterministic and oracle-hashable (the
+    production DataSketches tier lives in
     agg.hll_shard_sketches/hll_merge_estimate; its estimates are
     engine-native and pinned by band tests instead).
 
@@ -205,59 +223,24 @@ def hll_rollup(
 
     Returns ONE row: (n_shards, m, n_exact, v_empty, hll_estimate,
     rel_err)."""
-    m = 1 << p
-    alpha = _hll_alpha(m)
-    w_bits = HASH_BITS - p
-    c = _dyadic_c(p)
-    keyed = df.select(
-        F.col(shard_col).alias("shard"), _h60(F.col(key_col)).alias("h")
-    ).selectExpr("shard", f"h % {m} AS bucket", f"h div {m} AS w")
-    per_shard = keyed.groupBy("shard", "bucket").agg(
-        F.expr(
-            f"max(CASE WHEN w > 0 THEN {w_bits} - CAST(floor(log2(w)) AS BIGINT)"
-            f" ELSE {w_bits + 1} END)"
-        ).alias("rho")
+    per_shard = _hll_regs(
+        df.select(F.col(shard_col).alias("shard"), _h60(F.col(key_col)).alias("h")),
+        p,
+        "shard",
     )
     merged = per_shard.groupBy("bucket").agg(F.max("rho").alias("rho"))
     n_shards = per_shard.select("shard").distinct().agg(
         F.count("*").alias("n_shards")
     )
     n_exact = df.select(F.countDistinct(key_col).alias("n_exact"))
-    summed = merged.agg(
-        F.expr(f"sum(CAST(power(2.0, {c} - rho) AS BIGINT))").alias("s_scaled"),
-        F.count("*").alias("v_occupied"),
-    )
-    scale = float(1 << c)
-    out = summed.crossJoin(n_shards).crossJoin(n_exact).select(
-        F.col("n_shards"),
-        F.lit(m).alias("m"),
-        F.col("n_exact"),
-        (F.lit(m) - F.col("v_occupied")).cast("long").alias("v_empty"),
-        trunc_dp(
-            F.lit(alpha * m * m)
-            / (
-                (
-                    F.col("s_scaled")
-                    + (F.lit(m) - F.col("v_occupied")) * F.lit(1 << c)
-                )
-                / F.lit(scale)
-            ),
-            6,
-        ).alias("hll_raw"),
-    )
-    corrected = F.when(
-        (F.col("hll_raw") <= 2.5 * m) & (F.col("v_empty") > 0),
-        trunc_dp(F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("v_empty")), 6),
-    ).otherwise(F.col("hll_raw"))
-    return out.select(
+    est = _hll_estimate(_hll_fold(merged, p), p)
+    return est.crossJoin(n_shards).crossJoin(n_exact).select(
         "n_shards",
-        "m",
+        F.lit(1 << p).alias("m"),
         "n_exact",
         "v_empty",
-        corrected.alias("hll_estimate"),
-        trunc_dp(
-            F.abs(corrected - F.col("n_exact")) / F.col("n_exact"), 6
-        ).alias("rel_err"),
+        "hll_estimate",
+        _rel_err("hll_estimate"),
     )
 
 
@@ -737,41 +720,7 @@ def hll_registers(df: DataFrame, key_col: str, p: int = 9) -> DataFrame:
     the MERGEABLE state form of :func:`hll_distinct` (registers merge
     by per-bucket max; the estimate is derived, state is the sketch).
     Same hash/rho construction, integer-exact."""
-    m = 1 << p
-    w_bits = HASH_BITS - p
-    c = _dyadic_c(p)
-    keyed = df.select(_h60(F.col(key_col)).alias("h")).selectExpr(
-        f"h % {m} AS bucket", f"h div {m} AS w"
-    )
-    return keyed.groupBy("bucket").agg(
-        F.expr(
-            f"max(CASE WHEN w > 0 THEN {w_bits} - CAST(floor(log2(w)) AS BIGINT)"
-            f" ELSE {w_bits + 1} END)"
-        ).alias("rho")
-    )
-
-
-def _hll_estimate_expr(m: int):
-    """(s_scaled, v_occupied) -> corrected HLL estimate column chain
-    (shared by hll_distinct-style consumers). The s_scaled input must
-    use the same _dyadic_c(p) scale, p = log2(m)."""
-    alpha = _hll_alpha(m)
-    c = _dyadic_c(m.bit_length() - 1)
-    scale = float(1 << c)
-    raw = trunc_dp(
-        F.lit(alpha * m * m)
-        / (
-            (F.col("s_scaled") + (F.lit(m) - F.col("v_occupied")) * F.lit(1 << c))
-            / F.lit(scale)
-        ),
-        6,
-    )
-    v_empty = (F.lit(m) - F.col("v_occupied")).cast("long")
-    corrected = F.when(
-        (raw <= 2.5 * m) & (v_empty > 0),
-        trunc_dp(F.lit(float(m)) * F.log(F.lit(float(m)) / v_empty), 6),
-    ).otherwise(raw)
-    return corrected
+    return _hll_regs(df.select(_h60(F.col(key_col)).alias("h")), p)
 
 
 def hll_merge_audit(
@@ -793,7 +742,6 @@ def hll_merge_audit(
     full-outer-join disagreements (must be 0; pinned in tests and in
     the oracle twin)."""
     m = 1 << p
-    c = _dyadic_c(p)
     ra = hll_registers(a, a_key, p)
     rb = hll_registers(b, b_key, p)
     merged = (
@@ -818,10 +766,9 @@ def hll_merge_audit(
     )
 
     def _est(regs: DataFrame, name: str) -> DataFrame:
-        return regs.agg(
-            F.expr(f"sum(CAST(power(2.0, {c} - rho) AS BIGINT))").alias("s_scaled"),
-            F.count("*").alias("v_occupied"),
-        ).select(_hll_estimate_expr(m).alias(name))
+        return _hll_estimate(_hll_fold(regs, p), p).select(
+            F.col("hll_estimate").alias(name)
+        )
 
     n_exact = (
         a.select(F.col(a_key).alias("__k"))
@@ -1034,88 +981,39 @@ def hll_sliding_distinct(
 
     Returns (day, n_exact, v_empty, wau_hll, rel_err) per active
     day."""
-    m = 1 << p
-    alpha = _hll_alpha(m)
-    w_bits = HASH_BITS - p
-    c = _dyadic_c(p)
     day = F.date_trunc("day", F.col(ts_col)).cast("date")
-    keyed = df.select(
-        day.alias("day"), _h60(F.col(key_col)).alias("h")
-    ).selectExpr("day", f"h % {m} AS bucket", f"h div {m} AS w")
-    regs = keyed.groupBy("day", "bucket").agg(
-        F.expr(
-            f"max(CASE WHEN w > 0 THEN {w_bits} - CAST(floor(log2(w)) AS BIGINT)"
-            f" ELSE {w_bits + 1} END)"
-        ).alias("rho")
+    regs = _hll_regs(
+        df.select(day.alias("day"), _h60(F.col(key_col)).alias("h")), p, "day"
     )
-    fan = regs.select(
-        F.expr(
-            f"explode(sequence(0, {window_days - 1}))"
-        ).alias("__i"),
-        "day",
-        "bucket",
-        "rho",
-    ).select(
-        F.date_add(F.col("day"), F.col("__i")).alias("day"), "bucket", "rho"
+
+    def fan(frame: DataFrame, *cols: str) -> DataFrame:
+        # each row copied to every window that covers its day
+        return frame.select(
+            F.expr(f"explode(sequence(0, {window_days - 1}))").alias("__i"),
+            "day",
+            *cols,
+        ).select(F.date_add(F.col("day"), F.col("__i")).alias("day"), *cols)
+
+    merged = fan(regs, "bucket", "rho").groupBy("day", "bucket").agg(
+        F.max("rho").alias("rho")
     )
-    merged = fan.groupBy("day", "bucket").agg(F.max("rho").alias("rho"))
     days = df.select(day.alias("day")).distinct()
-    folded = (
-        merged.join(days, "day")
-        .groupBy("day")
-        .agg(
-            F.expr(f"sum(CAST(power(2.0, {c} - rho) AS BIGINT))").alias(
-                "s_scaled"
-            ),
-            F.count("*").alias("v_occupied"),
-        )
-    )
+    folded = _hll_fold(merged.join(days, "day"), p, "day")
     # exact audit: distinct (key, day) fanned across the window (the
     # w18 plan — the thing the sketch replaces; drop in production)
     kd = df.select(day.alias("day"), F.col(key_col).alias("__k")).distinct()
     exact = (
-        kd.select(
-            F.expr(f"explode(sequence(0, {window_days - 1}))").alias("__i"),
-            "day",
-            "__k",
-        )
-        .select(F.date_add(F.col("day"), F.col("__i")).alias("day"), "__k")
+        fan(kd, "__k")
         .join(days, "day")
         .groupBy("day")
         .agg(F.countDistinct("__k").alias("n_exact"))
     )
-    scale = float(1 << c)
-    raw = trunc_dp(
-        F.lit(alpha * m * m)
-        / (
-            (
-                F.col("s_scaled")
-                + (F.lit(m) - F.col("v_occupied")) * F.lit(1 << c)
-            )
-            / F.lit(scale)
-        ),
-        6,
-    )
-    out = folded.join(exact, "day").select(
-        "day",
-        "n_exact",
-        (F.lit(m) - F.col("v_occupied")).cast("long").alias("v_empty"),
-        raw.alias("__raw"),
-    )
-    corrected = F.when(
-        (F.col("__raw") <= 2.5 * m) & (F.col("v_empty") > 0),
-        trunc_dp(
-            F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("v_empty")), 6
-        ),
-    ).otherwise(F.col("__raw"))
-    return out.select(
+    return _hll_estimate(folded, p).join(exact, "day").select(
         "day",
         "n_exact",
         "v_empty",
-        corrected.alias("wau_hll"),
-        trunc_dp(
-            F.abs(corrected - F.col("n_exact")) / F.col("n_exact"), 6
-        ).alias("rel_err"),
+        F.col("hll_estimate").alias("wau_hll"),
+        _rel_err("hll_estimate"),
     )
 
 

@@ -7,63 +7,18 @@ answers, both pure DataFrame ops:
 
 - AQE skew-join (on in session.py): Spark splits oversized partitions
   at runtime. Covers sort-merge joins it can see.
-- Salting (here): explicit key-space spreading for the cases AQE can't
-  fix — aggregations over hot keys and joins where the runtime split
-  doesn't apply. The fact side scatters each key across ``salt_buckets``
-  sub-keys; the dimension side replicates per bucket; results are
-  identical to the unsalted op.
+- Salting: explicit key-space spreading for the cases AQE can't fix.
+  Aggregations over hot keys salt here (:func:`salted_count_per_key`);
+  joins where the runtime split doesn't apply use
+  ``joins.salted_join``, whose fact side scatters each key over
+  deterministic salts while the dimension side replicates per salt.
+  Results are identical to the unsalted op.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with a salted key: fact rows scatter uniformly over
-    ``salt_buckets`` sub-keys (deterministic hash of the whole row id
-    space via monotonically-unique rand seeded per row is NOT used —
-    salt must be data-independent, so it hashes the key plus a uniform
-    bucket draw from the row's partition/offset), dim rows replicate to
-    every bucket. Same result set as fact.join(dim, key, how) for the
-    fact-preserving join types; the hot key's shuffle partition is
-    split ~salt_buckets ways.
-
-    ``how`` is restricted to fact-preserving types: every dim row is
-    replicated salt_buckets times, so a right/full outer join would
-    emit each unmatched dim row once per bucket — those types raise
-    instead of silently over-counting.
-
-    Use when the dim side is too big to broadcast AND the key
-    distribution is skewed; otherwise prefer broadcast (joins.py) or
-    plain join + AQE.
-    """
-    allowed = {
-        "inner", "cross",
-        "left", "left_outer", "leftouter",
-        "left_semi", "leftsemi", "semi",
-        "left_anti", "leftanti", "anti",
-    }
-    if how not in allowed:
-        raise ValueError(
-            f"salted_join supports fact-preserving joins only ({sorted(allowed)}); "
-            f"got {how!r} — dim replication would duplicate unmatched dim rows"
-        )
-    salted_fact = fact.withColumn(
-        "__salt", (F.spark_partition_id() + F.monotonically_increasing_id()) % salt_buckets
-    )
-    buckets = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("__salt")
-    salted_dim = dim.select("*", buckets)
-    out = salted_fact.join(salted_dim, [key, "__salt"], how)
-    return out.drop("__salt")
 
 
 def quantile_repartition(

@@ -30,16 +30,6 @@ def rank_per_key(
     return df.withColumn(alias, fn().over(w))
 
 
-def top_n_per_key(
-    df: DataFrame, partition_by: list[str], order_by: list, n: int
-) -> DataFrame:
-    """Top-n rows per group via row_number filter (deterministic when
-    order_by includes a unique tiebreak column)."""
-    return rank_per_key(df, partition_by, order_by, "__rn", "row_number").filter(
-        F.col("__rn") <= n
-    ).drop("__rn")
-
-
 def top_k(df: DataFrame, order_by: list, k: int) -> DataFrame:
     """Global top-k: TakeOrdered physical plan, not a full sort."""
     return df.orderBy(*order_by).limit(k)

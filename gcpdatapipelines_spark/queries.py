@@ -5107,10 +5107,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ranks as BIGINTs in 1e-12 units; ``rank DIV outdeg``
     contributions; ``base + (85*sum) DIV 100`` update): every step is
     exactly defined on the bits, so a 10-step unrolled-CTE DuckDB twin
-    hash-checks the whole iteration end to end — the float production
-    path (operators/graph.py::pagerank, same plan shape) stays
-    rows-only-by-nature and is pinned vs a dense solver at 1e-9 in
-    tests/test_graph.py. Quantization error vs the real-valued
+    hash-checks the whole iteration end to end. The integer tier is
+    the only PageRank: tests/test_graph.py pins it within 1e-9 of a
+    dense float solver. Quantization error vs the real-valued
     iteration is < iters*(deg+2)/1e12 per node, far below
     rank-ordering resolution."""
     from .operators.graph import pagerank_exact_scaled
@@ -6868,7 +6867,7 @@ def _spearman_sql(dialect: str) -> str:
     """Shared moment+division tail; `dialect` in {spark, duckdb}.
 
     Spark reads ranks from the __spearman_ranks temp view (built by the
-    sharded avg_rank2 operator — no single-reducer window); DuckDB
+    rows.avg_rank2_multi* operators — no single-reducer window); DuckDB
     derives the identical integers from plain global windows. Reduction
     shifts (10^8 on |cov| and var before squaring) keep num/den inside
     38-digit decimals up to sf~0.3 with relative slack ~1e-15; widen by

@@ -913,26 +913,14 @@ def hll_daily_sketch_stream(
     key volume; max-merge makes batch replay idempotent, exactly as
     hll_sketch_stream's global form. State is written by
     _fold_into_state's staging swap."""
-    from .operators.sketches import HASH_BITS, _h60
-
-    m = 1 << p
-    w_bits = HASH_BITS - p
+    from .operators.sketches import _h60, _hll_regs
 
     def fold(batch_df: DataFrame, state: DataFrame | None) -> DataFrame:
         day = F.date_trunc("day", F.col(ts_col)).cast("date")
-        regs = (
-            batch_df.select(
-                day.alias("day"), _h60(F.col(key_col)).alias("h")
-            )
-            .selectExpr("day", f"h % {m} AS bucket", f"h div {m} AS w")
-            .groupBy("day", "bucket")
-            .agg(
-                F.expr(
-                    f"max(CASE WHEN w > 0 THEN {w_bits} -"
-                    f" CAST(floor(log2(w)) AS BIGINT)"
-                    f" ELSE {w_bits + 1} END)"
-                ).alias("rho")
-            )
+        regs = _hll_regs(
+            batch_df.select(day.alias("day"), _h60(F.col(key_col)).alias("h")),
+            p,
+            "day",
         )
         if state is None:
             return regs

@@ -3,7 +3,10 @@ are consistent, every query executes at sf0.001."""
 
 from __future__ import annotations
 
+import ast
 import json
+import pathlib
+from collections import defaultdict
 
 import pytest
 
@@ -222,3 +225,62 @@ def test_weak_row_upgrades_when_oracle_exists(tmp_path):
     # rows-only disposition of an oracle-backed name: not red (err is
     # the benign label, no explicit False) but weak -> upgraded lane
     assert name in weak and name not in red
+
+
+# ---------------------------------------------------------------------------
+# package surface: one definition per public function, none unreferenced
+# ---------------------------------------------------------------------------
+
+_ROOT = pathlib.Path(__file__).resolve().parent.parent
+_PKG = _ROOT / "gcpdatapipelines_spark"
+
+
+def _public_functions() -> dict[str, list[str]]:
+    """name -> the package modules defining it as a public module-level
+    function. queries.py is skipped: its registered query functions
+    share names with the operators they wrap by design."""
+    defs = defaultdict(list)
+    for path in sorted(_PKG.rglob("*.py")):
+        if path.name == "queries.py":
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                defs[node.name].append(str(path.relative_to(_ROOT)))
+    return defs
+
+
+def test_no_public_function_defined_in_two_modules():
+    twice = {name: mods for name, mods in _public_functions().items() if len(mods) > 1}
+    assert not twice, twice
+
+
+def test_every_public_function_is_referenced():
+    """Each public function is named (called, imported or looked up as
+    an attribute) somewhere outside its own body: in the package,
+    tests, tools, the benchmark, ``__spark_entry__.py`` or ``bench.py``.
+    Docstrings and comments do not count."""
+    sources = [
+        *_PKG.rglob("*.py"),
+        *(_ROOT / "tests").rglob("*.py"),
+        *(_ROOT / "tools").rglob("*.py"),
+        *(_ROOT / "perfbench").rglob("*.py"),
+        _ROOT / "__spark_entry__.py",
+        _ROOT / "bench.py",
+    ]
+    used = set()
+    for path in sources:
+        for top in ast.parse(path.read_text()).body:
+            own = top.name if isinstance(top, ast.FunctionDef) else None
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                elif isinstance(node, ast.alias):
+                    name = node.name.rsplit(".", 1)[-1]
+                else:
+                    continue
+                if name != own:
+                    used.add(name)
+    unreferenced = sorted(set(_public_functions()) - used)
+    assert not unreferenced, unreferenced

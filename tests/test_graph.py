@@ -183,11 +183,14 @@ def _dense_pagerank(edges, damping=0.85, iters=200):
 
 
 def test_pagerank_matches_dense_solver(spark):
-    from gcpdatapipelines_spark.operators.graph import pagerank
+    from gcpdatapipelines_spark.operators.graph import pagerank_exact_scaled
 
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
     df = spark.createDataFrame(edges, "u BIGINT, v BIGINT")
-    got = {r.node: r.rank for r in pagerank(df, tol=1e-12, max_iter=200).collect()}
+    got = {
+        r.node: r.rank_e12 / 1e12
+        for r in pagerank_exact_scaled(df, iters=200).collect()
+    }
     want = _dense_pagerank(edges)
     assert set(got) == set(want)
     for k in want:
@@ -231,14 +234,15 @@ def test_pagerank_exact_scaled_matches_integer_model(spark):
 
 
 def test_pagerank_exact_scaled_tracks_float_ranks(spark):
-    """The quantized iteration stays within ~1e-9 of the float path at
-    the same iteration count (quantization bound << rank resolution)."""
-    from gcpdatapipelines_spark.operators.graph import pagerank, pagerank_exact_scaled
+    """The quantized iteration stays within ~1e-9 of the float
+    iteration at the same iteration count (quantization bound << rank
+    resolution)."""
+    from gcpdatapipelines_spark.operators.graph import pagerank_exact_scaled
 
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
     df = spark.createDataFrame(edges, "u BIGINT, v BIGINT")
     exact = {r.node: r.rank_e12 / 1e12 for r in pagerank_exact_scaled(df, iters=10).collect()}
-    flt = {r.node: r.rank for r in pagerank(df, tol=None, max_iter=10).collect()}
+    flt = _dense_pagerank(edges, iters=10)
     assert set(exact) == set(flt)
     for k in flt:
         assert abs(exact[k] - flt[k]) < 1e-9

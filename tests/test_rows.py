@@ -60,7 +60,7 @@ def test_avg_rank2_dict_tie_integers(spark):
 def test_avg_rank2_multi_matches_chained(spark):
     import random
 
-    from gcpdatapipelines_spark.operators.rows import avg_rank2, avg_rank2_multi
+    from gcpdatapipelines_spark.operators.rows import avg_rank2_multi
 
     rng = random.Random(5)
     rows = [
@@ -70,7 +70,7 @@ def test_avg_rank2_multi_matches_chained(spark):
     df = spark.createDataFrame(rows, "id LONG, a LONG, b DOUBLE, c DOUBLE")
     chained = df
     for col, out in [("a", "r_a"), ("b", "r_b"), ("c", "r_c")]:
-        chained = avg_rank2(chained, col, out)
+        chained = avg_rank2_multi(chained, {col: out})
     fused = avg_rank2_multi(df, {"a": "r_a", "b": "r_b", "c": "r_c"})
     key = lambda r: r["id"]  # noqa: E731
     got_c = sorted(chained.select("id", "r_a", "r_b", "r_c").collect(), key=key)
@@ -113,27 +113,29 @@ def test_dense_ids_empty_and_single(spark):
 
 
 # ---------------------------------------------------------------------------
-# avg_rank2 / a42_spearman
+# avg_rank2_multi / a42_spearman
 # ---------------------------------------------------------------------------
 
 
 def test_avg_rank2_matches_pandas_average_rank(spark):
     import pandas as pd
 
-    from gcpdatapipelines_spark.operators.rows import avg_rank2
+    from gcpdatapipelines_spark.operators.rows import avg_rank2_multi
 
     vals = [3.0, 1.0, 2.0, 2.0, 2.0, 5.0, 1.0, 7.5]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i INT, x DOUBLE")
-    got = {r.i: r.r2 for r in avg_rank2(df, "x", "r2", nshards=3).collect()}
+    got = {r.i: r.r2 for r in avg_rank2_multi(df, {"x": "r2"}, nshards=3).collect()}
     want = (pd.Series(vals).rank() * 2).astype(int)
     assert got == {i: int(want[i]) for i in range(len(vals))}
 
 
 def test_avg_rank2_partitioning_invariant(spark):
-    from gcpdatapipelines_spark.operators.rows import avg_rank2
+    from gcpdatapipelines_spark.operators.rows import avg_rank2_multi
 
     rows = [(i, float((i * 13) % 7)) for i in range(200)]
     df = spark.createDataFrame(rows, "i INT, x DOUBLE")
-    a = sorted((r.i, r.r2) for r in avg_rank2(df, "x", "r2").collect())
-    b = sorted((r.i, r.r2) for r in avg_rank2(df.repartition(17), "x", "r2").collect())
+    a = sorted((r.i, r.r2) for r in avg_rank2_multi(df, {"x": "r2"}).collect())
+    b = sorted(
+        (r.i, r.r2) for r in avg_rank2_multi(df.repartition(17), {"x": "r2"}).collect()
+    )
     assert a == b

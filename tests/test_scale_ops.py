@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark import io, plans
 from gcpdatapipelines_spark.io import read_table
-from gcpdatapipelines_spark.operators import skew
+from gcpdatapipelines_spark.operators import joins, skew
 from tests.conftest import SF_SMOKE
 
 
@@ -20,7 +20,7 @@ def test_salted_join_matches_plain_join(spark):
     fact = o.withColumnRenamed("o_custkey", "c_custkey")
     plain = fact.join(c, "c_custkey").groupBy("c_nationkey").count()
     salted = (
-        skew.salted_join(fact, c, "c_custkey", salt_buckets=4)
+        joins.salted_join(fact, c, "c_custkey", "o_orderkey", nsalts=4)
         .groupBy("c_nationkey")
         .count()
     )
@@ -32,12 +32,11 @@ def test_salted_join_spreads_hot_key(spark):
     hot = spark.range(1000).select(F.lit(1).alias("k"), F.col("id"))
     dim = spark.createDataFrame([(1, "x")], "k INT, v STRING")
     salted = hot.withColumn(
-        "__salt",
-        (F.spark_partition_id() + F.monotonically_increasing_id()) % 4,
+        "__salt", F.pmod(F.xxhash64(F.col("id")), F.lit(4)).cast("int")
     )
     n_buckets = salted.select("__salt").distinct().count()
     assert n_buckets >= 2
-    out = skew.salted_join(hot, dim, "k", salt_buckets=4)
+    out = joins.salted_join(hot, dim, "k", "id", nsalts=4)
     assert out.count() == 1000
 
 
@@ -141,12 +140,12 @@ def test_salted_join_rejects_dim_preserving_how(spark):
     would duplicate unmatched dim rows — those types must raise."""
     import pytest
 
-    fact = read_table(spark, SF_SMOKE, "orders").select("o_custkey")
+    fact = read_table(spark, SF_SMOKE, "orders").select("o_custkey", "o_orderkey")
     dim = read_table(spark, SF_SMOKE, "customer")
     for how in ("right", "right_outer", "full", "full_outer", "outer"):
         with pytest.raises(ValueError, match="fact-preserving"):
-            skew.salted_join(fact, dim.withColumnRenamed("c_custkey", "o_custkey"),
-                             "o_custkey", how=how)
+            joins.salted_join(fact, dim.withColumnRenamed("c_custkey", "o_custkey"),
+                              "o_custkey", "o_orderkey", how=how)
 
 
 def test_salted_semi_join_matches_plain(spark):
@@ -156,7 +155,12 @@ def test_salted_semi_join_matches_plain(spark):
         .filter(F.col("c_acctbal") > 5000)
         .select(F.col("c_custkey").alias("o_custkey"))
     )
-    got = {r["o_orderkey"] for r in skew.salted_join(fact, dim, "o_custkey", how="left_semi").collect()}
+    got = {
+        r["o_orderkey"]
+        for r in joins.salted_join(
+            fact, dim, "o_custkey", "o_orderkey", how="left_semi"
+        ).collect()
+    }
     want = {r["o_orderkey"] for r in fact.join(dim, "o_custkey", "left_semi").collect()}
     assert got == want and got
 
