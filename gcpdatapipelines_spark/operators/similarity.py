@@ -9,11 +9,14 @@ Four tiers, all pure DataFrame ops unless noted:
   Cost O(n_queries * n_vectors): right up to ~10^4 queries at 100 TB
   scan widths, and the oracle-checkable reference for recall.
 
-- IVF (inverted-file) top-k: the ANN scale path. A coarse quantizer
-  (lowest-id sample, or k-means|| via ivf_build_kmeans — build and
-  probe both max-cosine) partitions vectors into nlist cells; queries
-  probe only the nprobe nearest cells, cutting the scanned fraction to
-  ~nprobe/nlist. Recall measured against brute force in tests.
+- IVF (inverted-file) top-k: the ANN scale path. One seeded coarse
+  quantizer (the nlist lowest-id vectors, 6-dp floored max-cosine
+  cells) partitions vectors into nlist cells; queries probe only the
+  nprobe nearest cells, cutting the scanned fraction to ~nprobe/nlist.
+  Recall is measured against brute force in tests; at nprobe == nlist
+  the answer is the exact scan's (sim_ivf_exhaustive). Trained
+  k-means cells measured lower recall@10 than these seeds (0.567 vs
+  0.867 at sf0.01, nlist=16, nprobe=4), so there is no trained tier.
 
 - pair scans (near-dup): embedding_neardup_pairs_codegen is the exact
   O(n^2) scan (codegen-unrolled scorer, bit-identical to the lambda
@@ -32,7 +35,7 @@ Four tiers, all pure DataFrame ops unless noted:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .portable import trunc_dp
@@ -61,20 +64,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def with_unit_vectors(df: DataFrame, vec_col: str, out_col: str = "unit_vec") -> DataFrame:
-    """Pre-normalize vectors (cast to double, divide by L2 norm) so
-    cosine reduces to a dot product at query time.
-
-    The norm is divided in through ``zip_with(v, array_repeat(norm,
-    size))`` so the dim-term norm fold appears exactly ONCE in the
-    expression tree — a ``transform(v, x -> x / _norm(v))`` lambda
-    would re-inline the fold per ELEMENT (the quadratic
-    shared-expression trap, NOTES.md)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norms = F.array_repeat(_norm(v), F.size(v))
-    return df.withColumn(out_col, F.zip_with(v, norms, lambda x, y: x / y))
-
-
 def _with_vec_norm(df: DataFrame, vec_col: str, out_vec: str, out_norm: str) -> DataFrame:
     """Cast to float64 and attach the L2 norm ONCE per vector. Pair
     scoring then costs a single dot product: cosine(a,b) =
@@ -83,6 +72,35 @@ def _with_vec_norm(df: DataFrame, vec_col: str, out_vec: str, out_norm: str) -> 
     of O(n^2) norm evaluations across a pair join."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     return df.withColumn(out_vec, v).withColumn(out_norm, _norm(F.col(out_vec)))
+
+
+def _guarded_vec_norm(df: DataFrame, vec_col: str, out_vec: str, out_norm: str) -> DataFrame:
+    """:func:`_with_vec_norm` with a zero norm replaced by 1.0, so a
+    zero vector's cosine to everything is 0.0, not an ANSI
+    DIVIDE_BY_ZERO (the kcenter-portable convention; the seeded
+    quantizer's oracle SQL applies the same CASE)."""
+    return _with_vec_norm(df, vec_col, out_vec, out_norm).withColumn(
+        out_norm, F.when(F.col(out_norm) == 0.0, F.lit(1.0)).otherwise(F.col(out_norm))
+    )
+
+
+def _cos6(a: str, an: str, b: str, bn: str):
+    """The engine-portable cosine of two normed vector columns:
+    dot(a, b) / (an * bn), floor-truncated to 6 dp (portable.trunc_dp)
+    so DuckDB's list_inner_product twin matches bit for bit."""
+    return trunc_dp(_dot(F.col(a), F.col(b)) / (F.col(an) * F.col(bn)), 6)
+
+
+def _topk(scored: DataFrame, q_id_col: str, id_col: str, k: int, *extra: str) -> DataFrame:
+    """Per query, the k best rows of ``scored`` ranked (sim desc, id):
+    (q_id, id, *extra, sim, rnk), rnk from row_number so ties on sim
+    go to the lower id."""
+    w = Window.partitionBy(q_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(q_id_col, id_col, *extra, "sim", "rnk")
+    )
 
 
 def cosine(a, b):
@@ -112,22 +130,11 @@ def brute_force_topk(
     q = _with_vec_norm(queries, q_vec_col, "__q", "__qn")
     joined = v.crossJoin(F.broadcast(q))
     scored = joined.select(
-        q_id_col,
-        id_col,
-        trunc_dp(
-            _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 6
-        ).alias("sim"),
+        q_id_col, id_col, _cos6("__q", "__qn", "__v", "__vn").alias("sim")
     )
     if exclude_self:
         scored = scored.filter(F.col(q_id_col) != F.col(id_col))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(q_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "sim", "rnk")
-    )
+    return _topk(scored, q_id_col, id_col, k)
 
 
 def embedding_neardup_pairs(
@@ -272,59 +279,28 @@ def embedding_neardup_pairs_codegen(
     )
 
 
-def _assign_nearest(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Assign each vector to its max-cosine centroid — as an
-    Arrow-batched BLAS matmul (the SRP-signature pattern): the centroid
-    set is bounded index metadata (nlist rows), so its unit matrix is
-    closed over as a numpy literal in a mapInPandas kernel, and each
-    Arrow batch computes all nlist cosines in one dgemm. No shuffle,
-    scales with the scan, and — unlike the previous 1024-term scalar
-    codegen chain — no one-time janino compile (~8 s per session at
-    nlist=16, dim=64; BLAS does the same arithmetic in microseconds).
-    The earlier crossJoin + window-argmax form shuffled corpus x nlist
-    rows just to pick a max; both rewrites avoid that.
-
-    Assignment quality only affects probe choice downstream (IVF
-    cells, k-means iterations), never an exact score, so the fp
-    reassociation difference between BLAS and scalar chains is
-    immaterial. Ties break to the lowest cent_id (np.argmax takes
-    the first max over the cent_id-sorted matrix — same contract as
-    the old window orderBy). Returns (id, vec, cent_id, __cs)."""
-    import numpy as np
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    cents = sorted(centroids.collect(), key=lambda r: r["cent_id"])
-    if not cents:
-        raise ValueError("empty centroid set")
-    C = np.asarray([[float(x) for x in r["cent_vec"]] for r in cents], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0] = 1.0
-    Cu = C / cn[:, None]
-    cent_ids = np.asarray([int(r["cent_id"]) for r in cents])
-    cent_id_type = centroids.schema["cent_id"].dataType
-
-    src = vectors.select(id_col, vec_col)
-    out_schema = StructType(
-        list(src.schema.fields)
-        + [StructField("cent_id", cent_id_type), StructField("__cs", DoubleType())]
+def _seeded_cells(v: DataFrame, id_col: str, nlist: int):
+    """The seeded quantizer over a frame carrying (id, __v, __vn) with
+    __vn zero-norm guarded (:func:`_guarded_vec_norm`). Returns (seeds,
+    assign): seeds = the ``nlist`` lowest-id vectors as (cent_id, __c,
+    __cn); assign = (id, cent_id), each vector's max-cosine seed with
+    the cosine floor-truncated to 6 dp before the argmax (absorbs
+    fold-order reassociation between engines) and ties to the lowest
+    cent_id. The argmax is a lexicographic struct max — one
+    partial+final agg keyed on id over the n x nlist broadcast
+    fan-out."""
+    seeds = v.orderBy(id_col).limit(nlist).select(
+        F.col(id_col).alias("cent_id"), F.col("__v").alias("__c"), F.col("__vn").alias("__cn")
     )
-
-    def kernel(batches):
-        for pdf in batches:
-            X = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
-            xn = np.linalg.norm(X, axis=1)
-            xn[xn == 0] = 1.0
-            cs = (X / xn[:, None]) @ Cu.T
-            idx = np.argmax(cs, axis=1)
-            out = pdf.copy()
-            out["cent_id"] = cent_ids[idx]
-            out["__cs"] = cs[np.arange(len(idx)), idx]
-            yield out
-
-    return src.mapInPandas(kernel, schema=out_schema)
+    scored = v.crossJoin(F.broadcast(seeds)).select(
+        id_col, "cent_id", _cos6("__v", "__vn", "__c", "__cn").alias("__cs")
+    )
+    assign = (
+        scored.groupBy(id_col)
+        .agg(F.max(F.struct(F.col("__cs"), (-F.col("cent_id")).alias("__nc"))).alias("__m"))
+        .select(F.col(id_col), (-F.col("__m.__nc")).alias("cent_id"))
+    )
+    return seeds, assign
 
 
 def semdedup_assign_seeded(
@@ -340,45 +316,15 @@ def semdedup_assign_seeded(
     (sim_embedding_neardup, dedup_semantic_keep, and future scans at
     other thresholds). At 100 TB this IS the step you run once per
     corpus snapshot and write to the warehouse; queries.py caches it
-    session-scoped for exactly that cost model."""
-    v = vectors.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    )
-    seeds = (
-        v.orderBy(id_col)
-        .limit(nlist)
-        .select(
-            F.col(id_col).alias("cent_id"),
-            F.col("__v").alias("cent_vec"),
-            _norm(F.col("__v")).alias("__cnorm"),
-        )
-    )
-    # assignment: n x nlist broadcast fan-out, cosine rounded to 6 dp
-    # (absorbs fold-order reassociation between engines), argmax via a
-    # lexicographic struct max — one partial+final agg keyed on id.
-    scored = (
-        v.withColumn("__vn", _norm(F.col("__v")))
-        .crossJoin(F.broadcast(seeds))
-        .select(
-            F.col(id_col),
-            F.col("cent_id"),
-            trunc_dp(
-                _dot(F.col("__v"), F.col("cent_vec"))
-                / (F.col("__vn") * F.col("__cnorm")),
-                6,
-            ).alias("__cs"),
-        )
-    )
-    assign = scored.groupBy(id_col).agg(
-        F.max(F.struct(F.col("__cs"), (-F.col("cent_id")).alias("__nc"))).alias(
-            "__m"
-        )
-    ).select(F.col(id_col), (-F.col("__m.__nc")).alias("cent_id"))
+    session-scoped for exactly that cost model. The cells are
+    :func:`ivf_seeded_candidates`' (one :func:`_seeded_cells`); a zero
+    vector lands in the lowest cent_id."""
+    src = vectors.select(id_col, vec_col)
+    _, assign = _seeded_cells(_guarded_vec_norm(src, vec_col, "__v", "__vn"), id_col, nlist)
     # persisted: the assignment subtree feeds BOTH sides of the
     # within-cell self-join — without it the n x nlist fan-out and its
     # argmax agg execute twice.
-    return vectors.select(id_col, vec_col).join(assign, id_col).persist()
+    return src.join(assign, id_col).persist()
 
 
 def semdedup_pairs_seeded(
@@ -401,13 +347,10 @@ def semdedup_pairs_seeded(
 
     The quantizer here is ORACLE-EXPRESSIBLE by construction: cells
     are the ``nlist`` lowest-id vectors, and each vector goes to its
-    max-cosine seed with the cosine rounded to 6 dp before the argmax
-    (ties → lowest cent_id), so DuckDB reproduces the exact same
+    max-cosine seed with the cosine floor-truncated to 6 dp before the
+    argmax (ties → lowest cent_id), so DuckDB reproduces the exact same
     assignment and the whole approximate pipeline hash-checks
-    end-to-end. Production callers chasing recall swap in trained
-    k-means centroids (ivf_build_kmeans) — that only changes WHICH
-    cells exist, not the mechanics; the within-cell scan and its cost
-    bound are identical.
+    end-to-end. It is the IVF index's quantizer (:func:`_seeded_cells`).
 
     Returns (id_1 < id_2, sim) with sim from the same codegen-unrolled
     left-to-right chain as the exact scan. Pass ``assigned`` (a frame
@@ -557,76 +500,6 @@ def quantize_int8(
         trunc_dp(err_sum / F.size(F.col("qvec")), 9).alias("qerr_mean"),
         trunc_dp(err_max, 9).alias("qerr_max"),
     )
-
-
-def ivf_build_kmeans(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 16,
-    seed: int = 42,
-) -> tuple[DataFrame, DataFrame]:
-    """IVF with k-means|| centroids (Spark ML KMeans, fixed seed):
-    trained cells are balanced around the data's actual structure, so
-    probing nprobe cells recovers more of the true top-k than the
-    sample quantizer at the same scan fraction. Same (assignments,
-    centroids) contract as ivf_build; recall is compared in tests.
-
-    Metric-unified: KMeans is fit on UNIT vectors (euclidean k-means
-    on the unit sphere == spherical/cosine k-means up to the centroid
-    mean), the learned centers are re-normalized, and assignment uses
-    the same max-cosine rule as ivf_topk's probe — so build and query
-    agree on the metric and recall does not leak to a euclidean/cosine
-    mismatch."""
-    import math
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = with_unit_vectors(vectors, vec_col, "__u").withColumn(
-        "__features", array_to_vector(F.col("__u"))
-    )
-    model = KMeans(k=nlist, seed=seed, featuresCol="__features", predictionCol="__cell").fit(
-        feats
-    )
-
-    def _unit(c):
-        n = math.sqrt(sum(float(x) * float(x) for x in c)) or 1.0
-        return [float(x) / n for x in c]
-
-    centroids = vectors.sparkSession.createDataFrame(
-        [(i, _unit(c)) for i, c in enumerate(model.clusterCenters())],
-        "cent_id INT, cent_vec ARRAY<DOUBLE>",
-    )
-    assignments = _assign_nearest(vectors, centroids, id_col, vec_col).select(
-        id_col, vec_col, "cent_id"
-    )
-    return assignments, centroids
-
-
-def ivf_build(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic IVF index: centroids = the nlist lowest-id vectors
-    (a seeded sample stand-in; ivf_build_kmeans is the trained
-    upgrade — the assignment/probe machinery is identical). Returns
-    (assignments, centroids); assignments carry each vector's
-    nearest-centroid id."""
-    centroids = (
-        vectors.orderBy(id_col)
-        .limit(nlist)
-        .select(
-            F.col(id_col).alias("cent_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cent_vec"),
-        )
-    )
-    assignments = _assign_nearest(vectors, centroids, id_col, vec_col).select(
-        id_col, vec_col, "cent_id"
-    )
-    return assignments, centroids
 
 
 def pq_build(
@@ -795,8 +668,6 @@ def pq_encode(
         )
         return t.selectExpr(id_col, f"{code} AS code")
 
-    from pyspark.sql import Window
-
     scored = _sub_d2(vectors, codebooks, id_col, vec_col)
     w = Window.partitionBy(id_col, "sub_id").orderBy("d2", "cent_id")
     best = (
@@ -834,8 +705,6 @@ def pq_topk(
     time, which is the entire point of PQ at 100 TB: the scan reads
     ~m bytes per row. Rows-only in the oracle catalog (ANN candidate
     quality is recall-tested against brute force)."""
-    from pyspark.sql import Window
-
     lut = _sub_d2(queries, codebooks, q_id_col, q_vec_col)
     code_rows = codes.select(
         id_col, F.posexplode(F.col("code")).alias("sub_id", "cent_id")
@@ -1147,48 +1016,35 @@ def ivf_topk_seeded(
     k: int = 10,
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Deterministic engine-parity IVF top-k — the sim_srp_lsh
-    axes-mode playbook applied to IVF: cells are the ``nlist``
-    lowest-id vectors (bounded, seedless, engine-reproducible — the
-    semdedup_pairs_seeded quantizer), every cosine in the pipeline
-    (corpus assignment, query probe ranking, final candidate scoring)
-    is floor-truncated to 6 dp before any argmax/rank, and ties break
-    to the lowest id. The ENTIRE approximate pipeline — which cells
-    exist, who lives where, which cells each query probes, the final
-    ranking — restates in plain SQL and hash-checks end to end.
-    Production keeps the trained-kmeans path (ivf_build + ivf_topk,
-    recall-pinned vs brute force; exhaustive twin oracle-proven by
-    sim_ivf_exhaustive) — swapping quantizers changes WHICH cells
-    exist, never the scan mechanics.
+    """Deterministic engine-parity IVF top-k, the one IVF index — the
+    sim_srp_lsh axes-mode playbook applied to IVF: cells are the
+    ``nlist`` lowest-id vectors (bounded, seedless, engine-reproducible
+    — the semdedup_pairs_seeded quantizer), every cosine in the
+    pipeline (corpus assignment, query probe ranking, final candidate
+    scoring) is floor-truncated to 6 dp before any argmax/rank, and
+    ties break to the lowest id. The ENTIRE approximate pipeline —
+    which cells exist, who lives where, which cells each query probes,
+    the final ranking — restates in plain SQL and hash-checks end to
+    end (sim_ivf_topk). At ``nprobe == nlist`` every cell is probed
+    and the result is brute_force_topk's (sim_ivf_exhaustive shares
+    its oracle); recall at nprobe < nlist is pinned vs brute force in
+    tests.
 
     Scale shape: assignment = broadcast-seed fan-out + one partial+
     final argmax agg; probe selection = per-query window over nlist
     rows; candidates = equi-join on cent_id with the tiny probe list
     broadcast; final scoring = one corpus-side equi-join on id. No
     cartesian anywhere; the scanned fraction is ~nprobe/nlist."""
-    from pyspark.sql import Window
-
     cand, v, q = ivf_seeded_candidates(
         vectors, queries, id_col, vec_col, q_id_col, q_vec_col, nlist, nprobe
     )
     pair = cand.join(v.select(id_col, "__v", "__vn"), id_col).join(
         F.broadcast(q.select(q_id_col, "__q", "__qn")), q_id_col
     )
-    final = pair.select(
-        q_id_col,
-        id_col,
-        trunc_dp(
-            _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 6
-        ).alias("sim"),
-    )
+    final = pair.select(q_id_col, id_col, _cos6("__q", "__qn", "__v", "__vn").alias("sim"))
     if exclude_self:
         final = final.filter(F.col(q_id_col) != F.col(id_col))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        final.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "sim", "rnk")
-    )
+    return _topk(final, q_id_col, id_col, k)
 
 
 def ivf_seeded_candidates(
@@ -1206,115 +1062,18 @@ def ivf_seeded_candidates(
     probed cells, plus the normed corpus/query frames for scoring.
     Returns (candidates, v, q). Scale probes and the growth tests
     count the candidate frame — its size is ~nprobe/nlist of n per
-    query, never n^2; :func:`ivf_topk_seeded` scores exactly it."""
-    from pyspark.sql import Window
-
-    def _guard(df):
-        # zero-norm guard, mirrored in the registered oracle SQL: a
-        # zero vector's cosine to everything is 0.0, not an ANSI
-        # DIVIDE_BY_ZERO (the kcenter-portable convention)
-        return df.withColumn(
-            "__vn",
-            F.when(F.col("__vn") == 0.0, F.lit(1.0)).otherwise(F.col("__vn")),
-        )
-
-    v = _guard(_with_vec_norm(vectors, vec_col, "__v", "__vn"))
-    seeds = (
-        v.orderBy(id_col)
-        .limit(nlist)
-        .select(
-            F.col(id_col).alias("cent_id"),
-            F.col("__v").alias("__c"),
-            F.col("__vn").alias("__cn"),
-        )
-    )
-    scored = v.crossJoin(F.broadcast(seeds)).select(
-        id_col,
-        "cent_id",
-        trunc_dp(
-            _dot(F.col("__v"), F.col("__c")) / (F.col("__vn") * F.col("__cn")), 6
-        ).alias("__cs"),
-    )
-    assign = (
-        scored.groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(F.col("__cs"), (-F.col("cent_id")).alias("__nc"))
-            ).alias("__m")
-        )
-        .select(F.col(id_col), (-F.col("__m.__nc")).alias("cent_id"))
-    )
-    q = _with_vec_norm(queries, q_vec_col, "__q", "__qn").withColumn(
-        "__qn",
-        F.when(F.col("__qn") == 0.0, F.lit(1.0)).otherwise(F.col("__qn")),
-    )
+    query, never n^2; :func:`ivf_topk_seeded` scores exactly it.
+    Norms are zero-guarded on both sides (:func:`_guarded_vec_norm`),
+    mirrored in the registered oracle SQL."""
+    v = _guarded_vec_norm(vectors, vec_col, "__v", "__vn")
+    seeds, assign = _seeded_cells(v, id_col, nlist)
+    q = _guarded_vec_norm(queries, q_vec_col, "__q", "__qn")
     qscore = q.crossJoin(F.broadcast(seeds)).select(
-        q_id_col,
-        "cent_id",
-        trunc_dp(
-            _dot(F.col("__q"), F.col("__c")) / (F.col("__qn") * F.col("__cn")), 6
-        ).alias("__cs"),
+        q_id_col, "cent_id", _cos6("__q", "__qn", "__c", "__cn").alias("sim")
     )
-    wq = Window.partitionBy(q_id_col).orderBy(
-        F.col("__cs").desc(), F.col("cent_id")
-    )
-    probes = (
-        qscore.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select(q_id_col, "cent_id")
-    )
+    probes = _topk(qscore, q_id_col, "cent_id", nprobe).select(q_id_col, "cent_id")
     cand = assign.join(F.broadcast(probes), "cent_id").select(q_id_col, id_col)
     return cand, v, q
-
-
-def ivf_topk(
-    assignments: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-    k: int = 10,
-    nprobe: int = 4,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """ANN top-k: score each query against only the vectors in its
-    nprobe nearest IVF cells. The cell join is an equi-join on cent_id,
-    so the big side shuffles once on cell id — the scanned fraction is
-    ~nprobe/nlist instead of 1."""
-    from pyspark.sql import Window
-
-    q_cells = queries.crossJoin(F.broadcast(centroids)).select(
-        q_id_col,
-        q_vec_col,
-        "cent_id",
-        cosine(F.col(q_vec_col), F.col("cent_vec")).alias("cs"),
-    )
-    wq = Window.partitionBy(q_id_col).orderBy(F.col("cs").desc(), F.col("cent_id"))
-    probes = (
-        q_cells.withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= nprobe)
-        .select(q_id_col, q_vec_col, "cent_id")
-    )
-    an = _with_vec_norm(assignments, vec_col, "__v", "__vn")
-    pn = _with_vec_norm(probes, q_vec_col, "__q", "__qn")
-    cand = an.join(F.broadcast(pn), "cent_id")
-    scored = cand.select(
-        q_id_col,
-        id_col,
-        trunc_dp(
-            _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 6
-        ).alias("sim"),
-    )
-    if exclude_self:
-        scored = scored.filter(F.col(q_id_col) != F.col(id_col))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "sim", "rnk")
-    )
 
 
 def srp_signatures(
@@ -1446,8 +1205,6 @@ def srp_candidate_pairs(
     stack = ", ".join(f"{b}, band_{b}" for b in range(bands))
     melted = sig.selectExpr(id_col, f"stack({bands}, {stack}) AS (band_idx, band_val)")
     if max_bucket is not None:
-        from pyspark.sql import Window
-
         melted = melted.withColumn(
             "__bn",
             F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val")),
@@ -1604,8 +1361,8 @@ def pq_build_sample(
     baseline; :func:`pq_build` is the k-means-trained upgrade with the
     identical (sub_id, cent_id, cent_vec) contract). Zero training
     cost and engine-reproducible, which makes the FULL encode + ADC
-    pipeline oracle-checkable — the same trick ivf_build plays for
-    sim_ivf_exhaustive. ``dim``: pass when known to skip the metadata
+    pipeline oracle-checkable — the same lowest-id seeding as the IVF
+    cells (:func:`_seeded_cells`). ``dim``: pass when known to skip the metadata
     job (r11)."""
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
@@ -1620,8 +1377,6 @@ def pq_build_sample(
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
         )
     )
-    from pyspark.sql import Window
-
     rn = F.row_number().over(Window.orderBy(F.col(id_col))) - 1
     ranked = seeds.select((rn).alias("cent_id"), "__v")
     return ranked.select(
@@ -1666,26 +1421,15 @@ def hard_negatives(
     construction); candidate generation at corpus scale swaps in the
     IVF probe exactly as it does for top-k — the ranking contract
     stays identical."""
-    from pyspark.sql import Window
-
     v = _with_vec_norm(vectors, vec_col, "__v", "__vn")
     q = _with_vec_norm(queries, q_vec_col, "__q", "__qn")
     joined = v.crossJoin(F.broadcast(q)).filter(
         F.col(label_col) != F.col(q_label_col)
     )
     scored = joined.select(
-        q_id_col,
-        id_col,
-        trunc_dp(
-            _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 6
-        ).alias("sim"),
+        q_id_col, id_col, _cos6("__q", "__qn", "__v", "__vn").alias("sim")
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "sim", "rnk")
-    )
+    return _topk(scored, q_id_col, id_col, k)
 
 
 def _local_kcenter_portable(spark, rows, id_col, vec_col, k, dim) -> DataFrame:
@@ -2026,8 +1770,6 @@ def binary_hamming_topk(
     the count of sign disagreements), so the catalog entry
     hash-checks end-to-end; recall@k against brute_force_topk stays
     pinned in tests."""
-    from pyspark.sql import Window
-
     nwords = dim // 32
     vs = binary_signatures(vectors, id_col, vec_col, dim)
     qs = binary_signatures(
@@ -2067,20 +1809,10 @@ def binary_hamming_topk(
             short[q_id_col] == F.col("__qid2"),
         )
         .select(
-            q_id_col,
-            id_col,
-            "hamming",
-            trunc_dp(
-                _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 6
-            ).alias("sim"),
+            q_id_col, id_col, "hamming", _cos6("__q", "__qn", "__v", "__vn").alias("sim")
         )
     )
-    w_s = Window.partitionBy(q_id_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w_s))
-        .filter(F.col("rnk") <= k)
-        .select(q_id_col, id_col, "hamming", "sim", "rnk")
-    )
+    return _topk(scored, q_id_col, id_col, k, "hamming")
 
 
 def matryoshka_prefix_audit(

@@ -103,8 +103,8 @@ def winnowing_fingerprints(
     minima taken lexicographically. Winnowing only needs a CONSISTENT
     hash order, not a specific hash — and md5 is the one hash both
     Spark and DuckDB compute identically, which makes the whole
-    select-minima pipeline oracle-checkable end-to-end (the ivf_build
-    seeded-quantizer trick applied to fingerprinting).
+    select-minima pipeline oracle-checkable end-to-end (the seeded IVF
+    quantizer's trick applied to fingerprinting).
 
     Shape: explode the POSITION range first (codegen), then hash each
     k-gram as a plain per-row expression — higher-order ``transform``

@@ -2163,8 +2163,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_srp_lsh axes-mode playbook): cells are the 16 lowest-id
     vectors, every cosine is 6-dp floor-truncated before argmax/rank,
     ties to lowest id, so DuckDB reproduces the exact cells, probes,
-    and ranking. Production keeps trained kmeans (ivf_build +
-    ivf_topk, recall-pinned; exhaustive twin = sim_ivf_exhaustive)."""
+    and ranking. The same index at nprobe=nlist is
+    sim_ivf_exhaustive."""
     from .operators.similarity import ivf_topk_seeded
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -4746,31 +4746,20 @@ def w13_rollup_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_ivf_exhaustive():
-    # Shares the brute-force oracle VERBATIM: at nprobe == nlist the
-    # IVF machinery scans every cell, so its top-k must equal the
-    # exact scan bit-for-bit (same 6-dp rounding + id tiebreak). This
-    # upgrades the IVF plumbing from rows-only/recall-tested to
-    # oracle-proven at its exactness ceiling; the nprobe<nlist entry
-    # (sim_ivf_topk) remains the approximate scale path.
-    @register("sim_ivf_exhaustive", ORACLE_SQL["sim_topk_bruteforce"])
-    def sim_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .operators.similarity import ivf_build, ivf_topk
+# Shares the brute-force oracle VERBATIM: at nprobe == nlist the IVF
+# index scans every cell, so its top-k must equal the exact scan
+# bit-for-bit (same 6-dp truncation + id tiebreak).
+@register("sim_ivf_exhaustive", ORACLE_SQL["sim_topk_bruteforce"])
+def sim_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF top-k at nprobe=nlist: every cell probed == exact scan;
+    shares sim_topk_bruteforce's oracle verbatim."""
+    from .operators.similarity import ivf_topk_seeded
 
-        emb = _t(spark, sf_dir, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        assignments, centroids = ivf_build(emb, nlist=16)
-        return ivf_topk(assignments, centroids, qs, k=10, nprobe=16)
-
-    sim_ivf_exhaustive.__doc__ = (
-        "IVF top-k at nprobe=nlist: every cell probed == exact scan; "
-        "shares sim_topk_bruteforce's oracle verbatim."
+    emb = _t(spark, sf_dir, "embeddings")
+    qs = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-
-
-_register_ivf_exhaustive()
+    return ivf_topk_seeded(emb, qs, nlist=16, nprobe=16, k=10)
 
 
 @register(
@@ -6539,8 +6528,8 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax) precisely so DuckDB reproduces the same cells and the
     whole approximate pipeline is hash-checked END-TO-END — the oracle
     runs the identical within-cell recipe, not the exact closure (that
-    stays sim_neardup_exact's job). Production swaps in trained
-    k-means centroids (ivf_build_kmeans) without touching the scan."""
+    stays sim_neardup_exact's job). The cells are the IVF index's
+    (sim_ivf_topk)."""
     from .operators.graph import cluster_assignments
     from .operators.similarity import semdedup_pairs_seeded
 

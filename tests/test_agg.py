@@ -13,6 +13,7 @@ from gcpdatapipelines_spark.operators.agg import (
     hll_merge_estimate,
     hll_shard_sketches,
 )
+from gcpdatapipelines_spark.plans import formatted_plan
 from tests.conftest import SF_SMOKE
 
 
@@ -26,9 +27,7 @@ def test_bootstrap_uniform_draw_evaluated_once(spark):
         F.col("id").alias("event_id"), (F.col("id") * 1.5).alias("value")
     )
     out = bootstrap_mean_ci(df, "event_id", "value", replicates=10)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(out)
     assert plan.count("md5(") == 1, plan
 
 

@@ -32,18 +32,28 @@ def test_salted_join_equals_plain_join_on_skewed_keys(spark):
 
 
 def test_salted_join_spreads_hot_key_across_salts(spark):
-    """Rows of ONE hot key must land in several salt buckets — the
-    whole point; salting by the key itself would collapse to one."""
-    from pyspark.sql import functions as F
+    """Joined rows of ONE hot key must land in several shuffle
+    partitions — the whole point; salting by the key itself would
+    collapse them into one. Partition coalescing is off so the
+    partition ids read are the salted shuffle's own."""
+    from gcpdatapipelines_spark.operators.joins import salted_join
 
-    fact = spark.createDataFrame(
-        [(i, 0) for i in range(1000)], "row_id BIGINT, k BIGINT"
-    )
-    salted = fact.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col("row_id")), F.lit(8)).cast("int")
-    )
-    n_buckets = salted.select("__salt").distinct().count()
-    assert n_buckets == 8
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        fact = spark.createDataFrame(
+            [(i, 0) for i in range(1000)], "row_id BIGINT, k BIGINT"
+        )
+        dim = spark.createDataFrame([(0, "hot")], "k BIGINT, attr STRING")
+        out = salted_join(fact, dim, "k", "row_id", nsalts=8).select(
+            F.spark_partition_id().alias("pid")
+        )
+        pids = [r["pid"] for r in out.collect()]
+    finally:
+        spark.conf.set(conf, before)
+    assert len(pids) == 1000
+    assert len(set(pids)) >= 2, set(pids)
 
 
 # ---------------------------------------------------------------------------

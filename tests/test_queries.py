@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gcpdatapipelines_spark import queries as Q
+from gcpdatapipelines_spark.plans import formatted_plan
 from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
@@ -19,9 +20,7 @@ def test_c4_funnel_stages_materialized_no_corpus_rescan(spark, sf_dir):
     import __spark_entry__ as entry
 
     df = entry.queries()["pipeline_c4_funnel"](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Scan parquet" not in plan, plan
     assert "ExistingRDD" in plan
 

@@ -55,7 +55,7 @@ def test_embedding_neardup_threshold(spark):
 def test_ivf_recall_vs_brute_force(spark):
     """IVF with nprobe=4/nlist=8 must recover a decent fraction of the
     exact top-10 on the fixture embeddings (recall floor deliberately
-    loose — the centroid sample is a stand-in, not k-means)."""
+    loose — the lowest-id seeds are a stand-in, not trained cells)."""
     emb = read_table(spark, SF_SMOKE, "embeddings")
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -64,44 +64,26 @@ def test_ivf_recall_vs_brute_force(spark):
         (r["q_id"], r["vec_id"])
         for r in S.brute_force_topk(emb, qs, k=10).collect()
     }
-    assignments, centroids = S.ivf_build(emb, nlist=8)
     approx = {
         (r["q_id"], r["vec_id"])
-        for r in S.ivf_topk(assignments, centroids, qs, k=10, nprobe=4).collect()
+        for r in S.ivf_topk_seeded(emb, qs, nlist=8, nprobe=4, k=10).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.3, f"IVF recall@10 {recall:.2f} unexpectedly low"
 
 
 def test_ivf_assignment_covers_all_vectors(spark):
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    assignments, centroids = S.ivf_build(emb, nlist=8)
-    assert assignments.count() == emb.count()
-    assert centroids.count() == 8
-
-
-def test_ivf_kmeans_recall_at_least_sample(spark):
-    """Trained centroids must not lose to the naive sample quantizer
-    (and typically beat it) at the same nlist/nprobe."""
+    """Probing every cell (nprobe == nlist) makes every vector a
+    candidate of every query: each vector lives in exactly one cell."""
     emb = read_table(spark, SF_SMOKE, "embeddings")
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    exact = {
-        (r["q_id"], r["vec_id"]) for r in S.brute_force_topk(emb, qs, k=10).collect()
-    }
-
-    def recall(build_fn):
-        assignments, centroids = build_fn(emb, nlist=8)
-        approx = {
-            (r["q_id"], r["vec_id"])
-            for r in S.ivf_topk(assignments, centroids, qs, k=10, nprobe=4).collect()
-        }
-        return len(exact & approx) / len(exact)
-
-    r_sample = recall(S.ivf_build)
-    r_kmeans = recall(S.ivf_build_kmeans)
-    assert r_kmeans >= max(r_sample - 0.1, 0.3), (r_kmeans, r_sample)
+    cand, _v, _q = S.ivf_seeded_candidates(emb, qs, nlist=8, nprobe=8)
+    got = [(r["q_id"], r["vec_id"]) for r in cand.collect()]
+    ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
+    assert sorted(got) == sorted((q, i) for q in range(3) for i in ids)
+    assert len(got) == 1500
 
 
 def test_codegen_neardup_bit_identical_to_lambda(spark):
@@ -932,6 +914,30 @@ def test_ivf_topk_seeded_zero_norm_vector_no_crash(spark):
     )
     out = ivf_topk_seeded(df, qs, nlist=4, nprobe=2, k=5).collect()
     assert out and all(r["vec_id"] != r["q_id"] for r in out)
+
+
+def test_seeded_assignment_zero_norm_vector_no_crash(spark):
+    """The within-cell scans share ivf_topk_seeded's zero-norm guard: a
+    zero vector's cosine to every seed is 0.0, so it lands in the
+    lowest cent_id, and the int8 pair scan scores it 0.0 — hand model
+    for nlist=2 (seeds = vectors 0 and 1)."""
+    rows = [
+        (0, [0.0, 0.0, 0.0, 0.0]),
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.0, 1.0, 0.0, 0.0]),
+        (3, [1.0, 1.0, 0.0, 0.0]),
+        (4, [0.5, 0.1, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    cells = {
+        r["vec_id"]: r["cent_id"]
+        for r in S.semdedup_assign_seeded(df, nlist=2).collect()
+    }
+    assert cells == {0: 0, 1: 1, 2: 0, 3: 1, 4: 1}
+    pairs = sorted(
+        tuple(r) for r in S.neardup_pairs_blas_int8(df, threshold=0.0, nlist=2).collect()
+    )
+    assert pairs == [(0, 2, 0.0), (1, 3, 0.707106), (1, 4, 0.98117), (3, 4, 0.830365)]
 
 
 def test_ivf_topk_seeded_finds_planted_duplicate(spark):

@@ -759,6 +759,8 @@ def test_hll_daily_sketch_stream_feeds_sliding_estimate(spark, tmp_path):
     from gcpdatapipelines_spark.operators.sketches import (
         HASH_BITS,
         _h60,
+        _hll_estimate,
+        _hll_fold,
         hll_sliding_distinct,
     )
 
@@ -784,40 +786,18 @@ def test_hll_daily_sketch_stream_feeds_sliding_estimate(spark, tmp_path):
     }
     assert got_regs == want_regs and len(want_regs) > 0
 
-    # sliding estimate FROM THE STATE == batch operator's estimate
-    from gcpdatapipelines_spark.operators.sketches import _hll_alpha
-
-    alpha = _hll_alpha(m)
+    # sliding estimate FROM THE STATE == batch operator's estimate:
+    # fan the state's registers across the 7-day window, max-merge,
+    # then the operator's own fold and estimate
     fan = state.select(
         F.expr("explode(sequence(0, 6))").alias("__i"), "day", "bucket", "rho"
     ).select(F.date_add(F.col("day"), F.col("__i")).alias("day"), "bucket", "rho")
     days = state.select("day").distinct()
-    folded = (
-        fan.join(days, "day")
-        .groupBy("day", "bucket")
-        .agg(F.max("rho").alias("rho"))
-        .groupBy("day")
-        .agg(
-            F.expr("sum(CAST(power(2.0, 52 - rho) AS BIGINT))").alias("s"),
-            F.count("*").alias("v"),
-        )
+    merged = (
+        fan.join(days, "day").groupBy("day", "bucket").agg(F.max("rho").alias("rho"))
     )
-    scale = float(1 << 52)
-    raw = F.round(
-        F.lit(alpha * m * m)
-        / ((F.col("s") + (F.lit(m) - F.col("v")) * F.lit(1 << 52)) / F.lit(scale)),
-        6,
-    )
-    est = folded.select(
-        "day",
-        F.when(
-            (raw <= 2.5 * m) & (F.lit(m) - F.col("v") > 0),
-            F.round(F.lit(float(m)) * F.log(F.lit(float(m)) / (F.lit(m) - F.col("v"))), 6),
-        )
-        .otherwise(raw)
-        .alias("est"),
-    )
-    got_est = {(r["day"], r["est"]) for r in est.collect()}
+    est = _hll_estimate(_hll_fold(merged, 7, "day"), 7)
+    got_est = {(r["day"], r["hll_estimate"]) for r in est.collect()}
     want_est = {
         (r["day"], r["wau_hll"])
         for r in hll_sliding_distinct(full, "user_id", "ts", 7, p=7).collect()

@@ -11,6 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gcpdatapipelines_spark.plans import formatted_plan
 from gcpdatapipelines_spark.session import get_spark
 
 import __spark_entry__ as entry_mod
@@ -29,9 +30,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = queries[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
