@@ -527,17 +527,31 @@ def write_zorder_clustered(
     )
 
 
+def _reads_only_cache(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s plan, with cache entries
+    substituted, is an ``InMemoryRelation``: each input is already read
+    from one cache entry, so caching ``df`` would store its rows twice."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()  # noqa: SLF001
+    return all(leaves.apply(i).nodeName() == "InMemoryRelation" for i in range(leaves.size()))
+
+
 def write_fanout(df: DataFrame, raw_path: str, agg_df: DataFrame, agg_path: str) -> None:
     """K5: multi-sink fan-out — one source written raw AND aggregated
-    (reference csv_to_bq_NYC.py:128-150). ``df.cache()`` so the source
-    is scanned once; at 100 TB the cache would instead be a first-write
-    then re-read, but the two-actions-one-lineage shape is identical."""
-    df.cache()
+    (reference csv_to_bq_NYC.py:128-150). The source is scanned once:
+    ``df`` is cached for the two writes unless its plan already reads
+    only cache entries (``read_csv_with_rejects``' parse cache, or a
+    frame the caller cached), which it then leaves as it found them. At
+    100 TB the cache would instead be a first-write then re-read, but
+    the two-actions-one-lineage shape is identical."""
+    owned = not _reads_only_cache(df)
+    if owned:
+        df.cache()
     try:
         write_overwrite(df, raw_path)
         write_overwrite(agg_df, agg_path)
     finally:
-        df.unpersist()
+        if owned:
+            df.unpersist()
 
 
 def compact_parquet(

@@ -103,13 +103,6 @@ def _topk(scored: DataFrame, q_id_col: str, id_col: str, k: int, *extra: str) ->
     )
 
 
-def cosine(a, b):
-    """Cosine similarity of two array columns, computed in float64."""
-    da = F.transform(a, lambda x: x.cast("double"))
-    db = F.transform(b, lambda x: x.cast("double"))
-    return _dot(da, db) / (_norm(da) * _norm(db))
-
-
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,

@@ -10,9 +10,12 @@ the engine side does the scan once:
   than ``spark.sql.autoBroadcastJoinThreshold`` it probes a driver-side
   hash index built with one Spark job the first time the frame's cache
   entry is probed and dropped with that entry (the choice Spark makes
-  when it collects a small join side and hashes it). Any other frame
-  takes the Spark path: case-insensitive filter + limit(1), with the
-  predicate pushed to the scan.
+  when it collects a small join side and hashes it). The frame's cache
+  entry is resolved once; a repeat probe of the same frame and key
+  column costs one JVM round trip, which checks that the entry's RDD
+  is still persisted. Any other frame takes the Spark path:
+  case-insensitive filter + limit(1), with the predicate pushed to the
+  scan.
 - ``build_index``: the serving-edge form (reference S6,
   Fast_API/read_csv_no_pandas.py:7-25) — collect the dimension once
   into a lowercased-key dict for O(1) probes. Only valid for
@@ -28,6 +31,8 @@ the engine side does the scan once:
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -36,10 +41,19 @@ from .operators.rows import filter_eq_ci
 # point_query's hash indexes, one per (applicationId, id of the cache
 # entry's column-buffer RDD, key column). A cached frame is a fixed
 # snapshot, and that RDD lives exactly as long as it: unpersist and
-# clearCache drop it, and a write to a cached path recaches under a new
-# RDD. So a stale entry is never reached again, and each build drops
-# every entry whose RDD is gone or whose application has ended.
+# clearCache drop it from the SparkContext's persistent-RDD map before
+# they return, a write to a cached path recaches under a new RDD, and
+# RDD ids are never reused. So a stale entry is never reached again,
+# and each build drops every entry whose RDD is gone or whose
+# application has ended.
 _INDEXES: dict[tuple, dict] = {}
+
+# Each probed frame's last resolution: frame -> (its SparkContext, that
+# context's persistent-RDD map, the _INDEXES key). A repeat probe with
+# the same key column is served when the key's RDD is still in the map
+# (one JVM call); any miss resolves the cache entry again. Weak keys: a
+# dropped frame leaves the memo.
+_RESOLVED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _index(df: DataFrame, key_col: str) -> dict:
@@ -65,6 +79,17 @@ def _cached_index(df: DataFrame, key_col: str) -> dict | None:
     """The hash index of ``df``'s cache entry, built on its first probe;
     None when ``df`` is not cached or is larger than the broadcast
     threshold (a negative threshold disables the index)."""
+    resolved = _RESOLVED.get(df)
+    if resolved is not None:
+        sc, persisted, memo_key = resolved
+        index = _INDEXES.get(memo_key)
+        if (
+            index is not None
+            and memo_key[2] == key_col
+            and sc._jsc is not None  # noqa: SLF001 -- None once the context stops
+            and persisted.contains(memo_key[1])
+        ):
+            return index
     spark = df.sparkSession
     jspark = spark._jsparkSession  # noqa: SLF001
     entry = jspark.sharedState().cacheManager().lookupCachedData(df._jdf)  # noqa: SLF001
@@ -72,19 +97,20 @@ def _cached_index(df: DataFrame, key_col: str) -> dict | None:
         return None
     # returns (creating it on first access) the entry's RDD; no job runs
     rdd_id = entry.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
-    app_id = spark.sparkContext.applicationId
+    sc = spark.sparkContext
+    app_id = sc.applicationId
     memo_key = (app_id, rdd_id, key_col)
     index = _INDEXES.get(memo_key)
-    if index is not None:
-        return index
-    threshold = jspark.sessionState().conf().autoBroadcastJoinThreshold()
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
-    if threshold < 0 or size > threshold:
-        return None
-    persisted = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
-    for k in [k for k in _INDEXES if k[0] != app_id or not persisted.containsKey(k[1])]:
-        del _INDEXES[k]
-    index = _INDEXES[memo_key] = _index(df, key_col)
+    persisted = sc._jsc.sc().persistentRdds()  # noqa: SLF001
+    if index is None:
+        threshold = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()  # noqa: SLF001
+        if threshold < 0 or size > threshold:
+            return None
+        for k in [k for k in _INDEXES if k[0] != app_id or not persisted.contains(k[1])]:
+            del _INDEXES[k]
+        index = _INDEXES[memo_key] = _index(df, key_col)
+    _RESOLVED[df] = (sc, persisted, memo_key)
     return index
 
 

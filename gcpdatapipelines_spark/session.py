@@ -102,7 +102,9 @@ def get_spark(
     and the shuffle partition count default to the number of cores
     this process may run on (its CPU affinity). The driver heap
     defaults to half of physical memory ($SPARK_GRAFT_DRIVER_MEM
-    overrides).
+    overrides). DataFrame debugging is off: errors carry their class
+    and message but not the Python call site that built the failing
+    expression.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     heap_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
@@ -152,6 +154,15 @@ def get_spark(
         # ~8-9 ms/fragment, NOTES.md r10). Stack traces still name the
         # operator via the plan's codegen comments.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # PySpark wraps every DataFrame and Column call to record its
+        # Python call site for error messages: about 10 JVM round trips
+        # per call (active session, a conf read, setting and clearing
+        # PySparkCurrentOrigin), which doubles the round trips of
+        # building a catalog query. PySpark reads the flag once per
+        # process, on its first wrapped call, so it is set at build
+        # time. Error classes and messages are unchanged; only the
+        # Python call-site context attached to them goes.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(_ENGINE_SESSION_TAG, "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

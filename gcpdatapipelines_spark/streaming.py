@@ -268,34 +268,6 @@ def dedup_stream(
     )
 
 
-from pyspark.sql.streaming import StreamingQueryListener
-
-
-class _RowCountListener(StreamingQueryListener):
-    """StreamingQueryListener accumulating numInputRows per query id —
-    the only progress channel that is not capped (lastProgress = final
-    batch only; recentProgress = last N). Registered per invocation
-    and removed in a finally."""
-
-    def __init__(self):
-        self.rows_by_query: dict[str, int] = {}
-        self.terminated: set[str] = set()
-
-    def onQueryStarted(self, event):
-        pass
-
-    def onQueryProgress(self, event):
-        p = event.progress
-        qid = str(p.id)
-        self.rows_by_query[qid] = self.rows_by_query.get(qid, 0) + int(p.numInputRows)
-
-    def onQueryIdle(self, event):
-        pass
-
-    def onQueryTerminated(self, event):
-        self.terminated.add(str(event.id))
-
-
 def incremental_pipeline(
     spark: SparkSession,
     source_dir: str,
@@ -314,35 +286,36 @@ def incremental_pipeline(
     fresh out_dir (or vice versa) and the ledger disagrees with the
     sink; always create/retire them together.
 
-    Returns the number of rows written by this invocation."""
-    import time
-
-    listener = _RowCountListener()
-    spark.streams.addListener(listener)
-    try:
-        ev = stream_events(spark, source_dir)
-        enriched = ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    Returns the number of rows written by this invocation. Raises
+    RuntimeError when the run's progress updates fill the buffer the
+    query keeps (``spark.sql.streaming.numRecentProgressUpdates``),
+    because the count could then be short."""
+    ev = stream_events(spark, source_dir)
+    enriched = ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
+    q = (
+        enriched.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    # availableNow may split the input into several micro-batches
+    # (maxFilesPerTrigger etc.); lastProgress reports only the final
+    # one. Each batch's progress is recorded before the query
+    # terminates, so recentProgress is complete once awaitTermination
+    # returns, unless the run outgrew its capped buffer. Spark trims
+    # that buffer while it holds >= numRecentProgressUpdates entries, so
+    # a full buffer holds one fewer.
+    q.awaitTermination()
+    progress = q.recentProgress
+    cap = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
+    if len(progress) >= cap - 1:
+        raise RuntimeError(
+            f"incremental_pipeline: {len(progress)} progress updates fill the buffer "
+            f"numRecentProgressUpdates={cap} keeps; the row count may be short"
         )
-        # availableNow may split the input into several micro-batches
-        # (maxFilesPerTrigger etc.) — lastProgress reports only the
-        # final batch, and recentProgress is CAPPED (default 100
-        # entries), so a long backlog would undercount. The listener
-        # sees every progress event; wait for the terminated event so
-        # none are still in flight.
-        q.awaitTermination()
-        deadline = time.time() + 30
-        while str(q.id) not in listener.terminated and time.time() < deadline:
-            time.sleep(0.05)
-        return int(listener.rows_by_query.get(str(q.id), 0))
-    finally:
-        spark.streams.removeListener(listener)
+    return sum(int(p.numInputRows) for p in progress)
 
 
 def enrich_stream(

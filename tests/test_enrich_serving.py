@@ -174,6 +174,87 @@ def test_index_memo_keeps_only_live_cache_entries(spark, tmp_path):
     assert len(set(sizes)) == 1, sizes
 
 
+def _count_round_trips(monkeypatch) -> list[int]:
+    """A one-element counter of the py4j method calls this thread sends,
+    counted by wrapping GatewayClient.send_command until the test's
+    monkeypatch undoes it. Other threads' calls and the memory-release
+    commands of proxies that Python collects meanwhile are not counted."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+    from py4j.protocol import CALL_COMMAND_NAME
+
+    calls = [0]
+    send = GatewayClient.send_command
+    thread = threading.get_ident()
+
+    def counting(self, command, *args, **kwargs):
+        if command.startswith(CALL_COMMAND_NAME) and threading.get_ident() == thread:
+            calls[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    return calls
+
+
+def test_warm_cached_probes_make_one_jvm_round_trip(spark, tmp_path, monkeypatch):
+    df = _dim(spark, tmp_path / "dim").cache()
+    try:
+        serving.point_query(df, "k", "alpha", {})
+        calls = _count_round_trips(monkeypatch)
+        got = [serving.point_query(df, "k", PROBES[i % len(PROBES)], {"v": 0}) for i in range(100)]
+        monkeypatch.undo()
+    finally:
+        df.unpersist()
+    assert calls[0] <= 100, calls
+    assert got[0] == {"k": "Alpha", "v": 1} and got[6] == {"v": 0, "k": "delta"}
+
+
+def _clear_cache(spark, df, path):
+    spark.catalog.clearCache()
+    return "k", "beta", {"k": "beta", "v": 2}, False
+
+
+def _other_key_col(spark, df, path):
+    return "v", "6", {"k": "Gamma", "v": 6}, True
+
+
+@pytest.mark.parametrize("change", [_clear_cache, _other_key_col], ids=["clearCache", "key_col"])
+def test_a_repeat_probe_after_a_change_takes_the_right_path(spark, tmp_path, change):
+    """A repeat probe of a frame is served from its memoized resolution
+    only while the frame's cache entry and key column are unchanged:
+    after the change the next probe answers from the new state, from
+    an index when the frame is still cached and by the Spark path when
+    it is not. unpersist and a write under the cached path have their
+    own tests: test_unpersisted_frame_takes_the_spark_path and
+    test_write_under_a_cached_frame_rebuilds_the_index."""
+    path = tmp_path / "dim"
+    df = _dim(spark, path).cache()
+    try:
+        for _ in range(2):  # the second probe is served from the memo
+            assert serving.point_query(df, "k", "beta", {"v": 0}) == {"k": "beta", "v": 2}
+        key_col, key, want, indexed = change(spark, df, path)
+        assert serving.point_query(df, key_col, key, {"v": 0}) == want
+        assert (serving._cached_index(df, key_col) is not None) == indexed
+        assert serving.point_query(df, key_col, key, {"v": 0}) == want
+    finally:
+        df.unpersist()
+
+
+def test_the_memo_does_not_keep_a_dropped_frame_alive(spark, tmp_path):
+    import gc
+    import weakref
+
+    df = _dim(spark, tmp_path / "dim").cache()
+    serving.point_query(df, "k", "beta", {})
+    assert df in serving._RESOLVED
+    df.unpersist()
+    ref = weakref.ref(df)
+    del df
+    gc.collect()
+    assert ref() is None
+
+
 def test_web_apps_import_gated(spark):
     """App factories must degrade to None (not raise) without the web
     frameworks installed; with them installed they must build."""

@@ -76,6 +76,33 @@ def test_fanout(spark, tmp_path):
     assert spark.read.parquet(aggp).count() == 3
 
 
+def test_fanout_over_a_rejects_read_caches_the_rows_once(spark, tmp_path, monkeypatch):
+    """write_fanout over read_csv_with_rejects' good rows reads the
+    read's parse cache: while it writes, one RDD is persisted for the
+    rows, not a second copy for ``good``."""
+    p = tmp_path / "in.csv"
+    p.write_text("id,host\n1,a\n2,b\n3,a\nnot_a_number,c\n")
+    good, rejects = io.read_csv_with_rejects(spark, str(p), "id BIGINT, host STRING")
+    agg = good.groupBy("host").count()
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before, added = persisted(), []
+    write = io.write_overwrite
+
+    def recording_write(df, path, fmt="parquet"):
+        write(df, path, fmt)
+        added.append(persisted() - before)
+
+    monkeypatch.setattr(io, "write_overwrite", recording_write)
+    io.write_fanout(good, str(tmp_path / "raw"), agg, str(tmp_path / "agg"))
+    assert [len(ids) for ids in added] == [1, 1], added
+    assert spark.read.parquet(str(tmp_path / "raw")).count() == 3
+    assert spark.read.parquet(str(tmp_path / "agg")).count() == 2
+    assert [r["raw"] for r in rejects.collect()] == ["not_a_number,c"]
+
+
 def test_load_tables_registers_views(spark, sf_dir):
     tables = io.load_tables(spark, sf_dir, names=("region", "nation"))
     assert set(tables) == {"region", "nation"}

@@ -130,3 +130,13 @@ def test_engine_session_codegen_cache_confs(spark):
     compile-cache behavior only, never results."""
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
     assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+
+
+def test_engine_session_turns_dataframe_debugging_off(spark):
+    """PySpark's call-site capture costs about 10 py4j round trips per
+    DataFrame or Column call and is read once per process, so the
+    engine session turns it off at build time."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

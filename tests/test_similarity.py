@@ -34,12 +34,6 @@ def test_brute_force_known_nearest(spark):
     assert out[0]["sim"] <= 1.0
 
 
-def test_cosine_self_is_one(spark):
-    df = spark.createDataFrame([Row(v=[3.0, 4.0])])
-    val = df.select(F.round(S.cosine(F.col("v"), F.col("v")), 6).alias("c")).collect()[0]["c"]
-    assert val == 1.0
-
-
 def test_embedding_neardup_threshold(spark):
     vecs = spark.createDataFrame(
         [

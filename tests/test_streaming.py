@@ -106,6 +106,20 @@ def test_incremental_pipeline_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == total  # no duplicate appends
 
 
+def test_incremental_pipeline_raises_rather_than_undercount(spark, tmp_path):
+    """Rows are summed over the query's recent progress; a run whose
+    progress fills that capped buffer may have lost updates, so the
+    call raises instead of returning a short count."""
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "2")  # keeps one update: a one-batch run fills it
+    try:
+        with pytest.raises(RuntimeError, match="numRecentProgressUpdates"):
+            S.incremental_pipeline(spark, SF_SMOKE, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_streaming_pivot_with_explicit_values(spark):
     """transpose_conditional is the streaming-legal pivot: Spark's own
     pivot() compiles to two aggregate levels, which the streaming
