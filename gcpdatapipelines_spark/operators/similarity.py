@@ -27,10 +27,18 @@ Four tiers, all pure DataFrame ops unless noted:
   int8 dgemm per cell, and srp_lsh_pairs bands sign-random-projection
   signatures.
 
-- PQ (product quantization): m-subspace k-means codebooks compress
-  each vector to m small ints; queries rank by ADC lookup sums without
+- PQ (product quantization): m-subspace codebooks compress each
+  vector to m small ints; queries rank by ADC lookup sums without
   ever touching the original vectors — the ~m-bytes-per-row scan that
-  makes billion-scale ANN affordable. Recall-tested vs exact L2.
+  makes billion-scale ANN affordable. Recall-tested vs exact L2. One
+  codebook per index: pq_build_sample (centroid j of every subspace is
+  the j-th lowest-id vector's slice) for plain PQ, opq_train_sample
+  (rotation + k-means codebooks trained in numpy on a bounded sample)
+  for OPQ. Spark-ML-trained codebooks and a fully distributed OPQ
+  trainer measured no better recall@10 vs exact L2 (trained vs sample,
+  10 queries, sf0.01 and sf0.1: 0.11-0.28 vs 0.16-0.29 for PQ,
+  0.12-0.18 vs 0.18-0.19 for OPQ) at 4-18x the build time, so there
+  are none.
 """
 
 from __future__ import annotations
@@ -495,55 +503,6 @@ def quantize_int8(
     )
 
 
-def pq_build(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    ksub: int = 16,
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Product-quantization codebooks: the D-dim vector space is split
-    into ``m`` contiguous subspaces of D/m dims; each subspace gets its
-    own ``ksub``-centroid k-means codebook (Jégou et al.'s PQ — the
-    standard 8-64x embedding compression for billion-scale ANN).
-
-    Returns ONE small frame (sub_id, cent_id, cent_vec) — m*ksub rows,
-    broadcastable everywhere downstream. Training runs m Spark ML
-    KMeans fits over sliced subvectors; the corpus is scanned per fit
-    but never collected."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    dim = len(vectors.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    rows = []
-    for sub in range(m):
-        feats = vectors.select(
-            array_to_vector(
-                F.transform(
-                    F.slice(F.col(vec_col), sub * dsub + 1, dsub),
-                    lambda x: x.cast("double"),
-                )
-            ).alias("__features")
-        )
-        model = KMeans(
-            k=ksub,
-            seed=seed + sub,
-            maxIter=max_iter,
-            featuresCol="__features",
-            predictionCol="__c",
-        ).fit(feats)
-        for cid, cent in enumerate(model.clusterCenters()):
-            rows.append((sub, cid, [float(x) for x in cent]))
-    return vectors.sparkSession.createDataFrame(
-        rows, "sub_id INT, cent_id INT, cent_vec ARRAY<DOUBLE>"
-    )
-
-
 def _sq_l2(a, b):
     """Squared L2 distance of two array columns (float64)."""
     return F.aggregate(
@@ -716,31 +675,6 @@ def pq_topk(
     )
 
 
-def pq_decode(
-    codes: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    out_col: str = "recon",
-) -> DataFrame:
-    """Reconstruct each PQ-coded vector: per subspace, the centroid the
-    code points at, concatenated in subspace order. (id, recon
-    ARRAY<DOUBLE>). Inverse of pq_encode up to quantization error —
-    used by OPQ training and by anyone inspecting what the index
-    actually stores. One broadcast join + one per-id fold."""
-    rows = codes.select(id_col, F.posexplode(F.col("code")).alias("sub_id", "cent_id"))
-    joined = rows.join(F.broadcast(codebooks), ["sub_id", "cent_id"])
-    return joined.groupBy(id_col).agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("sub_id"), F.col("cent_vec")))
-                ),
-                lambda s: s.getField("cent_vec"),
-            )
-        ).alias(out_col)
-    )
-
-
 def rotate_vectors(
     vectors: DataFrame,
     rotation,
@@ -770,93 +704,6 @@ def rotate_vectors(
     return src.mapInPandas(project, schema=out_schema)
 
 
-def _cross_correlation(pairs: DataFrame, a_col: str, b_col: str, dim: int):
-    """C = Σ_i a_i b_iᵀ (D x D) over a joined (a, b) frame:
-    per-partition numpy partial sums via
-    mapInPandas, then the ≤ num-partitions partial matrices (D*D
-    doubles each — bounded index metadata, NOTES.md) are summed on the
-    driver. The data itself is never collected."""
-    import numpy as np
-
-    def part(batches):
-        import pandas as pd
-
-        acc = np.zeros((dim, dim))
-        seen = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[a_col]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[b_col]])
-            acc += A.T @ B
-            seen = True
-        if seen:
-            yield pd.DataFrame({"c": [acc.ravel().tolist()]})
-
-    parts = pairs.select(a_col, b_col).mapInPandas(part, schema="c ARRAY<DOUBLE>")
-    C = np.zeros((dim, dim))
-    for r in parts.collect():
-        C += np.asarray(r["c"], dtype=np.float64).reshape(dim, dim)
-    return C
-
-
-def opq_train(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    seed: int = 42,
-    kmeans_iter: int = 10,
-):
-    """Optimized Product Quantization (Ge et al., CVPR 2013, OPQ_NP):
-    learn an orthogonal rotation R that aligns the data with PQ's
-    contiguous-subspace split before quantizing — correlated or
-    unbalanced dimensions are PQ's worst case, and a rotation is free
-    at query time (rotate the query once).
-
-    Alternating minimization: (1) fit PQ codebooks on X R, (2) encode +
-    decode to get the reconstruction X̂, (3) solve the orthogonal
-    Procrustes problem min_R ||X R - X̂||_F via SVD of Xᵀ X̂ (a D x D
-    driver-side solve — the distributed work is one cross-correlation
-    scan per iteration). Returns (R, codebooks) where codebooks are fit
-    on the final rotation; encode with
-    ``pq_encode(rotate_vectors(X, R), codebooks)`` and query with
-    ``pq_topk`` on queries rotated the same way.
-
-    Training cost is iters x (m KMeans fits + an encode/decode pass) —
-    a build step, too heavy for the bench catalog (like pq_build);
-    recall/MSE-tested in tests."""
-    import numpy as np
-
-    dim = len(vectors.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    R = np.eye(dim)
-    src = vectors.select(F.col(id_col).cast("long").alias(id_col), vec_col)
-    codebooks = None
-    for _ in range(max(1, iters)):
-        rot = rotate_vectors(src, R, id_col, vec_col)
-        codebooks = pq_build(
-            rot, id_col, vec_col, m=m, ksub=ksub, seed=seed, max_iter=kmeans_iter
-        )
-        recon = pq_decode(
-            pq_encode(rot, codebooks, id_col, vec_col), codebooks, id_col
-        )
-        pairs = src.join(recon, id_col)
-        C = _cross_correlation(pairs, vec_col, "recon", dim)
-        U, _, Vt = np.linalg.svd(C)
-        R = U @ Vt
-    # codebooks were fit on the PREVIOUS R; refit once on the final one
-    # so the returned pair is self-consistent
-    rot = rotate_vectors(src, R, id_col, vec_col)
-    codebooks = pq_build(
-        rot, id_col, vec_col, m=m, ksub=ksub, seed=seed, max_iter=kmeans_iter
-    )
-    return R, codebooks
-
-
 def opq_train_sample(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -868,18 +715,28 @@ def opq_train_sample(
     seed: int = 42,
     kmeans_iter: int = 8,
 ):
-    """Sample-trained OPQ: run the Ge et al. alternating minimization
-    entirely in numpy on a bounded deterministic sample (the
-    ``sample_n`` lowest-id vectors), returning (R, codebooks) with the
-    same contract as :func:`opq_train`.
+    """Optimized Product Quantization (Ge et al., CVPR 2013, OPQ_NP):
+    learn an orthogonal rotation R that aligns the data with PQ's
+    contiguous-subspace split before quantizing — correlated or
+    unbalanced dimensions are PQ's worst case, and a rotation is free
+    at query time (rotate the query once).
+
+    Alternating minimization, entirely in numpy on a bounded
+    deterministic sample (the ``sample_n`` lowest-id vectors): (1) fit
+    per-subspace k-means codebooks on X R, (2) quantize to get the
+    reconstruction X̂, (3) solve the orthogonal Procrustes problem
+    min_R ||X R - X̂||_F via SVD of Xᵀ X̂. Returns (R, codebooks), the
+    codebooks fit on the final rotation as (sub_id, cent_id, cent_vec)
+    rows; encode with :func:`pq_encode_rotated` (or
+    ``pq_encode(rotate_vectors(X, R), codebooks)``) and query with
+    :func:`pq_topk` on queries rotated the same way.
 
     This is the 100 TB division of labor: codebook/rotation TRAINING is
     sample-scale work that belongs on the driver (or a GPU box) — the
     sample is bounded index metadata, like IVF centroids — while the
-    corpus-scale work (rotate, encode, ADC scan) stays distributed.
-    :func:`opq_train` is the fully-distributed variant for when even
-    the training set must not be collected; this one makes OPQ cheap
-    enough to sit in the query catalog."""
+    corpus-scale work (rotate, encode, ADC scan) stays distributed. A
+    fully distributed trainer (Spark ML k-means over the whole corpus)
+    measured no better recall@10, so this is the one OPQ trainer."""
     import numpy as np
 
     rows = (
@@ -1073,60 +930,52 @@ def srp_signatures(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    nbits: int = 32,
-    bands: int = 8,
-    seed: int = 42,
+    nbits: int = 64,
+    bands: int = 4,
     dim: int | None = None,
-    mode: str = "gaussian",
 ) -> DataFrame:
     """Signed-random-projection (hyperplane) LSH signatures for cosine
-    similarity (Charikar, STOC 2002): bit i = [dot(v, h_i) >= 0] for
-    nbits seeded-Gaussian hyperplanes; P(bits agree) = 1 - angle/pi.
-    Bits pack into ``bands`` integer band keys (nbits/bands bits each)
-    for banded candidate generation — the embedding-space sibling of
-    MinHash banding on shingles.
+    similarity (Charikar, STOC 2002) over the coordinate-axis
+    hyperplanes: bit i = [v_i >= 0] for the first ``nbits``
+    coordinates. For embeddings with no preferred orientation the
+    collision probability is the usual P(bits agree) = 1 - angle/pi.
+    Bits pack big-endian into ``bands`` integer band keys (nbits/bands
+    bits each) for banded candidate generation — the embedding-space
+    sibling of MinHash banding on shingles.
 
-    The projection is a dense (batch x dim) @ (dim x nbits) matmul —
-    exactly the shape vectorized BLAS exists for — so it runs as an
-    Arrow-batched mapInPandas: one numpy matmul + sign + bit-pack per
-    batch, the seeded hyperplane matrix shipped in the task closure
-    (nbits x dim doubles — index metadata, not data). The scalar-SQL
-    alternative (nbits x dim literal multiply-adds unrolled into one
-    selectExpr) produces a ~60 KB expression whose analysis/codegen
-    costs tens of driver seconds at dim=64 — measured, not guessed.
-    Narrow one-pass op: no shuffle, batch-local, scales with the scan.
-    Output: (id, band_0..band_{bands-1}).
-
-    ``mode="axes"`` swaps the seeded-Gaussian hyperplanes for the
-    first ``nbits`` coordinate axes (bit i = [v_i >= 0], requires
-    dim >= nbits) — the deterministic engine-parity family: the exact
+    The axes family is deterministic and engine-portable: the exact
     signature, banding, and candidate set restate in plain SQL (a sign
-    test per coordinate), the same sign-disagreement playbook as
-    sim_binary_hamming. Recall analysis is unchanged (axes are fixed
-    hyperplanes; for embeddings with no preferred orientation the
-    collision probability is the same 1 - angle/pi). Production keeps
-    "gaussian"."""
+    test per coordinate, the same sign-disagreement playbook as
+    sim_binary_hamming), which is how sim_srp_lsh hash-checks against
+    DuckDB. Seeded Gaussian hyperplanes measured the same planted-twin
+    recall at 64 bits / 4 bands (both on the 1 - (1 - p^16)^4 curve)
+    while emitting about twice the candidates, so there is no Gaussian
+    family.
+
+    Precondition, and the trade-off the family makes: it needs
+    ``dim >= nbits`` (ValueError otherwise) and sign-balanced
+    coordinates. Each bit reads one coordinate, so on a sign-skewed
+    corpus (e.g. all-nonnegative features) every vector shares one
+    signature, every pair becomes a candidate, and only ``max_bucket``
+    (:func:`srp_candidate_pairs`) bounds the cost; center such a
+    corpus first. The fixture embeddings are sign-balanced: 49.3-50.0%
+    of coordinates are >= 0 at every SF.
+
+    Runs as an Arrow-batched mapInPandas (a sign test and bit-pack per
+    batch): narrow, one pass, no shuffle, batch-local, scales with the
+    scan. Output: (id, band_0..band_{bands-1})."""
     import numpy as np
 
     if nbits % bands:
         raise ValueError(f"nbits={nbits} must be divisible by bands={bands}")
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
-    if mode == "axes":
-        if dim < nbits:
-            raise ValueError(f"mode='axes' needs dim >= nbits, got {dim} < {nbits}")
-        H = np.eye(dim, nbits)
-    elif mode == "gaussian":
-        rng = np.random.default_rng(seed)
-        H = rng.standard_normal((dim, nbits))
-    else:
-        raise ValueError(f"unknown srp mode: {mode!r}")
+    if dim < nbits:
+        raise ValueError(f"the axes family needs dim >= nbits, got {dim} < {nbits}")
     r = nbits // bands
     weights = (1 << np.arange(r - 1, -1, -1)).astype(np.int64)
     src = vectors.select(F.col(id_col).cast("long").alias(id_col), vec_col)
     out_schema = f"{id_col} BIGINT, " + ", ".join(f"band_{b} INT" for b in range(bands))
-
-    axes = mode == "axes"
 
     def project(batches):
         import pandas as pd
@@ -1135,19 +984,15 @@ def srp_signatures(
             if pdf.empty:
                 continue
             V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            # axes mode tests each coordinate's sign DIRECTLY: dot with
-            # e_i would let one non-finite coordinate poison every bit
+            # Each coordinate's sign is tested DIRECTLY: a dot with e_i
+            # would let one non-finite coordinate poison every bit
             # (x * 0.0 = NaN), diverging from the oracle's per-coordinate
-            # test — and the matmul is pointless for an identity H.
-            # NaN coordinate: numpy NaN >= 0 is False, but BOTH SQL
+            # test. NaN coordinate: numpy NaN >= 0 is False, but BOTH SQL
             # engines order NaN above every double (DuckDB 'NaN' >= 0
             # and Spark double('NaN') >= 0 are TRUE — verified), so
             # mirror the NaN-greatest total order explicitly: bit = 1.
-            if axes:
-                sub = V[:, :nbits]
-                bits = np.logical_or(sub >= 0.0, np.isnan(sub))
-            else:
-                bits = (V @ H) >= 0.0
+            sub = V[:, :nbits]
+            bits = np.logical_or(sub >= 0.0, np.isnan(sub))
             packed = bits.reshape(len(pdf), bands, r).astype(np.int64) @ weights
             out = {id_col: pdf[id_col].to_numpy()}
             for b in range(bands):
@@ -1161,12 +1006,10 @@ def srp_candidate_pairs(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    nbits: int = 32,
-    bands: int = 8,
-    seed: int = 42,
+    nbits: int = 64,
+    bands: int = 4,
     dim: int | None = None,
     max_bucket: int | None = 1000,
-    mode: str = "gaussian",
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """The candidate step of SRP-LSH, alone: distinct (id_1 < id_2)
@@ -1175,24 +1018,19 @@ def srp_candidate_pairs(
     :func:`srp_lsh_pairs` scores exactly it (never more).
 
     ``signatures``: a precomputed (persisted) srp_signatures frame for
-    the same (vectors, nbits, bands, seed, mode) — callers with a
-    corpus-scoped cache skip rebuilding the signature table per call."""
+    the same (vectors, nbits, bands) — callers with a corpus-scoped
+    cache skip rebuilding the signature table per call."""
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
-    # persisted: the (id, bands ints) frame is tiny, but WITHOUT the
-    # materialization boundary Catalyst inlines the nbits x dim literal
-    # dot products into every stack branch and BOTH self-join sides —
-    # the optimizer then chews on ~bands x 2 copies of a 2048-term
-    # expression (tens of seconds of pure driver/codegen time at
-    # dim=64; the same shared-expression trap as NOTES.md's array
-    # lambdas). At 100 TB this is the materialize-the-signature-table
-    # step a real pipeline runs anyway.
+    # persisted: the (id, bands ints) frame is tiny, and the
+    # materialization boundary runs the Python signature pass once
+    # rather than under both self-join sides. At 100 TB this is the
+    # materialize-the-signature-table step a real pipeline runs anyway.
     sig = (
         signatures
         if signatures is not None
         else srp_signatures(
-            vectors, id_col, vec_col, nbits=nbits, bands=bands, seed=seed,
-            dim=dim, mode=mode,
+            vectors, id_col, vec_col, nbits=nbits, bands=bands, dim=dim
         ).persist()
     )
     stack = ", ".join(f"{b}, band_{b}" for b in range(bands))
@@ -1221,57 +1059,51 @@ def srp_lsh_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    nbits: int = 32,
-    bands: int = 8,
-    seed: int = 42,
+    nbits: int = 64,
+    bands: int = 4,
     dim: int | None = None,
     max_bucket: int | None = 1000,
-    mode: str = "gaussian",
-    floor_sim: bool = False,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs via SRP-LSH banding + exact verification: docs
     sharing ANY band key become candidates; candidates (and ONLY
-    candidates) are scored with the codegen-unrolled exact cosine and
-    kept at sim >= threshold. Precision is exact by construction;
-    recall is the banding amplification 1 - (1 - p^r)^bands with
-    p = 1 - acos(threshold)/pi (at the defaults and t=0.95: ~0.9998),
-    measured against the exact scan in tests.
+    candidates) are scored with the codegen-unrolled cosine, truncated
+    (floored) to 6 dp, and kept at sim >= threshold. Precision is exact
+    by construction; recall is the banding amplification
+    1 - (1 - p^r)^bands with p = 1 - acos(cos)/pi and r = nbits/bands
+    (at the defaults: ~0.55 at cos 0.95, ~0.93 at cos 0.99), measured
+    against the exact scan in tests — at this selectivity it is a
+    near-duplicate detector.
 
     Scale shape: band self-joins are equi-joins hash-partitioned on
     (band index, band key) — the all-pairs space is never declared.
-    ``max_bucket`` drops degenerate band buckets (e.g. the all-zeros
-    key near-zero vectors share) whose quadratic blocks would dominate
-    cost for no selectivity, the same guardrail as ``max_df`` in the
-    shingle joins; None disables. Candidate pairs are distinct-ed
-    BEFORE verification so each pair is scored once, and the verify
-    join runs on the widened scalar columns (same bit-identical scorer
-    as the exact scan).
+    ``max_bucket`` drops degenerate band buckets (e.g. the one key a
+    sign-skewed corpus shares, see :func:`srp_signatures`) whose
+    quadratic blocks would dominate cost for no selectivity, the same
+    guardrail as ``max_df`` in the shingle joins; None disables.
+    Candidate pairs are distinct-ed BEFORE verification so each pair
+    is scored once, and the verify join runs on the widened scalar
+    columns.
 
-    ``mode="axes"`` selects the deterministic coordinate-axis
-    hyperplane family (see :func:`srp_signatures`) and ``floor_sim``
-    the 6-dp floor-truncated engine-portable scorer — together they
-    make the ENTIRE pipeline (signatures, banding, bucket cap,
-    candidate set, verify) restatable in plain SQL, which is how the
-    catalog hash-checks this operator against DuckDB.
+    The coordinate-axis signatures and the floor-truncated scorer make
+    the ENTIRE pipeline (signatures, banding, bucket cap, candidate
+    set, verify) restatable in plain SQL, which is how the catalog
+    hash-checks this operator against DuckDB. The truncation can sit
+    1e-6 below :func:`embedding_neardup_pairs`, which rounds.
     """
     _check_constraint_propagation(vectors.sparkSession)
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
     cand = srp_candidate_pairs(
-        vectors, id_col, vec_col, nbits=nbits, bands=bands, seed=seed,
-        dim=dim, max_bucket=max_bucket, mode=mode, signatures=signatures,
+        vectors, id_col, vec_col, nbits=nbits, bands=bands, dim=dim,
+        max_bucket=max_bucket, signatures=signatures,
     )
     wide = _widened(vectors, id_col, vec_col, dim)
     sa, sb = _wide_sides(wide, id_col, dim)
-    sim_sql = (
-        _unrolled_pair_sim_floor_sql(dim) if floor_sim
-        else _unrolled_pair_sim_sql(dim)
-    )
     return (
         cand.join(sa, "id_1")
         .join(sb, "id_2")
-        .selectExpr("id_1", "id_2", sim_sql)
+        .selectExpr("id_1", "id_2", _unrolled_pair_sim_floor_sql(dim))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -1290,7 +1122,7 @@ def label_centroids_long(
     map-side combine, never the corpus. Sums run in decimal(18,9)
     (exact for float32 inputs after the deterministic cast), so the
     centroid is bit-identical across engines; one double division at
-    the end. Repack to arrays with :func:`pack_centroids`."""
+    the end."""
     ex = vectors.select(label_col, F.posexplode(F.col(vec_col)).alias("__p0", "__x"))
     return (
         ex.groupBy(label_col, (F.col("__p0") + 1).alias("pos"))
@@ -1301,19 +1133,6 @@ def label_centroids_long(
                 ndigits,
             ).alias("mean_val")
         )
-    )
-
-
-def pack_centroids(
-    long_df: DataFrame, label_col: str = "label"
-) -> DataFrame:
-    """(label, pos, mean_val) rows -> (label, centroid ARRAY<DOUBLE>)
-    with positions restored in order (sort inside the array — stable
-    under any partitioning)."""
-    packed = F.struct(F.col("pos"), F.col("mean_val").alias("__v"))
-    return long_df.groupBy(label_col).agg(
-        F.transform(F.array_sort(F.collect_list(packed)), lambda s: s.getField("__v"))
-        .alias("centroid")
     )
 
 
@@ -1349,14 +1168,17 @@ def pq_build_sample(
     ksub: int = 16,
     dim: int | None = None,
 ) -> DataFrame:
-    """Deterministic sample codebooks: centroid j of every subspace is
-    the j-th lowest-id vector's subvector (the random-sample quantizer
-    baseline; :func:`pq_build` is the k-means-trained upgrade with the
-    identical (sub_id, cent_id, cent_vec) contract). Zero training
-    cost and engine-reproducible, which makes the FULL encode + ADC
-    pipeline oracle-checkable — the same lowest-id seeding as the IVF
-    cells (:func:`_seeded_cells`). ``dim``: pass when known to skip the metadata
-    job (r11)."""
+    """The PQ codebook, as (sub_id, cent_id, cent_vec) rows: the D-dim
+    space splits into ``m`` contiguous subspaces of D/m dims, and
+    centroid j of every subspace is the j-th lowest-id vector's
+    subvector (the random-sample quantizer). Zero training cost and
+    engine-reproducible, which makes the FULL encode + ADC pipeline
+    oracle-checkable — the same lowest-id seeding as the IVF cells
+    (:func:`_seeded_cells`). Spark-ML k-means codebooks measured no
+    better recall@10, so there is no trained plain-PQ tier; the
+    trained codebooks live with the OPQ rotation
+    (:func:`opq_train_sample`). ``dim``: pass when known to skip the
+    metadata job (r11)."""
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
     if dim % m != 0:

@@ -202,14 +202,13 @@ def _winnowing_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_session_prep
 def _srp_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRP band signatures of the embeddings corpus: 64 bits in 4
-    bands, axes mode (the catalog's SRP family). The signature pass
-    inlines nbits x dim sign tests."""
+    """SRP band signatures of the embeddings corpus: 64 coordinate-axis
+    sign bits in 4 bands, the shape sim_srp_lsh's oracle restates."""
     from .operators.similarity import srp_signatures
 
     return srp_signatures(
         _t(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        nbits=64, bands=4, mode="axes",
+        nbits=64, bands=4,
     )
 
 
@@ -2074,13 +2073,14 @@ def sim_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate detector, not a 0.4-similarity scan (the exact scan
     family covers that).
 
-    Upgraded from rows-only (r8): the catalog runs the deterministic
+    Upgraded from rows-only (r8): srp_lsh_pairs runs the deterministic
     coordinate-axis hyperplane family (bit i = [v_i >= 0] — the
     sim_binary_hamming sign-disagreement playbook) with the 6-dp
     floor-truncated scorer, so signatures, banding, bucket cap,
     candidate set, and verify ALL hash-check against the DuckDB twin.
-    Production keeps the seeded-Gaussian family (mode="gaussian",
-    recall pinned in tests)."""
+    It is the only SRP family: seeded Gaussian hyperplanes measured
+    the same planted-twin recall (0.29-0.93 for cos 0.90-0.99 at sf0.1,
+    both on the 1 - (1 - p^16)^4 curve) with twice the candidates."""
     from .operators.similarity import srp_lsh_pairs
 
     return srp_lsh_pairs(
@@ -2088,8 +2088,6 @@ def sim_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.4,
         nbits=64,
         bands=4,
-        mode="axes",
-        floor_sim=True,
         signatures=_srp_sig(spark, sf_dir),
     )
 
@@ -5350,9 +5348,10 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-10 with the deterministic SAMPLE
     codebook (m=4 subspaces, ksub=16): the full encode + asymmetric-
     distance pipeline — LUT build, m-byte-per-row corpus scan, per-
-    query rank — proven oracle-green end to end. The k-means-trained
-    codebook (pq_build / opq_train) swaps in with the identical
-    contract; its recall is pinned in tests/test_similarity.py. Ranks
+    query rank — proven oracle-green end to end. It is the one plain-PQ
+    codebook: Spark-ML k-means codebooks measured no better recall@10,
+    and the trained codebooks live with the OPQ rotation
+    (sim_opq_topk); ADC recall is pinned in tests/test_similarity.py. Ranks
     order by ROUNDED distance + id (NOTES.md rank rule), and every
     distance is a fixed-order fold so engines agree bitwise.
 

@@ -125,7 +125,7 @@ def test_codegen_equals_exact_clustered_high_threshold(spark):
 
 def test_pq_codebook_and_code_shapes(spark):
     emb = read_table(spark, SF_SMOKE, "embeddings")
-    cb = S.pq_build(emb, m=8, ksub=16, max_iter=5)
+    cb = S.pq_build_sample(emb, m=8, ksub=16)
     assert cb.count() == 8 * 16
     codes = S.pq_encode(emb, cb)
     row = codes.first()
@@ -138,13 +138,14 @@ def test_pq_identical_vectors_share_codes(spark):
     from pyspark.sql import Row
 
     base = [float(i % 7) / 7 for i in range(16)]
+    # the two lowest ids seed the sample codebook with distinct centroids
     vecs = spark.createDataFrame(
-        [Row(vec_id=0, embedding=base), Row(vec_id=1, embedding=base),
-         Row(vec_id=2, embedding=[x + 3.0 for x in base])]
+        [Row(vec_id=0, embedding=base), Row(vec_id=1, embedding=[x + 3.0 for x in base]),
+         Row(vec_id=2, embedding=base)]
     )
-    cb = S.pq_build(vecs, m=4, ksub=2, max_iter=5)
+    cb = S.pq_build_sample(vecs, m=4, ksub=2)
     codes = {r["vec_id"]: r["code"] for r in S.pq_encode(vecs, cb).collect()}
-    assert codes[0] == codes[1]
+    assert codes[0] == codes[2] != codes[1]
 
 
 def test_pq_encode_and_topk_reject_inconsistent_metadata(spark):
@@ -221,7 +222,7 @@ def test_pq_topk_recall_vs_exact_l2(spark):
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    cb = S.pq_build(emb, m=8, ksub=16, max_iter=10)
+    cb = S.pq_build_sample(emb, m=8, ksub=16)
     codes = S.pq_encode(emb, cb)
     approx = {
         (r["q_id"], r["vec_id"]) for r in S.pq_topk(codes, cb, qs, k=10).collect()
@@ -243,17 +244,18 @@ def test_pq_topk_recall_vs_exact_l2(spark):
 
 
 def test_srp_signatures_shape_and_determinism(spark):
-    vecs = _clustered_vectors(spark)
-    s1 = S.srp_signatures(vecs, nbits=16, bands=4, seed=7)
+    vecs, n = _planted_vectors(spark)  # dim 16, sign-balanced
+    s1 = S.srp_signatures(vecs, nbits=16, bands=4)
     assert s1.columns == ["vec_id", "band_0", "band_1", "band_2", "band_3"]
     rows = {r["vec_id"]: tuple(r)[1:] for r in s1.collect()}
     rows2 = {
         r["vec_id"]: tuple(r)[1:]
-        for r in S.srp_signatures(vecs, nbits=16, bands=4, seed=7).collect()
+        for r in S.srp_signatures(vecs.repartition(3), nbits=16, bands=4).collect()
     }
-    assert rows == rows2  # seeded hyperplanes -> reproducible plans
-    # 4 bits per band
+    assert rows == rows2 and len(rows) == n  # a pure function of each vector
+    # 4 bits per band, and the keys spread over more than one bucket
     assert all(0 <= b <= 15 for sig in rows.values() for b in sig)
+    assert len({sig[0] for sig in rows.values()}) > 1
 
 
 def test_srp_rejects_uneven_bands(spark):
@@ -284,9 +286,7 @@ def test_srp_axes_finds_every_sign_preserving_neardup(spark):
         twins.append((r["vec_id"] + 100_000, twin.tolist()))
         want[(r["vec_id"], r["vec_id"] + 100_000)] = cos
     corpus = emb.unionByName(spark.createDataFrame(twins, emb.schema))
-    out = S.srp_lsh_pairs(
-        corpus, threshold=0.75, nbits=64, bands=4, mode="axes", floor_sim=True
-    )
+    out = S.srp_lsh_pairs(corpus, threshold=0.75, nbits=64, bands=4)
     got = {(r["id_1"], r["id_2"]): r["sim"] for r in out.collect()}
     missing = sorted(set(want) - set(got))
     assert not missing, f"sign-preserving twins not found: {missing}"
@@ -297,28 +297,39 @@ def test_srp_axes_finds_every_sign_preserving_neardup(spark):
 def test_srp_lsh_pairs_subset_and_recall(spark):
     """Verified SRP candidates must be a SUBSET of the exact pair set
     (precision 1.0 by construction) with near-total recall at a
-    near-dup threshold on clustered data."""
-    vecs = _clustered_vectors(spark)
+    near-dup threshold on planted clusters. The data is sign-balanced,
+    so banding (not one shared bucket) separates the clusters."""
+    vecs, n = _planted_vectors(spark, dim=64)
     exact = {
         (r["id_1"], r["id_2"]): r["sim"]
         for r in S.embedding_neardup_pairs(vecs, threshold=0.95).collect()
     }
     got = {
         (r["id_1"], r["id_2"]): r["sim"]
-        for r in S.srp_lsh_pairs(vecs, threshold=0.95, nbits=32, bands=8, seed=42).collect()
+        for r in S.srp_lsh_pairs(vecs, threshold=0.95).collect()
     }
     assert set(got) <= set(exact)
     assert len(got) >= 0.9 * len(exact) and exact
-    # verified sims are the SAME exact scorer -> values match exactly
-    assert all(exact[k] == v for k, v in got.items())
+    # banding pruned: the candidate set is far from all pairs
+    n_cand = S.srp_candidate_pairs(vecs).count()
+    assert n_cand < 0.05 * n * (n - 1) // 2, n_cand
+    # the same unrolled cosine, floored to 6 dp where the oracle rounds:
+    # at most one 6-dp step below it
+    assert all(0 <= exact[k] - v <= 1e-6 + 1e-12 for k, v in got.items())
 
 
 def test_srp_max_bucket_caps_degenerate_bands(spark):
-    """With a tiny cap every bucket (three 40-member clusters sharing
-    band keys) trips the guardrail and the candidate set empties —
-    the cap is a real cost ceiling, not advisory."""
+    """The axes family's degenerate case: every coordinate of the
+    clustered vectors is >= 0, so all 120 share one signature and
+    banding alone selects all pairs. With a tiny cap that bucket trips
+    the guardrail and the candidate set empties — the cap is a real
+    cost ceiling, not advisory."""
     vecs = _clustered_vectors(spark)
-    got = S.srp_lsh_pairs(vecs, threshold=0.95, max_bucket=2).count()
+    uncapped = S.srp_candidate_pairs(vecs, nbits=8, bands=2, max_bucket=None)
+    assert uncapped.count() == 120 * 119 // 2
+    got = S.srp_lsh_pairs(
+        vecs, threshold=0.95, nbits=8, bands=2, max_bucket=2
+    ).count()
     assert got == 0
 
 
@@ -340,23 +351,18 @@ def _correlated_vecs(spark, n=400, dim=16, seed=7):
 
 
 def _mse(spark, vecs, R, cb):
+    """Mean squared reconstruction error of the rotated vectors: each
+    code's centroids, read from the collected codebook rows and
+    concatenated in subspace order, against X R."""
     import numpy as np
 
+    cent = {(r.sub_id, r.cent_id): r.cent_vec for r in cb.collect()}
     rot = S.rotate_vectors(vecs, R)
-    recon = S.pq_decode(S.pq_encode(rot, cb), cb)
-    joined = rot.join(recon, "vec_id").select(
-        S._sq_l2(F.col("embedding"), F.col("recon")).alias("e")
-    )
-    return joined.agg(F.avg("e")).first()[0]
-
-
-def test_opq_rotation_is_orthogonal(spark):
-    import numpy as np
-
-    vecs = _correlated_vecs(spark)
-    R, cb = S.opq_train(vecs, m=4, ksub=8, iters=1, kmeans_iter=5)
-    assert np.allclose(R.T @ R, np.eye(16), atol=1e-8)
-    assert cb.count() == 4 * 8
+    errs = []
+    for r in S.pq_encode(rot, cb).join(rot, "vec_id").collect():
+        recon = np.concatenate([cent[(s, c)] for s, c in enumerate(r.code)])
+        errs.append(((np.asarray(r.embedding) - recon) ** 2).sum())
+    return float(np.mean(errs))
 
 
 def test_opq_beats_plain_pq_on_correlated_data(spark):
@@ -366,30 +372,15 @@ def test_opq_beats_plain_pq_on_correlated_data(spark):
     import numpy as np
 
     vecs = _correlated_vecs(spark)
-    cb_plain = S.pq_build(vecs, m=4, ksub=8, max_iter=10)
+    cb_plain = S.pq_build_sample(vecs, m=4, ksub=8)
     mse_plain = _mse(spark, vecs, np.eye(16), cb_plain)
-    R, cb_opq = S.opq_train(vecs, m=4, ksub=8, iters=2, kmeans_iter=10)
+    R, cb_opq = S.opq_train_sample(vecs, m=4, ksub=8, iters=2, kmeans_iter=10)
     mse_opq = _mse(spark, vecs, R, cb_opq)
     assert mse_opq < mse_plain * 0.9, (mse_opq, mse_plain)
-
-
-def test_pq_decode_roundtrip_exact_on_centroids(spark):
-    """A vector that IS a concatenation of centroids reconstructs
-    exactly: encode->decode is lossless at the codebook points."""
-    from pyspark.sql import Row
-
-    base = [float(i % 5) for i in range(16)]
-    far = [x + 10.0 for x in base]
-    vecs = spark.createDataFrame(
-        [Row(vec_id=0, embedding=base), Row(vec_id=1, embedding=far)]
-    )
-    cb = S.pq_build(vecs, m=4, ksub=2, max_iter=5)
-    recon = {
-        r["vec_id"]: r["recon"]
-        for r in S.pq_decode(S.pq_encode(vecs, cb), cb).collect()
-    }
-    assert [round(x, 9) for x in recon[0]] == base
-    assert [round(x, 9) for x in recon[1]] == far
+    # the codebooks are fit in the learned frame: the same codebooks
+    # without the rotation reconstruct worse (an identity R would tie)
+    mse_unrotated = _mse(spark, vecs, np.eye(16), cb_opq)
+    assert mse_opq < mse_unrotated * 0.9, (mse_opq, mse_unrotated)
 
 
 def test_label_centroids_match_numpy(spark):
@@ -402,21 +393,6 @@ def test_label_centroids_match_numpy(spark):
         want = np.mean(np.stack(grp["embedding"].map(np.asarray)), axis=0)
         g = got[got["label"] == label].sort_values("pos")["mean_val"].to_numpy()
         assert np.allclose(g, want, atol=2e-6), label
-
-
-def test_pack_centroids_roundtrip(spark):
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    long = S.label_centroids_long(emb, "label", "embedding")
-    packed = {r["label"]: r["centroid"] for r in S.pack_centroids(long).collect()}
-    dim = len(emb.select("embedding").first()[0])
-    assert all(len(v) == dim for v in packed.values())
-    # spot-check one label against the long form
-    some = sorted(packed)[0]
-    want = [
-        r["mean_val"]
-        for r in long.filter(F.col("label") == some).orderBy("pos").collect()
-    ]
-    assert packed[some] == want
 
 
 def test_norm_stats_bounds(spark):
@@ -466,10 +442,10 @@ def test_opq_end_to_end_retrieval_via_pq_topk(spark):
             tot += len(w)
         return hits / tot
 
-    cb_plain = S.pq_build(vecs, m=4, ksub=8, max_iter=10)
+    cb_plain = S.pq_build_sample(vecs, m=4, ksub=8)
     r_plain = recall(S.pq_encode(vecs, cb_plain), cb_plain, queries)
 
-    R, cb_opq = S.opq_train(vecs, m=4, ksub=8, iters=2, kmeans_iter=10)
+    R, cb_opq = S.opq_train_sample(vecs, m=4, ksub=8, iters=2, kmeans_iter=10)
     rot_corpus = S.rotate_vectors(vecs, R)
     rot_queries = S.rotate_vectors(queries, R, id_col="q_id", vec_col="q_vec")
     r_opq = recall(S.pq_encode(rot_corpus, cb_opq), cb_opq, rot_queries)
@@ -689,10 +665,7 @@ def test_srp_64_4_planted_duplicates(spark):
     dup = emb.filter(F.col("vec_id") == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
-    out = srp_lsh_pairs(
-        emb.unionByName(dup), threshold=0.4, nbits=64, bands=4,
-        mode="axes", floor_sim=True,
-    )
+    out = srp_lsh_pairs(emb.unionByName(dup), threshold=0.4, nbits=64, bands=4)
     rows = {(r.id_1, r.id_2): r.sim for r in out.collect()}
     assert rows.get((0, 100000)) == pytest.approx(1.0)
 
@@ -708,7 +681,7 @@ def test_srp_axes_signature_bits(spark):
     v = [1.0, -2.0, 3.0, -4.0, 0.0, -1.0, 1.0, 1.0]
     # bits: 1,0,1,0 | 1,0,1,1  ->  band_0 = 0b1010 = 10, band_1 = 0b1011 = 11
     df = spark.createDataFrame([(1, v)], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    row = srp_signatures(df, nbits=8, bands=2, mode="axes").collect()[0]
+    row = srp_signatures(df, nbits=8, bands=2).collect()[0]
     assert (row["band_0"], row["band_1"]) == (10, 11)
 
 
@@ -717,7 +690,7 @@ def test_srp_axes_requires_enough_dims(spark):
         [(1, [1.0, 2.0])], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     )
     with pytest.raises(ValueError, match="axes"):
-        srp_signatures(df, nbits=8, bands=2, mode="axes").collect()
+        srp_signatures(df, nbits=8, bands=2).collect()
 
 
 def test_srp_axes_pairs_subset_of_exact(spark, embeddings_small=None):
@@ -730,9 +703,7 @@ def test_srp_axes_pairs_subset_of_exact(spark, embeddings_small=None):
     vecs[5] = vecs[0]  # planted duplicate
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    out = srp_lsh_pairs(
-        df, threshold=0.95, nbits=8, bands=2, mode="axes", floor_sim=True
-    ).collect()
+    out = srp_lsh_pairs(df, threshold=0.95, nbits=8, bands=2).collect()
     pairs = {(r.id_1, r.id_2) for r in out}
     assert (0, 5) in pairs
     for r in out:
@@ -817,7 +788,7 @@ def test_srp_axes_nan_bit_matches_sql_sign_test(spark):
 
     v = [1.0, float("nan"), -3.0, 4.0, -1.0, float("nan"), 1.0, -1.0]
     df = spark.createDataFrame([(1, v)], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    row = srp_signatures(df, nbits=8, bands=2, mode="axes").collect()[0]
+    row = srp_signatures(df, nbits=8, bands=2).collect()[0]
     # bits (NaN -> 1): 1,1,0,1 | 0,1,1,0  ->  band_0 = 0b1101, band_1 = 0b0110
     assert (row["band_0"], row["band_1"]) == (0b1101, 0b0110)
     # and that equals Spark SQL's own sign test on the same data
@@ -1002,15 +973,14 @@ def test_srp_candidates_linear_on_planted_dups(spark):
 
     Key width matters for the linear-growth property: r bits per band
     gives 2^r buckets, so r must scale with log2(n) to hold bucket
-    occupancy (hence candidates-per-row) constant — this test runs the
-    production shape (8-bit band keys = 256 buckets/band on dim-64
-    embeddings); the catalog's oracle entry keeps the narrower 4-bit
-    keys that DuckDB restates."""
+    occupancy (hence candidates-per-row) constant — this test runs
+    8-bit band keys (256 buckets/band) on dim-64 embeddings; the
+    catalog's entry runs the default 16-bit keys (64 bits, 4 bands)."""
     from gcpdatapipelines_spark.operators.similarity import srp_candidate_pairs
 
     vecs, n = _planted_vectors(spark, dim=64)  # axes mode needs dim >= nbits
     n_cand = srp_candidate_pairs(
-        vecs, "vec_id", "embedding", nbits=64, bands=8, mode="axes", dim=64
+        vecs, "vec_id", "embedding", nbits=64, bands=8, dim=64
     ).count()
     n_planted_pairs = 20 * (4 * 3 // 2)
     all_pairs = n * (n - 1) // 2
@@ -1061,10 +1031,9 @@ def test_srp_signatures_injection_parity(spark):
 
     vecs, _ = _planted_vectors(spark, n_clusters=8, dup_per_cluster=3,
                                n_unique=20, dim=32)
-    kw = dict(threshold=0.4, nbits=32, bands=8, mode="axes", floor_sim=True)
+    kw = dict(threshold=0.4, nbits=32, bands=8)
     base = srp_lsh_pairs(vecs, **kw)
-    sig = srp_signatures(vecs, "vec_id", "embedding", nbits=32, bands=8,
-                         mode="axes").persist()
+    sig = srp_signatures(vecs, "vec_id", "embedding", nbits=32, bands=8).persist()
     inj = srp_lsh_pairs(vecs, **kw, signatures=sig)
     b = sorted(map(tuple, base.collect()))
     i = sorted(map(tuple, inj.collect()))

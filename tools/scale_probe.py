@@ -54,15 +54,12 @@ def cand_minhash(spark, sf_dir):
 
 
 def cand_srp(spark, sf_dir):
-    """SRP band-key collision pairs (pre-verify), axes mode — the
-    exact frame sim_srp_lsh scores."""
+    """SRP band-key collision pairs (pre-verify) at the default 64 bits
+    in 4 bands — the exact frame sim_srp_lsh scores."""
     from gcpdatapipelines_spark.operators.similarity import srp_candidate_pairs
 
     emb = read_table(spark, sf_dir, "embeddings")
-    c = srp_candidate_pairs(
-        emb, "vec_id", "embedding", nbits=64, bands=4, mode="axes",
-        max_bucket=1000,
-    ).count()
+    c = srp_candidate_pairs(emb, "vec_id", "embedding", max_bucket=1000).count()
     return c, _emb_n(spark, sf_dir)
 
 
